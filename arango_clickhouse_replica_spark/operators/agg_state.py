@@ -36,14 +36,12 @@ part lifecycle.
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-from pathlib import Path
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .part_store import PartStore
 
 _KMV_M = 1024           # stochastic-averaging buckets (uniqState width)
 _KMV_TWO52 = 1 << 52    # hash domain: 13 md5 hex chars = 52 bits
@@ -458,102 +456,21 @@ class AggregateStateStore:
         uniq_col: str,
     ) -> None:
         self.spark = spark
-        self.path = Path(path)
         self.keys = list(keys)
         self.value_milli_col = value_milli_col
         self.uniq_col = uniq_col
-        self.path.mkdir(parents=True, exist_ok=True)
-        # Recovery: roll back manifest entries whose promoted part never
-        # committed (crash before/during the merged write). Left in
-        # place, such an entry could be resurrected by a future INSERT
-        # part reusing the promoted id and retire live originals.
-        entries = self._manifest_entries()
-        committed = [
-            e for e in entries
-            if (self.path / f"part={e.get('promote')}" / "_SUCCESS").exists()
-        ]
-        if len(committed) != len(entries):
-            self._write_manifest(committed)
-        # Numbering counts EVERY part dir on disk (retired and
-        # uncommitted included) so a recovered store never reuses an id
-        # that a crashed write already claimed.
-        self._next_part = 1 + max(self._all_part_ids(), default=-1)
-
-    _MANIFEST = "compaction_manifest.json"
-
-    def _manifest_entries(self) -> list[dict]:
-        try:
-            data = json.loads((self.path / self._MANIFEST).read_text())
-            return list(data.get("compactions", []))
-        except (OSError, json.JSONDecodeError, TypeError, ValueError):
-            return []
-
-    def _write_manifest(self, entries: list[dict]) -> None:
-        # tmp + os.replace: the manifest is either the old or the new
-        # content, never a torn write.
-        tmp = self.path / (self._MANIFEST + ".tmp")
-        tmp.write_text(json.dumps({"compactions": entries}, sort_keys=True))
-        os.replace(tmp, self.path / self._MANIFEST)
-
-    def _superseded_ids(self) -> set[int]:
-        """Part ids retired by a COMMITTED compaction: an entry is active
-        only once its promoted part is fully written (``_SUCCESS``
-        present). A crash after the manifest write but before/ during the
-        merged-part write leaves the entry inactive, so the original
-        parts stay live — no data loss; a crash after the merged part
-        lands but before the old dirs are rmtree'd leaves the entry
-        active, so a reopened store skips the originals — no double
-        count (the pre-r13 bug)."""
-        retired: set[int] = set()
-        for e in self._manifest_entries():
-            promote = self.path / f"part={e.get('promote')}"
-            if (promote / "_SUCCESS").exists():
-                retired.update(int(i) for i in e.get("superseded", []))
-        return retired
-
-    def _all_part_ids(self) -> list[int]:
-        out = []
-        for p in self.path.glob("part=*"):
-            if p.is_dir():
-                try:
-                    out.append(int(p.name.split("=", 1)[1]))
-                except ValueError:
-                    continue
-        return out
-
-    def _part_dirs(self) -> list[Path]:
-        """Live, readable parts: committed (``_SUCCESS``) and not retired
-        by a committed compaction."""
-        retired = self._superseded_ids()
-        live = []
-        for p in sorted(self.path.glob("part=*")):
-            if not p.is_dir() or not (p / "_SUCCESS").exists():
-                continue  # uncommitted garbage from a crashed write
-            try:
-                pid = int(p.name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if pid not in retired:
-                live.append(p)
-        return live
+        self.store = PartStore(path)
 
     def apply_part(self, block: DataFrame) -> int:
-        part_id = self._next_part
-        self._next_part += 1
-        partial_states(
+        return self.store.append(partial_states(
             block, self.keys, self.value_milli_col, self.uniq_col
-        ).write.mode("errorifexists").parquet(
-            str(self.path / f"part={part_id}")
-        )
-        return part_id
+        ))
 
     def _states(self) -> DataFrame:
-        dirs = self._part_dirs()
-        if not dirs:
-            raise ValueError(f"no state parts under {self.path}")
-        return self.spark.read.parquet(*[str(d) for d in dirs]).select(
-            *self.keys, *STATE_COLS
-        )
+        parts = self.store.paths()
+        if not parts:
+            raise ValueError(f"no state parts under {self.store.root}")
+        return self.spark.read.parquet(*parts).select(*self.keys, *STATE_COLS)
 
     def merged(self) -> DataFrame:
         return merge_states(self._states(), self.keys)
@@ -562,47 +479,6 @@ class AggregateStateStore:
         return finalize(self.merged())
 
     def compact(self) -> None:
-        """Rewrite all live parts as one merged part — crash-safe at any
-        interruption point (ADVICE r12):
-
-        1. append a manifest entry ``{promote: new_id, superseded:
-           [old ids]}`` (atomic tmp+rename). The entry is INERT until the
-           promoted part's ``_SUCCESS`` exists, so a crash here changes
-           nothing.
-        2. write the merged part. The merge plan holds the old dirs as
-           explicit paths, so the manifest cannot hide them from its own
-           input. A crash mid-write leaves no ``_SUCCESS`` → entry still
-           inert, originals still live.
-        3. rmtree the old dirs. A crash BETWEEN 2 and 3 is the previously
-           unsafe window: the entry is now active, so a reopened store
-           skips the superseded originals instead of double-counting.
-        """
-        # GC first: physically drop dirs retired by committed entries,
-        # then prune entries with nothing left to retire. Ordering
-        # matters — an entry deactivates if its PROMOTED part is later
-        # deleted (by the rmtree below, once the promoted part becomes
-        # this compaction's input), so its superseded dirs must already
-        # be gone by then or they would spring back to life.
-        for e in self._manifest_entries():
-            if (self.path / f"part={e.get('promote')}" / "_SUCCESS").exists():
-                for i in e.get("superseded", []):
-                    d = self.path / f"part={int(i)}"
-                    if d.exists():
-                        shutil.rmtree(d)
-        entries = [
-            e for e in self._manifest_entries()
-            if any((self.path / f"part={int(i)}").exists()
-                   for i in e.get("superseded", []))
-        ]
-        old = self._part_dirs()
-        old_ids = [int(d.name.split("=", 1)[1]) for d in old]
-        merged = self.merged().select(*self.keys, *STATE_COLS)
-        part_id = self._next_part
-        self._next_part += 1
-        entries.append({"promote": part_id, "superseded": old_ids})
-        self._write_manifest(entries)
-        merged.write.mode("errorifexists").parquet(
-            str(self.path / f"part={part_id}")
-        )
-        for d in old:
-            shutil.rmtree(d)
+        """Rewrite all live parts as one merged part (crash-safe: see
+        operators/part_store.py)."""
+        self.store.compact(self.merged().select(*self.keys, *STATE_COLS))

@@ -18,7 +18,7 @@ already use, so:
   entry log is order- and duplicate-insensitive (M5), so replaying a
   batch re-appends identical entries that the version dedup collapses;
 - compaction is the same winner-rewrite the CDC store uses, amortized
-  and crash-consistent (temp dir + atomic swap).
+  and crash-safe (operators/part_store.py).
 
 Centroids and hyperplanes are frozen at train time — the standard
 IVF/LSH contract (FAISS ``add``/``remove_ids`` never retrain): an entry
@@ -36,7 +36,6 @@ and bucketed persistence can remove even that.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,6 +43,7 @@ from pyspark.sql.window import Window
 
 from .blocking import sign_signature
 from .cdc import DELETED_COL, VER_COL, latest_alive, latest_state
+from .part_store import PartStore
 
 N_CELLS = 16      # IVF cells — matches ann_ivf_probed's seeding
 SIG_BITS = 6      # LSH hyperplane bits — matches ann_lsh_bucketed
@@ -168,19 +168,12 @@ class AnnIndexStore:
     """Parquet-persisted incremental IVF+LSH index.
 
     Lifecycle mirrors the CDC target store: ``train`` freezes centroids,
-    ``apply_batch`` appends one entry-log generation per micro-batch
-    (idempotent per-batch overwrite — a replayed batch rewrites the SAME
-    generation), ``live`` is the merge-on-read view, ``compact`` rewrites
-    winners as a new generation behind the crash-safe manifest protocol
-    (the agg_state.AggregateStateStore pattern): the manifest entry is
-    inert until the promoted generation's ``_SUCCESS`` lands, so a crash
-    at ANY point either keeps the originals live or retires them — never
-    a double-count, never a lost store. Compaction outputs live in their
-    own ``compact_id=*`` namespace so a REPLAYED stream batch (which
-    idempotently overwrites its own ``batch_id=N`` dir) can never
-    clobber a compacted generation."""
+    ``apply_batch`` writes one entry-log part per micro-batch (a
+    replayed batch rewrites the SAME part), ``live`` is the
+    merge-on-read view, ``compact`` rewrites the winners as one part.
+    The entry log is a :class:`~.part_store.PartStore` under
+    ``<path>/entries``, which owns the crash-safety protocol."""
 
-    _MANIFEST = "compaction_manifest.json"
     _entry_cols = ENTRY_COLS
     _merge_keys = ("vec_id",)
 
@@ -198,68 +191,7 @@ class AnnIndexStore:
         self.bits = bits
         self.dim = dim
         self.n_cells = n_cells
-        os.makedirs(self._entries_root(), exist_ok=True)
-        # Recovery: roll back manifest entries whose promoted generation
-        # never committed (crash before/during the compaction write);
-        # left in place they could be resurrected by a future dir
-        # reusing the name and retire live originals.
-        entries = self._manifest_entries()
-        committed = [
-            e for e in entries
-            if os.path.exists(os.path.join(
-                self._entries_root(), str(e.get("promote")), "_SUCCESS"))
-        ]
-        if len(committed) != len(entries):
-            self._write_manifest(committed)
-
-    def _entries_root(self) -> str:
-        return os.path.join(self.path, "entries")
-
-    def _manifest_entries(self) -> list[dict]:
-        import json
-
-        try:
-            with open(os.path.join(self.path, self._MANIFEST)) as fh:
-                return list(json.load(fh).get("compactions", []))
-        except (OSError, ValueError, TypeError):
-            return []
-
-    def _write_manifest(self, entries: list[dict]) -> None:
-        import json
-
-        tmp = os.path.join(self.path, self._MANIFEST + ".tmp")
-        with open(tmp, "w") as fh:
-            json.dump({"compactions": entries}, fh, sort_keys=True)
-        os.replace(tmp, os.path.join(self.path, self._MANIFEST))
-
-    def _retired_names(self) -> set[str]:
-        """Generation dirs retired by a COMMITTED compaction (promoted
-        generation has ``_SUCCESS``)."""
-        root = self._entries_root()
-        out: set[str] = set()
-        for e in self._manifest_entries():
-            if os.path.exists(
-                os.path.join(root, str(e.get("promote")), "_SUCCESS")
-            ):
-                out.update(str(n) for n in e.get("superseded", []))
-        return out
-
-    def _live_dirs(self) -> list[str]:
-        """Readable generations: committed (``_SUCCESS``) stream batches
-        and compaction outputs, minus manifest-retired ones."""
-        root = self._entries_root()
-        retired = self._retired_names()
-        out = []
-        for name in sorted(os.listdir(root)):
-            if not (name.startswith("batch_id=")
-                    or name.startswith("compact_id=")):
-                continue
-            if name in retired:
-                continue
-            if not os.path.exists(os.path.join(root, name, "_SUCCESS")):
-                continue  # uncommitted garbage from a crashed write
-            out.append(os.path.join(root, name))
-        return out
+        self.store = PartStore(os.path.join(path, "entries"))
 
     def _centroids_dir(self) -> str:
         return os.path.join(self.path, "centroids")
@@ -274,50 +206,14 @@ class AnnIndexStore:
 
     def _encode_batch(self, changes: DataFrame, batch_id: int) -> DataFrame:
         """One CDC batch -> this store's entry-log delta (subclasses
-        swap the encoding; the generation/manifest machinery is shared).
-        ``batch_id`` lets stateful encoders (the graph lane) stamp a
-        monotone recompute sequence and exclude their own generation
-        when reading prior state (replay exactness)."""
+        swap the encoding; the part store is shared). ``batch_id`` lets
+        stateful encoders (the graph lane) stamp a monotone recompute
+        sequence and exclude their own part when reading prior state
+        (replay exactness)."""
         return cdc_index_entries(changes, self.centroids(), self.bits, self.dim)
 
-    def _entries_excluding(self, name: str) -> DataFrame | None:
-        """Entry log restricted to generations other than ``name`` —
-        what an encoder must treat as 'prior state' so a REPLAY of
-        batch N (whose generation may already exist from the crashed
-        attempt) computes against exactly the state the first attempt
-        saw. None when no other generation exists yet."""
-        parts = [d for d in self._live_dirs() if os.path.basename(d) != name]
-        if not parts:
-            return None
-        return self.spark.read.parquet(*parts).select(*self._entry_cols)
-
     def apply_batch(self, changes: DataFrame, batch_id: int) -> None:
-        # A write into a manifest-retired dir name is either (a) a
-        # harmless replay of a batch whose entries the committed
-        # compaction already subsumes — invisible by design — or (b) a
-        # RESET streaming checkpoint (batch ids restarted at 0), where a
-        # genuinely NEW batch's data becomes permanently invisible. The
-        # two are indistinguishable by name, so warn loudly instead of
-        # silently swallowing: a replay tolerates the warning; a reset
-        # checkpoint gets a named symptom instead of vanished data.
-        name = f"batch_id={batch_id}"
-        if name in self._retired_names():
-            import warnings
-
-            warnings.warn(
-                f"index store at {self.path}: incoming {name} targets a "
-                "manifest-retired generation. If this is a replay of an "
-                "already-compacted batch it is harmless (entries stay "
-                "subsumed by the compacted generation); if the streaming "
-                "checkpoint was RESET, this batch's data will be "
-                "invisible — re-point checkpointLocation or seed batch "
-                "numbering above the retired ids.",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        self._encode_batch(changes, batch_id).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(self._entries_root(), name))
+        self.store.write_batch(self._encode_batch(changes, batch_id), batch_id)
 
     def attach(
         self,
@@ -329,7 +225,7 @@ class AnnIndexStore:
         """foreachBatch twin: maintain the index live from a streaming
         CDC change feed ``(vec_id, embedding, _ver, _deleted)``. Replays
         are idempotent — a re-delivered batch overwrites its own
-        generation and the version dedup absorbs duplicates."""
+        part and the version dedup absorbs duplicates."""
         writer = (
             changes_stream.writeStream.foreachBatch(
                 lambda b, bid: self.apply_batch(b, bid)
@@ -340,57 +236,22 @@ class AnnIndexStore:
         return writer.start()
 
     def entries(self) -> DataFrame:
-        parts = self._live_dirs()
+        parts = self.store.paths()
         if not parts:
-            raise ValueError(
-                f"no index entries under {self._entries_root()}"
-            )
+            raise ValueError(f"no index entries under {self.store.root}")
         return self.spark.read.parquet(*parts).select(*self._entry_cols)
 
     def live(self) -> DataFrame:
         return live_index(self.entries())
 
     def compact(self) -> None:
-        """Rewrite the winner set as one ``compact_id=*`` generation —
-        crash-safe at every interruption point (the agg_state protocol):
-        GC previously-retired dirs first (so deleting a promoted
-        generation later can never deactivate the entry that retired its
-        inputs), append the inert manifest entry, write the promoted
-        generation (the entry activates only when ``_SUCCESS`` lands),
-        then drop the superseded dirs. The winners keep their _ver so
-        later CDC rows still compare correctly."""
-        root = self._entries_root()
-        for e in self._manifest_entries():
-            if os.path.exists(
-                os.path.join(root, str(e.get("promote")), "_SUCCESS")
-            ):
-                for name in e.get("superseded", []):
-                    d = os.path.join(root, str(name))
-                    if os.path.exists(d):
-                        shutil.rmtree(d)
-        manifest = [
-            e for e in self._manifest_entries()
-            if any(os.path.exists(os.path.join(root, str(n)))
-                   for n in e.get("superseded", []))
-        ]
-        old = self._live_dirs()
-        old_names = [os.path.basename(d) for d in old]
-        winners = latest_alive(self.entries(), list(self._merge_keys)).select(
-            *self._entry_cols
+        """Rewrite the winner set as one part. The winners keep their
+        _ver so later CDC rows still compare correctly."""
+        self.store.compact(
+            latest_alive(self.entries(), list(self._merge_keys)).select(
+                *self._entry_cols
+            )
         )
-        nxt = 1 + max(
-            (int(n.split("=", 1)[1]) for n in os.listdir(root)
-             if n.startswith("compact_id=")),
-            default=-1,
-        )
-        promote = f"compact_id={nxt}"
-        manifest.append({"promote": promote, "superseded": old_names})
-        self._write_manifest(manifest)
-        winners.write.mode("errorifexists").parquet(
-            os.path.join(root, promote)
-        )
-        for d in old:
-            shutil.rmtree(d)
 
     def search(
         self, queries: DataFrame, vectors: DataFrame, top_k: int = 5
@@ -658,7 +519,7 @@ def live_pq_codes(entries: DataFrame) -> DataFrame:
 
 class PqIndexStore(AnnIndexStore):
     """Parquet-persisted incremental PQ code store: the AnnIndexStore
-    generation/manifest/compaction machinery with PQ-code entries.
+    part store and compaction with PQ-code entries.
     ``train`` freezes the codebooks; ``apply_batch`` encodes only the
     delta against them."""
 
@@ -962,12 +823,11 @@ class GraphIndexStore(AnnIndexStore):
     ``_ver``) and ``adj`` rows (the packed out-adjacency, versioned by
     the monotone batch id: a later recompute of the same source
     supersedes an earlier one by plain version comparison). One
-    generation per micro-batch carries the node delta AND the
-    touched-cell adjacency patch, so the generation/manifest/compaction
-    machinery is inherited unchanged; replay exactness holds because the
-    encoder reads prior state EXCLUDING its own generation
-    (``_entries_excluding``) — a replayed batch sees exactly what the
-    first attempt saw."""
+    part per micro-batch carries the node delta AND the touched-cell
+    adjacency patch, so the part store and compaction are inherited
+    unchanged; replay exactness holds because the encoder reads prior
+    state EXCLUDING its own part (``paths(exclude=batch_id)``) — a
+    replayed batch sees exactly what the first attempt saw."""
 
     _entry_cols = GRAPH_ENTRY_COLS
     _merge_keys = ("kind", "vec_id")
@@ -978,20 +838,21 @@ class GraphIndexStore(AnnIndexStore):
         self.degree = degree
         self.cell_cap = cell_cap
 
-    def _prior_node_state(self, excluding: str) -> DataFrame:
+    def _prior_node_state(self, batch_id: int) -> DataFrame:
         """Latest node STATE (tombstones kept — graph_adjacency_patch's
-        resurrection defense needs them) from every generation except
-        ``excluding``."""
-        prior = self._entries_excluding(excluding)
-        if prior is None:
+        resurrection defense needs them) from every part except
+        ``batch_id=N``."""
+        parts = self.store.paths(exclude=batch_id)
+        if not parts:
             return self.spark.createDataFrame([], _NODE_SCHEMA)
+        prior = self.spark.read.parquet(*parts)
         return latest_state(
             prior.filter(F.col("kind") == "node").select(*NODE_COLS),
             ["vec_id"],
         )
 
     def _encode_batch(self, changes: DataFrame, batch_id: int) -> DataFrame:
-        prior_nodes = self._prior_node_state(f"batch_id={batch_id}")
+        prior_nodes = self._prior_node_state(batch_id)
         delta = graph_node_rows(changes, self.centroids())
         patch = graph_adjacency_patch(
             prior_nodes, delta, seq=batch_id,

@@ -1,5 +1,4 @@
 from .layout import (  # noqa: F401
-    compact_small_files,
     write_bucketed,
     write_clustered,
     write_partitioned,

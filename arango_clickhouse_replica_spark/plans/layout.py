@@ -24,15 +24,17 @@ them:
   columns keep tight per-file min/max, so predicates on any of them
   skip row groups (Delta OPTIMIZE ZORDER BY, dependency-free;
   data-skipping proven in ``tests/test_zorder.py``).
-- ``compact_small_files``: bound file counts after many streaming
-  micro-batch appends (the OPTIMIZE/background-merge analogue, M3).
+
+Small-file compaction after streaming micro-batches (the OPTIMIZE /
+background-merge analogue, M3) is the part store's ``compact``
+(operators/part_store.py), which the CDC target uses.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -96,34 +98,6 @@ def write_clustered(
         else df.repartitionByRange(*cluster_cols)
     )
     out.sortWithinPartitions(*cluster_cols).write.mode(mode).parquet(path)
-
-
-def compact_small_files(
-    spark: SparkSession,
-    path: str,
-    *,
-    target_partitions: int,
-) -> None:
-    """Rewrite a parquet directory into ``target_partitions`` files.
-
-    Streaming appends produce one file per micro-batch per partition;
-    periodic compaction keeps scan task counts bounded (the
-    ClickHouse background-merge / OPTIMIZE analogue, M3
-    clickhouse/connect.py:55-57). Atomic swap via temp dir, like the
-    reference's snapshot loader (K4, store.py:25-27,87-89).
-    """
-    import os
-    import shutil
-    import uuid
-
-    tmp = f"{path}__compact_{uuid.uuid4().hex[:8]}"
-    spark.read.parquet(path).coalesce(target_partitions).write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
 
 
 def zorder_value(*cols, bits: int = 16):

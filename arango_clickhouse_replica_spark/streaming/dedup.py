@@ -36,6 +36,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.minhash import band_signatures, candidate_pairs, word_shingles
+from ..operators.part_store import PartStore
+
+
+def _signatures_before(
+    spark: SparkSession, store: PartStore, batch_id: int
+) -> DataFrame | None:
+    """Every live signature part except ``batch_id``'s own: the prior
+    state a replay of that batch must be computed against."""
+    parts = store.paths(exclude=batch_id)
+    return spark.read.parquet(*parts) if parts else None
 
 
 class IncrementalLshDedup:
@@ -56,6 +66,7 @@ class IncrementalLshDedup:
         self.pairs_dir = pairs_dir
         self.id_col = id_col
         self.text_col = text_col
+        self.store = PartStore(store_dir)
         # The rolling-df-sketch output: a tiny (s) relation, constant for
         # the run — materialize once, anti-join into every batch.
         self._hot = (
@@ -69,26 +80,13 @@ class IncrementalLshDedup:
             sh = sh.join(self._hot, "s", "left_anti")
         return sh
 
-    def _store(self, exclude_batch: int) -> DataFrame | None:
-        if not os.path.isdir(self.store_dir):
-            return None
-        parts = [
-            e for e in os.listdir(self.store_dir)
-            if e.startswith("batch_id=") and e != f"batch_id={exclude_batch}"
-        ]
-        if not parts:
-            return None
-        return self.spark.read.parquet(
-            *[os.path.join(self.store_dir, p) for p in parts]
-        )
-
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         sigs = band_signatures(self._shingles(batch), id_col=self.id_col)
         # Signatures are re-read twice below (store join + self join);
         # they are bands-per-doc tiny — materialize once.
         sigs = sigs.localCheckpoint(eager=True)
 
-        store = self._store(exclude_batch=batch_id)
+        store = _signatures_before(self.spark, self.store, batch_id)
         pairs = candidate_pairs(sigs, id_col=self.id_col)  # new vs new
         if store is not None:
             pairs = pairs.unionByName(
@@ -98,9 +96,7 @@ class IncrementalLshDedup:
         pairs.write.mode("overwrite").parquet(
             os.path.join(self.pairs_dir, f"batch_id={batch_id}")
         )
-        sigs.write.mode("overwrite").parquet(
-            os.path.join(self.store_dir, f"batch_id={batch_id}")
-        )
+        self.store.write_batch(sigs, batch_id)
 
     def attach(
         self, docs_stream: DataFrame, *, checkpoint_dir: str,
@@ -170,19 +166,7 @@ class IncrementalAHashDedup:
         self.store_dir = store_dir
         self.pairs_dir = pairs_dir
         self.hamming_max = hamming_max
-
-    def _store(self, exclude_batch: int) -> DataFrame | None:
-        if not os.path.isdir(self.store_dir):
-            return None
-        parts = [
-            e for e in os.listdir(self.store_dir)
-            if e.startswith("batch_id=") and e != f"batch_id={exclude_batch}"
-        ]
-        if not parts:
-            return None
-        return self.spark.read.parquet(
-            *[os.path.join(self.store_dir, p) for p in parts]
-        )
+        self.store = PartStore(store_dir)
 
     @staticmethod
     def _bands(sigs: DataFrame) -> DataFrame:
@@ -219,7 +203,7 @@ class IncrementalAHashDedup:
 
         sigs = extract_ahash(media_batch).localCheckpoint(eager=True)
         bands = self._bands(sigs)
-        store = self._store(exclude_batch=batch_id)
+        store = _signatures_before(self.spark, self.store, batch_id)
         cand = candidate_pairs(bands)  # new vs new
         sigs_all = sigs
         if store is not None:
@@ -239,9 +223,7 @@ class IncrementalAHashDedup:
         pairs.write.mode("overwrite").parquet(
             os.path.join(self.pairs_dir, f"batch_id={batch_id}")
         )
-        sigs.write.mode("overwrite").parquet(
-            os.path.join(self.store_dir, f"batch_id={batch_id}")
-        )
+        self.store.write_batch(sigs, batch_id)
 
     def attach(
         self, media_stream: DataFrame, *, checkpoint_dir: str,

@@ -142,8 +142,12 @@ class ReplicationManager:
         checkpoint + target, batch-load the snapshot, restart the stream.
         Overlap between the snapshot and replayed envelopes is absorbed
         by version dedup (M4) — the reference's records-tick-before-
-        snapshot trick, without the Redis token."""
+        snapshot trick, without the Redis token. The snapshot is written
+        as the target's compacted part, so the restarted stream's
+        ``batch_id=0, 1, ...`` parts cannot overwrite it."""
         import shutil
+
+        from ..operators.part_store import PartStore
 
         r = self.runners[name]
         r.stop()
@@ -165,6 +169,6 @@ class ReplicationManager:
                 raise RuntimeError(f"topic recreation failed for {name!r}")
         for d in (r.pipeline.checkpoint_dir, r.pipeline.target_dir):
             shutil.rmtree(d, ignore_errors=True)
-        snapshot_df.write.mode("overwrite").parquet(r.pipeline.target_dir)
+        PartStore(r.pipeline.target_dir).compact(snapshot_df)
         r.restarts = 0
         r.start()

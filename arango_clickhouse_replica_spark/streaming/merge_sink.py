@@ -66,8 +66,10 @@ class BucketedMergeSink:
         )
 
     def _exists(self) -> bool:
+        # Test for the partition prefix: ``__bucket=N`` starts with "_"
+        # like the files Spark treats as hidden.
         return os.path.isdir(self.target_dir) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(self.target_dir)
+            e.startswith(BUCKET_COL + "=") for e in os.listdir(self.target_dir)
         )
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
@@ -92,10 +94,23 @@ class BucketedMergeSink:
             )
         else:
             merged = latest_state(staged, self.keys, self.ver_col)
-        # Materialize before overwriting the files we just read.
-        merged = merged.localCheckpoint(eager=True)
+        self._overwrite(merged)
+
+    def compact(self) -> None:
+        """Coalesce each bucket's per-batch small files into one file.
+        The target is already winners-only; the bucket layout the
+        partition-pruned merge reads depend on is kept."""
+        self._overwrite(
+            self.spark.read.parquet(self.target_dir).repartition(BUCKET_COL)
+        )
+
+    def _overwrite(self, df: DataFrame) -> None:
+        """Rewrite exactly the buckets ``df`` holds (dynamic partition
+        overwrite), materialized first because ``df`` may read the very
+        files being replaced."""
         (
-            merged.write.mode("overwrite")
+            df.localCheckpoint(eager=True)
+            .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(BUCKET_COL)
             .parquet(self.target_dir)

@@ -8,13 +8,13 @@ table:
 
     readStream (file or Kafka envelope source)
       -> foreachBatch: preprocess (P1-P3, D1/D2) [+ mapping DSL]
-      -> APPEND to the columnar target table
+      -> write one part of the columnar target table
 
-The target stays append-only — exactly ClickHouse ReplacingMergeTree's
-write path — and reads go through the ``latest_state``/``latest_alive``
-merge-on-read views (M1/M2). ``compact()`` rewrites winners periodically
-(M3), using a temp-dir + atomic swap like the reference's snapshot loader
-(K4, replication/replicator/store.py:25-27,87-89).
+The target is a part log (operators/part_store.py) — exactly ClickHouse
+ReplacingMergeTree's write path — and reads go through the
+``latest_state``/``latest_alive`` merge-on-read views (M1/M2) over its
+live parts. ``compact()`` rewrites the winners as one part (M3) under the
+part store's crash-safe protocol.
 
 What the checkpoint replaces (T2/T3/T6): the Redis ``last-tick`` token
 (publisher.py:24-46), manual Kafka commits (loader.py:147-157), and the
@@ -32,7 +32,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,6 +39,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.cdc import latest_alive, latest_state, preprocess_envelopes
+from ..operators.part_store import PartStore
 from ..schema.dsl import TableMapping, compile_mapping
 from .merge_sink import BucketedMergeSink
 from .monitor import TickGapMonitor
@@ -73,6 +73,7 @@ class CdcPipeline:
         self.dead_letter_dir = dead_letter_dir
         self.tick_monitor = tick_monitor
         self.merge_sink = merge_sink
+        self.store = PartStore(target_dir)
         # r12 (VERDICT r11 item 5): apply on transaction boundaries — a
         # micro-batch never exposes part of a WAL transaction. Document
         # rows gate on their tid's terminator (2201/2202, reader.py:9-14);
@@ -188,7 +189,8 @@ class CdcPipeline:
                 # merge-on-WRITE: versions resolved now, reads are plain scans
                 self.merge_sink.apply_batch(rows, batch_id)
             else:
-                rows.write.mode("append").parquet(self.target_dir)
+                # A replayed batch rewrites its own part: no duplicates.
+                self.store.write_batch(rows, batch_id)
         finally:
             if multi_action:
                 raw.unpersist()
@@ -295,13 +297,13 @@ class CdcPipeline:
     def raw(self) -> DataFrame:
         if self.merge_sink is not None:
             return self.merge_sink.read()
-        # mergeSchema: the append-only target accumulates files written
-        # across pipeline restarts; when the source collection gained a
-        # field in between (schema evolution), footers disagree and a
-        # plain read would resolve to whichever footer it samples —
-        # merge them so new columns surface (null-backfilled) instead.
+        # mergeSchema: the target accumulates parts written across
+        # pipeline restarts; when the source collection gained a field in
+        # between (schema evolution), footers disagree and a plain read
+        # would resolve to whichever footer it samples — merge them so
+        # new columns surface (null-backfilled) instead.
         return self.spark.read.option("mergeSchema", "true").parquet(
-            self.target_dir
+            *self.store.paths()
         )
 
     def latest(self) -> DataFrame:
@@ -319,35 +321,11 @@ class CdcPipeline:
     # -- maintenance (M3/K4) ------------------------------------------------
 
     def compact(self) -> None:
-        """Rewrite the target keeping only winners: write to a temp dir,
-        then swap — the reference's create-temp / drop / rename snapshot
-        dance (store.py:25-27, 87-89).
-
-        SINGLE-WRITER, NO-CONCURRENT-READER maintenance operation: the
-        two-rename swap has a window where the target path does not
-        exist, ``os.rename`` is same-filesystem only, and object stores
-        have no rename at all — do not run while the stream is active or
-        a reader holds the path. (On a real deployment this is a Delta
-        ``OPTIMIZE``/``REPLACE TABLE`` — a transactional table format is
-        the right swap primitive at scale; this local-parquet variant
-        keeps the engine storage-agnostic.)"""
-        tmp = f"{self.target_dir}__compact_{uuid.uuid4().hex[:8]}"
+        """Rewrite the target keeping only winners (crash-safe, and a
+        reader that resolved its parts before keeps them: see
+        operators/part_store.py). Single writer: do not run while a
+        micro-batch is being applied."""
         if self.merge_sink is not None:
-            # The merge-on-write target is already winners-only; compact
-            # here means coalescing the per-batch small files WITHOUT
-            # destroying the __bucket partition layout the sink's
-            # partition-pruned reads depend on.
-            from .merge_sink import BUCKET_COL
-
-            (
-                self.spark.read.parquet(self.target_dir)
-                .write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(tmp)
-            )
+            self.merge_sink.compact()
         else:
-            self.latest().write.mode("overwrite").parquet(tmp)
-        old = f"{self.target_dir}__old_{uuid.uuid4().hex[:8]}"
-        os.rename(self.target_dir, old)
-        os.rename(tmp, self.target_dir)
-        shutil.rmtree(old)
+            self.store.compact(self.latest())

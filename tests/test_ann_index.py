@@ -183,16 +183,13 @@ def test_cdc_index_entries_routes_upserts_and_tombstones(spark, sf_dir):
     ).count() == 0
 
 
-def test_compaction_crash_safe_and_replay_proof(spark, sf_dir, tmp_path,
-                                                monkeypatch):
-    """The index store's compaction mirrors the agg-state crash-safety
-    protocol: a crash between 'promoted generation written' and 'old
-    dirs dropped' must not double-count on reopen; a crash before the
-    promoted generation commits leaves the originals live; and a
-    REPLAYED stream batch after compaction (idempotent overwrite of its
-    own batch_id dir) must not resurrect retired entries."""
-    import json
-    import os as _os
+def test_compaction_invisible_and_replay_proof(spark, sf_dir, tmp_path):
+    """Compaction leaves the live index unchanged, also after a reopen,
+    and a REPLAYED stream batch after compaction (idempotent overwrite
+    of its own retired batch_id part) must not resurrect retired
+    entries. The crash points of the compaction itself are covered once
+    for every store in tests/test_part_store.py."""
+    import pytest
 
     emb, changes = _change_stream(spark, sf_dir)
     store = AnnIndexStore(spark, str(tmp_path / "idx"))
@@ -205,42 +202,15 @@ def test_compaction_crash_safe_and_replay_proof(spark, sf_dir, tmp_path,
         store.apply_batch(p, i)
     expected = _index_rows(store.live())
 
-    # crash AFTER the promoted generation lands, BEFORE the old dirs drop
-    monkeypatch.setattr(
-        "arango_clickhouse_replica_spark.operators.ann_index.shutil.rmtree",
-        lambda *a, **k: None,
-    )
     store.compact()
-    monkeypatch.undo()
-    root = tmp_path / "idx" / "entries"
-    assert (root / "compact_id=0" / "_SUCCESS").exists()
-    assert (root / "batch_id=0").exists()  # nothing deleted by the crash
     reopened = AnnIndexStore(spark, str(tmp_path / "idx"))
-    assert _index_rows(reopened.live()) == expected  # no double count
-
-    # a replayed stream batch re-writes its own retired dir: still
-    # invisible (manifest), and the live view is unchanged
-    reopened.apply_batch(parts[1], 1)
     assert _index_rows(reopened.live()) == expected
 
-    # the next compaction GCs the leftovers and stays correct
+    with pytest.warns(RuntimeWarning, match="retired by a compaction"):
+        reopened.apply_batch(parts[1], 1)
+    assert _index_rows(reopened.live()) == expected
+
     reopened.compact()
     assert _index_rows(reopened.live()) == expected
-    names = set(_os.listdir(root))
+    names = set(os.listdir(tmp_path / "idx" / "entries"))
     assert "batch_id=0" not in names and "compact_id=1" in names
-
-    # crash BEFORE the promoted generation commits: inert entry, rolled
-    # back on reopen, originals stay live
-    store2 = AnnIndexStore(spark, str(tmp_path / "idx2"))
-    store2.train(emb)
-    for i, p in enumerate(parts):
-        store2.apply_batch(p, i)
-    (tmp_path / "idx2" / "compaction_manifest.json").write_text(
-        json.dumps({"compactions": [{
-            "promote": "compact_id=9",
-            "superseded": ["batch_id=0", "batch_id=1", "batch_id=2"],
-        }]})
-    )
-    reopened2 = AnnIndexStore(spark, str(tmp_path / "idx2"))
-    assert _index_rows(reopened2.live()) == expected
-    assert reopened2._manifest_entries() == []

@@ -1,13 +1,11 @@
 """Physical-layout assertions: the plans the engine promises at 100 TB
 must actually materialize — bucketed joins skip the exchange, partition
-pruning reaches the scan, clustering bounds file stats, compaction
-bounds file counts."""
+pruning reaches the scan, clustering bounds file stats."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from arango_clickhouse_replica_spark.plans import (
-    compact_small_files,
     write_bucketed,
     write_clustered,
     write_partitioned,
@@ -77,19 +75,6 @@ def test_clustered_write_roundtrip(spark, sf_dir, layout_dir):
         back.filter(F.col("o_custkey") == one).count()
         == orders.filter(F.col("o_custkey") == one).count()
     )
-
-
-def test_compact_small_files(spark, sf_dir, layout_dir):
-    import os
-
-    orders = load_table(spark, "orders", sf_dir)
-    path = str(layout_dir / "orders_fragmented")
-    orders.repartition(16).write.mode("overwrite").parquet(path)
-    n_before = len([f for f in os.listdir(path) if f.endswith(".parquet")])
-    compact_small_files(spark, path, target_partitions=2)
-    n_after = len([f for f in os.listdir(path) if f.endswith(".parquet")])
-    assert n_after < n_before and n_after <= 2
-    assert spark.read.parquet(path).count() == orders.count()
 
 
 def test_bucketed_cdc_target_merges_without_shuffle(spark, sf_dir, layout_dir):

@@ -53,6 +53,22 @@ def test_merge_sink_matches_merge_on_read(spark, sf_dir, tmp_path, env):
     assert got == want and len(got) > 0
 
 
+def test_merge_sink_keeps_rows_across_batches(spark, tmp_path):
+    """A later batch merges into the buckets it touches instead of
+    overwriting them: two batches with disjoint keys keep every row."""
+    sink = BucketedMergeSink(
+        spark, str(tmp_path / "target"), keys=["eid"], n_buckets=4
+    )
+    for batch_id, lo in enumerate((0, 50)):
+        sink.apply_batch(
+            spark.range(lo, lo + 50).selectExpr(
+                "id AS eid", "id AS _ver", "0 AS _deleted"
+            ),
+            batch_id,
+        )
+    assert sorted(r.eid for r in sink.read_alive().collect()) == list(range(100))
+
+
 def test_merge_sink_replay_is_idempotent(spark, tmp_path, env):
     env_dir, schema = env
     pipe, sink = _merge_pipe(spark, tmp_path)

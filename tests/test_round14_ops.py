@@ -164,7 +164,7 @@ def test_graph_incremental_equals_rebuild_across_batch_splits(
     assert _adj_rows(store.live()) == expected
 
     # replay of a mid-stream batch (the same generation rewrites itself
-    # against the same prior state — _entries_excluding) is a no-op
+    # against the same prior state — paths(exclude=batch_id)) is a no-op
     store.apply_batch(parts[1], 1)
     assert _adj_rows(store.live()) == expected
 

@@ -61,6 +61,26 @@ def test_replayed_batch_is_idempotent(spark, sf_dir, tmp_path):
     assert _pairs(inc.all_candidates()) == first
 
 
+def test_uncommitted_store_part_is_ignored(spark, sf_dir, tmp_path):
+    """A signature part left without ``_SUCCESS`` by a crashed write is
+    not state: its documents must produce no candidates."""
+    docs = _docs(spark, sf_dir)
+    half_a = docs.filter(F.col("doc_id") % 2 == 0)
+    half_b = docs.filter(F.col("doc_id") % 2 == 1)
+
+    inc = _dedup(spark, tmp_path)
+    inc.process_batch(half_a, 0)
+    # a crashed write of batch 7: the same texts under new ids
+    crashed = os.path.join(inc.store_dir, "batch_id=7")
+    band_signatures(word_shingles(
+        docs.withColumn("doc_id", F.col("doc_id") + 1_000_000)
+    )).write.parquet(crashed)
+    os.remove(os.path.join(crashed, "_SUCCESS"))
+    inc.process_batch(half_b, 1)
+
+    assert _pairs(inc.all_candidates()) == _expected_one_shot(spark, sf_dir)
+
+
 def test_streaming_drive_matches_one_shot(spark, sf_dir, tmp_path):
     docs = _docs(spark, sf_dir)
     src = str(tmp_path / "src")

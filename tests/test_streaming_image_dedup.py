@@ -75,6 +75,24 @@ def test_hamming_values_match_batch_reference(spark, tmp_path):
         assert ham == want, (a, b)
 
 
+def test_uncommitted_store_part_is_ignored(spark, tmp_path):
+    """A signature part left without ``_SUCCESS`` by a crashed write is
+    not state: its images must produce no pairs."""
+    import os
+
+    dd = _dedup(spark, tmp_path)
+    dd.process_batch(_media(spark, _BATCH1), 0)
+    # a crashed write of batch 7: the same images under new ids
+    crashed = os.path.join(dd.store_dir, "batch_id=7")
+    extract_ahash(_media(spark, _BATCH1)).withColumn(
+        "media_id", F.col("media_id") + 1000
+    ).write.parquet(crashed)
+    os.remove(os.path.join(crashed, "_SUCCESS"))
+    dd.process_batch(_media(spark, _BATCH2), 1)
+    got = {(r.doc_a, r.doc_b) for r in dd.all_pairs().collect()}
+    assert got == _one_shot_pairs(spark, _BATCH1 + _BATCH2)
+
+
 def test_replayed_batch_is_idempotent(spark, tmp_path):
     dd = _dedup(spark, tmp_path)
     dd.process_batch(_media(spark, _BATCH1), 0)
