@@ -142,14 +142,17 @@ class ReplicationManager:
         checkpoint + target, batch-load the snapshot, restart the stream.
         Overlap between the snapshot and replayed envelopes is absorbed
         by version dedup (M4) — the reference's records-tick-before-
-        snapshot trick, without the Redis token. The snapshot is written
-        as the target's compacted part, so the restarted stream's
-        ``batch_id=0, 1, ...`` parts cannot overwrite it."""
+        snapshot trick, without the Redis token. On merge-on-read the
+        snapshot is written as the target's compacted part, so the
+        restarted stream's ``batch_id=0, 1, ...`` parts cannot overwrite
+        it; on merge-on-write it is loaded through the sink, which writes
+        its ``__bucket=`` partitions."""
         import shutil
 
         from ..operators.part_store import PartStore
 
         r = self.runners[name]
+        sink = getattr(r.pipeline, "merge_sink", None)
         r.stop()
         if self.topic_admin is not None:
             # C4: the reference drops + recreates the table's topic between
@@ -169,6 +172,10 @@ class ReplicationManager:
                 raise RuntimeError(f"topic recreation failed for {name!r}")
         for d in (r.pipeline.checkpoint_dir, r.pipeline.target_dir):
             shutil.rmtree(d, ignore_errors=True)
-        PartStore(r.pipeline.target_dir).compact(snapshot_df)
+        if sink is not None:
+            shutil.rmtree(sink.target_dir, ignore_errors=True)
+            sink.apply_batch(snapshot_df, 0)
+        else:
+            PartStore(r.pipeline.target_dir).compact(snapshot_df)
         r.restarts = 0
         r.start()

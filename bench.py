@@ -3,8 +3,16 @@
 sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
-Each query is forced end-to-end with the noop sink (full computation, no
-driver collect overhead). The flagship runs once untimed as JVM warm-up.
+Each query is forced end to end with the noop sink; the flagship runs
+once untimed as JVM warm-up. ``SPARK_GRAFT_ONLY=a,b,c`` runs just the
+named queries. Wall time is reported, never gated. The gate is the
+plan-shape ledger in BENCH_SELF.json: per query, the counts in
+``plans/capture.SHAPE_NODES`` over the final plan plus every
+localCheckpoint()ed subtree. A plan repeats exactly for the same code
+and data, so a count above the committed entry at the same sf exits 2;
+otherwise the run writes its entries into the ledger, and an intended
+rise is a reviewed hand edit of the file. Jobs and stages are recorded
+beside wall time but not gated: AQE timing moves them between runs.
 """
 
 from __future__ import annotations
@@ -18,7 +26,17 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from arango_clickhouse_replica_spark.plans.capture import (  # noqa: E402
+    SHAPE_NODES,
+    captured_checkpoint_subtrees,
+    plan_shape,
+    whole_computation_plans,
+)
+from arango_clickhouse_replica_spark.queries import QUERIES  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+SELF_RECORDING = "BENCH_SELF.json"
+GATED = tuple(SHAPE_NODES)
 
 # Representative of every operator family; heavy pairwise ops use their
 # scale-path variants. The jaccard pair join is back in the headline set
@@ -270,38 +288,74 @@ HEADLINE = [
 ]
 
 
+def shape_of(spark, name: str, sf_dir: str = SF_DIR):
+    """Build ``name`` and count the gated nodes of its whole computation.
+    Returns ``(df, counts)``; building runs any eager checkpoints."""
+    with captured_checkpoint_subtrees() as subtrees:
+        df = QUERIES[name].build(spark, sf_dir)
+    return df, plan_shape(whole_computation_plans(df, subtrees)[0])
+
+
+def measure(spark, name: str, sf_dir: str = SF_DIR) -> dict:
+    """One query's ledger entry. The first pass absorbs plan compilation,
+    codegen and JIT and yields the plan-shape counts; the faster of two
+    more passes gives the wall time, with the jobs and stages it ran
+    (the min of two rejects one-off GC or scheduler hiccups)."""
+    df, entry = shape_of(spark, name, sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    best = None
+    for i in range(2):
+        group = f"bench:{name}:{i}"
+        sc.setJobGroup(group, group)
+        t0 = time.perf_counter()
+        QUERIES[name].build(spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        wall = time.perf_counter() - t0
+        if best is None or wall < best[0]:
+            best = (wall, tracker.getJobIdsForGroup(group))
+    wall, jobs = best
+    infos = [tracker.getJobInfo(j) for j in jobs]
+    stages = sum(len(i.stageIds) for i in infos if i is not None)
+    return dict(entry, wall_s=round(wall, 3), jobs=len(jobs), stages=stages)
+
+
+def check_plan_shape(entries: dict[str, dict], sf, path: Path | None = None) -> None:
+    """Compare each entry's gated counts with the ledger's entry for the
+    same query at the same sf. A query missing from the ledger, or a
+    ledger at another sf, is recorded without comparison. Any count
+    above the ledger exits 2 naming the query and the counter; otherwise
+    the ledger is rewritten with this run's entries."""
+    path = path or Path(__file__).resolve().parent / SELF_RECORDING
+    ledger = json.loads(path.read_text()) if path.exists() else {}
+    prior = ledger["queries"] if ledger.get("sf") == sf else {}
+    grown = [
+        f"{name}: {key} {prior[name][key]} -> {entry[key]}"
+        for name, entry in entries.items() if name in prior
+        for key in GATED if entry[key] > prior[name].get(key, entry[key])
+    ]
+    if grown:
+        print(f"BENCH PLAN-SHAPE REGRESSION (gated counts above {path.name}; "
+              "an intended rise is a reviewed edit of that file):",
+              file=sys.stderr)
+        for line in grown:
+            print(f"  {line}", file=sys.stderr)
+        raise SystemExit(2)
+    payload = {"sf": sf, "queries": {**prior, **entries}}
+    path.write_text(json.dumps(payload, indent=1, sort_keys=True) + "\n")
+
+
 def main() -> None:
-    from arango_clickhouse_replica_spark.queries import QUERIES
     from arango_clickhouse_replica_spark.session import get_spark
 
-    # SPARK_GRAFT_ONLY=a,b,c runs an isolated subset (fresh JVM, no
-    # in-suite neighbors) — the instrument for confirming whether a
-    # full-suite regression is contention or real. Subset runs never
-    # touch BENCH_SELF.json and skip the regression guard.
     only = os.environ.get("SPARK_GRAFT_ONLY")
-    headline = HEADLINE
-    subset_run = False
-    if only:
-        wanted = [n.strip() for n in only.split(",") if n.strip()]
-        # Fail fast on unknown names: the fallback path used to hand
-        # unvalidated names straight to QUERIES[name], so a typo raised
-        # a bare KeyError mid-run and a typo mixed with one valid
-        # headline name was silently dropped.
-        unknown = [n for n in wanted if n not in QUERIES]
-        if unknown:
-            raise SystemExit(
-                "SPARK_GRAFT_ONLY: unknown query name(s): "
-                + ", ".join(sorted(unknown))
-            )
-        non_headline = [n for n in wanted if n not in HEADLINE]
-        if non_headline:
-            print(
-                "bench: note — not in HEADLINE (timed anyway): "
-                + ", ".join(sorted(non_headline)),
-                file=sys.stderr,
-            )
-        headline = wanted
-        subset_run = True
+    names = [n.strip() for n in only.split(",") if n.strip()] if only else HEADLINE
+    unknown = sorted(n for n in names if n not in QUERIES)
+    if unknown:
+        raise SystemExit("SPARK_GRAFT_ONLY: unknown query name(s): "
+                         + ", ".join(unknown))
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -311,491 +365,26 @@ def main() -> None:
         "overwrite"
     ).save()
 
-    # Each query runs three times: the first pass absorbs plan compilation
-    # + codegen + JIT (one-time costs that dwarf sf0.1 execution and add
-    # 30-50% run-to-run noise); the min of the two steady-state passes is
-    # the throughput figure a long-running engine actually delivers —
-    # min-of-two rejects one-off GC/scheduler hiccups that a single timed
-    # pass records as a phantom regression (observed 2-3x inflation on a
-    # query 40 deep into the run).
-    timings: dict[str, float] = {}
-    for name in headline:
-        QUERIES[name].build(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            QUERIES[name].build(spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
+    entries = {}
+    for name in names:
+        entries[name] = measure(spark, name)
+        print(f"bench {name}: " + " ".join(
+            f"{k}={v}" for k, v in entries[name].items()), file=sys.stderr)
 
     m = re.search(r"sf([\d.]+)", SF_DIR)
     sf = float(m.group(1)) if m else None
     # Compact machine line: the driver records only a ~2000-char stdout
-    # tail, and a full per-query dict for ~100 queries overflows it (the
-    # recording came back "parsed": null for three rounds). Emit totals +
-    # the worst-3 queries here; the COMPLETE per-query timings are
-    # persisted to BENCH_SELF.json by the regression guard below.
-    worst3 = (
-        dict(timings) if subset_run
-        else dict(sorted(timings.items(), key=lambda kv: -kv[1])[:3])
-    )
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total_runtime",
-                "value": round(sum(timings.values()), 3),
-                "unit": "sec",
-                "n": len(timings),
-                "queries": worst3,
-                "full_timings_file": SELF_RECORDING,
-                "sf": sf,
-            }
-        )
-    )
-
-    def rerun(name: str) -> float:
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            QUERIES[name].build(spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 3)
-
-    if not subset_run:
-        _check_regressions(timings, sf, rerun)
-
-
-SELF_RECORDING = "BENCH_SELF.json"
-
-# In-suite confirm re-runs are bounded: the top offenders by excess
-# ratio get a fresh min-of-two; the rest defer to the isolated triage
-# (bounded too — one fresh-JVM subset run). Keeps a genuinely broken
-# round failing fast without abandoning confirmation when many queries
-# flag at once (the r12 loaded-box failure mode).
-_CONFIRM_CAP = 8
-
-# When persisting a clean run's timings as the next anchor, a query that
-# already had an anchor may not have its bar loosened by in-suite noise:
-# recorded growth is capped at prior * max(spin_ratio, _ANCHOR_GROWTH_CAP)
-# (deliberate cost increases are documented in bench_expected.json, which
-# dominates the merged bar regardless of the recorded anchor). r13 lesson:
-# suite-ordering noise baked 2-3x bars into BENCH_SELF for ~5 untouched
-# short queries, degrading first-pass flag sensitivity.
-_ANCHOR_GROWTH_CAP = 1.3
-
-
-def _is_real(t: float, a: float) -> bool:
-    """The single regression predicate: >1.5x over the bar AND >1s
-    absolute. Shared by the flag pass, the confirm re-run, and the
-    isolated triage so a threshold edit cannot desynchronize the printed
-    triage verdict from the cleared-set derivation."""
-    return t > 1.5 * a and t - a > 1.0
-
-
-def _calibration_spin() -> float:
-    """Fixed pure-Python CPU probe (min of 3): a deterministic workload
-    whose runtime tracks the box's effective single-core speed. Recorded
-    alongside every timing baseline so the regression guard can tell "the
-    box is slower today" (uniform spin ratio) from "this query got
-    slower" (spin unchanged) — the r11 drift triage found the whole
-    suite inflated 1.2-2.5x purely from host state, which per-query
-    gates cannot distinguish from a code regression without this."""
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        acc = 0
-        for i in range(4_000_000):
-            acc += i
-        best = min(best, time.perf_counter() - t0)
-    return best
-
-
-def _persist_self_recording(
-    timings: dict[str, float],
-    sf,
-    prior_raw: dict[str, float] | None = None,
-    spin_ratio: float = 1.0,
-    unconfirmed_cleared: set[str] | frozenset[str] = frozenset(),
-) -> None:
-    """Record this run's full per-query timings in-repo. The driver's
-    BENCH_r*.json keeps only a 2000-char stdout tail, which stopped
-    parsing once the headline set grew past ~60 queries — anchoring the
-    regression guard to a stale round. This file is the guard's
-    preferred anchor: always complete, always the last CLEAN run (noisy
-    or regressed runs never overwrite it).
-
-    Anchor hygiene (r13 lesson — suite noise loosened bars 2-3x on
-    untouched queries): a query with a prior anchor persists at most
-    prior * max(spin_ratio, 1.3); an offender cleared WITHOUT an
-    in-suite confirm (isolated-triage / uniform-contention-escape) keeps
-    its prior anchor outright — its suite timing was, by the clearing
-    evidence itself, contention-inflated."""
-    path = Path(__file__).resolve().parent / SELF_RECORDING
-    if prior_raw:
-        cap = min(max(spin_ratio, _ANCHOR_GROWTH_CAP), 3.0)
-        recorded = {}
-        for name, t in timings.items():
-            prev = prior_raw.get(name)
-            if prev is None:
-                recorded[name] = t
-            elif name in unconfirmed_cleared:
-                recorded[name] = min(t, prev)
-            else:
-                recorded[name] = min(t, prev * cap)
-        timings = recorded
-    payload = {"sf": sf, "queries": timings, "recorded_at": time.time(),
-               "calibration_spin_sec": _calibration_spin()}
-    path.write_text(json.dumps(payload, indent=1, sort_keys=True) + "\n")
-
-
-def _previous_round_spin(sf) -> float | None:
-    """The calibration spin recorded with the current BENCH_SELF.json
-    baseline (None when absent — pre-r11 recordings)."""
-    path = Path(__file__).resolve().parent / SELF_RECORDING
-    try:
-        data = json.loads(path.read_text())
-    except (OSError, json.JSONDecodeError):
-        return None
-    if data.get("sf") != sf:
-        return None
-    spin = data.get("calibration_spin_sec")
-    return float(spin) if isinstance(spin, (int, float)) and spin > 0 else None
-
-
-def _previous_round_timings(sf) -> tuple[str, dict[str, float]] | None:
-    """Preferred anchor: the in-repo BENCH_SELF.json from the last clean
-    run (complete, same-box). Fallback: newest driver-recorded
-    BENCH_r*.json at the same SF — newest-first so one off-scale
-    recording doesn't disable the guard."""
-    here = Path(__file__).resolve().parent
-    self_path = here / SELF_RECORDING
-    if self_path.exists():
-        try:
-            data = json.loads(self_path.read_text())
-            if data.get("sf") == sf and isinstance(data.get("queries"), dict):
-                return SELF_RECORDING, data["queries"]
-        except (OSError, json.JSONDecodeError):
-            pass
-    rounds: list[tuple[int, Path]] = []
-    for p in here.glob("BENCH_r*.json"):
-        m = re.search(r"BENCH_r(\d+)\.json", p.name)
-        if m:
-            rounds.append((int(m.group(1)), p))
-    for _, path in sorted(rounds, reverse=True):
-        try:
-            data = json.loads(path.read_text())
-        except (OSError, json.JSONDecodeError):
-            continue
-        if isinstance(data.get("parsed"), dict):  # driver-wrapped shape
-            data = {"sf": data.get("sf"), **data["parsed"]}
-        if data.get("sf") == sf and isinstance(data.get("queries"), dict):
-            return path.name, data["queries"]
-    return None
-
-
-def _isolated_triage(
-    offenders: list[str], sf, suite_timings: dict[str, float] | None = None,
-) -> dict[str, tuple[float, float]]:
-    """One fresh-JVM subset bench over the surviving offenders, compared
-    against the ISOLATED per-query anchors in bench_family_anchors.json
-    (>1.5x anchor and >1s = real — reproduces without suite contention).
-    Returns {name: (isolated_sec, scaled_anchor_sec)} for every offender
-    that HAS an anchor and produced a timing — the caller derives the
-    cleared/real verdicts (and the uniform-contention escape) from the
-    ratios. Offenders with no anchor are absent from the result and stay
-    flagged. Empty on any subprocess/parse problem (fail-safe: never
-    clears on error).
-
-    Contamination defense (r14): a fresh-JVM isolated run cannot be
-    slower than the loaded in-suite run for any CODE reason — when the
-    isolated re-time exceeds 2x the suite timing, the subset run itself
-    hit a steal burst (observed: suite 3.8s, isolated 13.2s minutes
-    apart on a bursty host — the r12 114s-artifact class). The subset
-    is retried once, and each offender's verdict evidence is
-    min(isolated tries, in-suite timing): steal only ever inflates, so
-    the minimum of independent measurements is the steal-resistant
-    estimator, while a genuine regression inflates every one of them."""
-    here = Path(__file__).resolve().parent
-    anchors_path = here / "bench_family_anchors.json"
-    if not anchors_path.exists():
-        return {}
-    try:
-        book = json.loads(anchors_path.read_text())
-        anchors = {n: float(s) for fam in book.get("families", {}).values()
-                   for n, s in fam.items()}
-        spin_a = book.get("calibration_spin_sec")
-        if isinstance(spin_a, (int, float)) and spin_a > 0:
-            ratio = _calibration_spin() / float(spin_a)
-            if ratio > 1.05:
-                scale = min(ratio, 3.0)
-                print(f"BENCH CALIBRATION (isolated): spin ratio "
-                      f"{ratio:.2f}x vs anchors — scaling by {scale:.2f}x",
-                      file=sys.stderr)
-                anchors = {k: v * scale for k, v in anchors.items()}
-    except (OSError, json.JSONDecodeError, TypeError, ValueError):
-        return {}
-    if book.get("sf") not in (SF_DIR, None):
-        return {}
-    with_anchor = [n for n in offenders if n in anchors]
-    if not with_anchor:
-        return {}
-    import subprocess
-
-    env = dict(os.environ,
-               SPARK_GRAFT_ONLY=",".join(with_anchor),
-               SPARK_GRAFT_NO_REGRESSION_CHECK="1")
-
-    def run_subset() -> dict[str, float] | None:
-        try:
-            out = subprocess.run(
-                [sys.executable, str(here / "bench.py")],
-                env=env, capture_output=True, text=True, check=True,
-                timeout=900,
-            ).stdout
-            for line in reversed(out.splitlines()):
-                line = line.strip()
-                if line.startswith("{"):
-                    return {k: float(v)
-                            for k, v in json.loads(line)["queries"].items()}
-            return None
-        except (subprocess.SubprocessError, OSError, json.JSONDecodeError,
-                KeyError, ValueError):
-            return None
-
-    iso = run_subset()
-    if iso is None:
-        return {}
-    suite = suite_timings or {}
-    contaminated = [n for n in with_anchor
-                    if n in iso and n in suite and iso[n] > 2 * suite[n]]
-    if contaminated:
-        print(
-            "BENCH ISOLATED: steal-burst contamination suspected "
-            "(isolated > 2x the loaded in-suite time) for "
-            + ", ".join(f"{n} ({iso[n]:.2f}s vs suite {suite[n]:.2f}s)"
-                        for n in contaminated)
-            + " — retrying the subset once",
-            file=sys.stderr,
-        )
-        retry = run_subset()
-        if retry:
-            iso = {n: min(iso[n], retry[n]) if n in retry else iso[n]
-                   for n in iso}
-    results: dict[str, tuple[float, float]] = {}
-    for n in with_anchor:
-        t, a = iso.get(n), anchors[n]
-        if t is None:
-            continue
-        if n in suite:
-            t = min(t, suite[n])
-        verdict = ("REAL (reproduces isolated)" if _is_real(t, a)
-                   else "cleared (contention)")
-        print(f"BENCH ISOLATED {n}: {t:.2f}s vs isolated anchor "
-              f"{a:.2f}s -> {verdict}", file=sys.stderr)
-        results[n] = (t, a)
-    return results
-
-
-def _check_regressions(timings: dict[str, float], sf, rerun=None) -> None:
-    """Per-query regression guard vs the last clean recorded bench:
-    >1.5x slower AND >1s absolute (run-to-run noise on a loaded box is
-    ±40%, and deliberate small trade-offs — e.g. adding a guard stage —
-    should not trip it) fails the run AFTER the JSON line is printed,
-    naming the offenders. A SINGLE offender gets one confirm re-run
-    before failing — one noisy query must not fail a round (round-5
-    lesson: a phantom 2.58s-vs-1.36s flag on an untouched query).
-    SPARK_GRAFT_NO_REGRESSION_CHECK=1 skips."""
-    if os.environ.get("SPARK_GRAFT_NO_REGRESSION_CHECK"):
-        return
-    if os.environ.get("SPARK_GRAFT_REBASE"):
-        # Post-triage rebase: the mechanical instrument (family-anchor
-        # isolated re-check + code-diff audit) ruled the current gap
-        # environmental; accept THIS run as the new baseline so future
-        # gates compare within the same box era. Use only after a
-        # documented triage (docs/SCALING.md records each use).
-        print("BENCH REBASE: persisting this run as the new baseline "
-              "(gate skipped by explicit SPARK_GRAFT_REBASE)",
-              file=sys.stderr)
-        _persist_self_recording(timings, sf)
-        return
-    prev = _previous_round_timings(sf)
-    if prev is None:
-        _persist_self_recording(timings, sf)
-        return
-    src, old = prev
-    # Unscaled prior anchors (before spin scaling and bench_expected
-    # merging) — the persist-time growth cap compares against these, and
-    # the uniform-contention escape only applies to queries that existed
-    # in them (a brand-new query's only bar comes from bench_expected;
-    # escape-clearing it would wave through a regression in exactly the
-    # round that introduced the code).
-    prior_raw = dict(old)
-    # Box-speed calibration: if the baseline recorded its spin probe,
-    # scale its per-query bars by today's spin ratio (clamped to [1, 3])
-    # so a uniformly slower box does not read as N code regressions. A
-    # real regression still trips: it exceeds even the scaled bar.
-    spin_old = _previous_round_spin(sf)
-    scale = 1.0
-    spin_ratio = 1.0
-    if spin_old:
-        ratio = _calibration_spin() / spin_old
-        spin_ratio = ratio
-        if ratio > 1.05:
-            scale = min(ratio, 3.0)
-            print(f"BENCH CALIBRATION: box spin ratio {ratio:.2f}x vs "
-                  f"baseline — scaling per-query bars by {scale:.2f}x",
-                  file=sys.stderr)
-            old = {k: v * scale for k, v in old.items()}
-    # bench_expected.json records INTENTIONAL per-query baselines (e.g. a
-    # query that deliberately gained a guard stage); the larger of the
-    # recorded round time and the documented expectation is the bar.
-    # Expectations were measured on SOME box too, so the spin scale
-    # applies to them as well (r11 ADVICE: an unscaled expectation can
-    # dominate the merged bar and false-trip on a uniformly slower box).
-    expected_path = Path(__file__).resolve().parent / "bench_expected.json"
-    if expected_path.exists():
-        try:
-            for name, secs in json.loads(expected_path.read_text()).items():
-                # skip non-numeric entries (e.g. the "_comment" key) without
-                # aborting the rest of the expectations
-                if isinstance(secs, (int, float)):
-                    old[name] = max(old.get(name, 0.0), scale * float(secs))
-        except (json.JSONDecodeError, TypeError, ValueError):
-            pass
-    compared = [name for name in timings if name in old]
-    offenders = [name for name in compared if _is_real(timings[name], old[name])]
-    if not offenders:
-        _persist_self_recording(timings, sf, prior_raw, spin_ratio)
-        return
-    # A code regression hits the queries the change touched; a noisy
-    # neighbor inflates EVERYTHING uniformly (observed: untouched queries
-    # 2-13x slower under external box load). If most compared queries
-    # inflated >1.5x at once — including ones below the absolute-seconds
-    # floor — report environmental noise, not failure.
-    inflated = [n for n in compared if timings[n] > 1.5 * old[n]]
-    if len(inflated) > len(compared) // 2:
-        print(
-            "BENCH NOISE (most queries inflated — box under external "
-            "load, re-run to compare):",
-            file=sys.stderr,
-        )
-        for n in offenders:
-            print(f"  {n}: {timings[n]:.2f}s vs {old[n]:.2f}s in {src}", file=sys.stderr)
-        return
-    # An offender could be a transient hiccup the min-of-two passes
-    # didn't reject (GC pause spanning both timed runs; 130+ accumulated
-    # plans pressure the heap late in the run — measured: queries flagged
-    # 2.3-2.6x deep in a full run re-time at 1.2-1.5x in isolation).
-    # Confirm the WORST offenders (ranked by excess ratio over the bar)
-    # with a fresh min-of-two, bounded at _CONFIRM_CAP so a genuinely
-    # broken round still fails fast; offenders past the cap skip the
-    # in-suite confirm and go STRAIGHT to the isolated triage. Pre-r13
-    # the whole confirm path was gated on len(offenders) <= 8, which
-    # inverted the guard's value: a uniformly loaded box — exactly when
-    # many queries flag together and confirmation matters most — tripped
-    # the cap and the guard exited rc=2 with zero confirmation (the r12
-    # rc=2: all 12 correlated flags cleared at 0.9-1.35x of their
-    # isolated anchors when the triage was finally run by hand).
-    if rerun is not None:
-        ranked = sorted(offenders, key=lambda n: timings[n] / old[n],
-                        reverse=True)
-        to_confirm = ranked[:_CONFIRM_CAP]
-        deferred = ranked[_CONFIRM_CAP:]
-        confirmed = []
-        for name in to_confirm:
-            confirm = rerun(name)
-            print(
-                f"BENCH CONFIRM {name}: {timings[name]:.2f}s flagged, "
-                f"re-run {confirm:.2f}s vs {old[name]:.2f}s in {src}",
-                file=sys.stderr,
-            )
-            timings = dict(timings, **{name: confirm})
-            if _is_real(confirm, old[name]):
-                confirmed.append(name)
-        if deferred:
-            print(
-                f"BENCH CONFIRM: {len(deferred)} offenders past the "
-                f"{_CONFIRM_CAP}-confirm cap defer to isolated triage: "
-                + ", ".join(deferred),
-                file=sys.stderr,
-            )
-        survivors = confirmed + deferred
-        if not survivors:
-            _persist_self_recording(timings, sf, prior_raw, spin_ratio)
-            return
-        # r11 (VERDICT r10 item 5): the mechanical contention-vs-real
-        # triage. An in-suite confirm re-run still shares the loaded JVM
-        # (130+ accumulated plans, GC pressure); the r9->r10 drift was
-        # resolved by re-timing offenders ISOLATED — fresh JVM, family
-        # neighbors only — against isolated anchors. bench_family_anchors
-        # .json (tools/family_anchors.py refresh) records those anchors;
-        # when present, survivors get ONE isolated subset run compared
-        # apples-to-apples before the round fails.
-        triaged = _isolated_triage(survivors, sf, timings)
-        cleared = {n for n, (t, a) in triaged.items() if not _is_real(t, a)}
-        remaining = [n for n in survivors if n not in cleared]
-        # Uniform-contention escape (r12 VERDICT item 1): when the box is
-        # measurably slow (spin ratio > 1.2) AND >=80% of the anchored
-        # flags cleared at <=1.35x of their isolated anchors, the residue
-        # of flags that simply HAVE no isolated anchor is presumed
-        # contention too — the evidence says the whole flag set was box
-        # load. A flag that REPRODUCED >1.5x in the isolated run is never
-        # cleared by this escape: a genuine regression still fails.
-        escape_cleared: set[str] = set()
-        if remaining and spin_ratio > 1.2 and triaged:
-            mild = [n for n, (t, a) in triaged.items() if t <= 1.35 * a]
-            # A query absent from the previous round's anchors is NEW
-            # this round: its only bar came from bench_expected.json and
-            # its code has never been measured clean — the escape must
-            # not wave it through (r13 ADVICE), so it stays flagged.
-            no_anchor = [n for n in remaining
-                         if n not in triaged and n in prior_raw]
-            new_this_round = [n for n in remaining
-                              if n not in triaged and n not in prior_raw]
-            if new_this_round:
-                print(
-                    "BENCH ESCAPE EXCLUSION: new-this-round flags keep "
-                    "failing (no prior clean measurement): "
-                    + ", ".join(new_this_round),
-                    file=sys.stderr,
-                )
-            if no_anchor and len(mild) >= 0.8 * len(triaged):
-                print(
-                    "BENCH UNIFORM-CONTENTION ESCAPE: spin ratio "
-                    f"{spin_ratio:.2f}x > 1.2 and {len(mild)}/{len(triaged)}"
-                    " anchored flags cleared at <=1.35x isolated — "
-                    "clearing anchor-less flags as contention: "
-                    + ", ".join(no_anchor),
-                    file=sys.stderr,
-                )
-                escape_cleared = set(no_anchor)
-                remaining = [n for n in remaining
-                             if n in triaged or n in new_this_round]
-        if not remaining:
-            # Triage/escape-cleared offenders were cleared WITHOUT an
-            # in-suite confirm: their suite timings are, by that very
-            # evidence, contention-inflated — restore their prior
-            # anchors instead of persisting the inflated numbers
-            # (r13 ADVICE: spin scaling only widens bars, so an inflated
-            # anchor would mask a real regression up to ~3x later).
-            _persist_self_recording(
-                timings, sf, prior_raw, spin_ratio,
-                unconfirmed_cleared=cleared | escape_cleared,
-            )
-            return
-        offenders = remaining
-        banner = "BENCH REGRESSION (>1.5x and >1s, confirmed):"
-    else:
-        banner = ("BENCH REGRESSION (>1.5x and >1s, NOT individually "
-                  "confirmed — no rerun hook):")
-    print(banner, file=sys.stderr)
-    for n in offenders:
-        print(f"  {n}: {timings[n]:.2f}s vs {old[n]:.2f}s in {src}", file=sys.stderr)
-    raise SystemExit(2)
+    # tail, so print totals and the worst three; every entry is in the
+    # ledger file.
+    timings = {n: e["wall_s"] for n, e in entries.items()}
+    worst3 = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:3])
+    print(json.dumps({
+        "metric": "headline_queries_total_runtime",
+        "value": round(sum(timings.values()), 3), "unit": "sec",
+        "n": len(timings), "queries": worst3,
+        "full_timings_file": SELF_RECORDING, "sf": sf,
+    }))
+    check_plan_shape(entries, sf)
 
 
 if __name__ == "__main__":

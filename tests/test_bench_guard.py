@@ -1,447 +1,132 @@
-"""Regression-guard behavior of bench.py (no Spark needed).
+"""bench.py's plan-shape gate: the ledger in BENCH_SELF.json.
 
-Round-5 lesson: the driver's BENCH_r*.json keeps only a 2000-char
-stdout tail, which stopped parsing once the headline set grew — the
-guard silently anchored to a 2-round-old recording and one noisy query
-produced a phantom rc=2. The guard now (a) persists its own complete
-timings to BENCH_SELF.json after every clean run and prefers that as
-the anchor, and (b) confirm-reruns a single offender before failing.
+All but the last test run without Spark, on hand-written ledger entries
+and plan text. The last builds one query at sf0.001 to show that
+undoing its localCheckpoints raises a gated count.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
-from pathlib import Path
 
 import pytest
 
 import bench
+from arango_clickhouse_replica_spark.plans.capture import plan_shape
 
 
-@pytest.fixture
-def in_tmp_repo(tmp_path, monkeypatch):
-    """Point bench's Path(__file__) anchor at a temp dir."""
-    fake = tmp_path / "bench.py"
-    fake.write_text("# anchor\n")
-    monkeypatch.setattr(bench, "__file__", str(fake))
-    return tmp_path
+def _entry(**counts):
+    entry = {key: 1 for key in bench.GATED}
+    entry.update(counts, wall_s=1.0, jobs=3, stages=4)
+    return entry
 
 
-def test_self_recording_preferred_over_driver_rounds(in_tmp_repo):
-    (in_tmp_repo / "BENCH_r03.json").write_text(
-        json.dumps({"sf": 0.1, "queries": {"q1": 9.0}})
-    )
-    (in_tmp_repo / bench.SELF_RECORDING).write_text(
-        json.dumps({"sf": 0.1, "queries": {"q1": 1.0}})
-    )
-    src, old = bench._previous_round_timings(0.1)
-    assert src == bench.SELF_RECORDING
-    assert old == {"q1": 1.0}
+def _ledger(path, sf, queries):
+    path.write_text(json.dumps({"sf": sf, "queries": queries}))
 
 
-def test_unparseable_driver_tail_skipped(in_tmp_repo):
-    # the r4/r5 failure mode: driver file holds a truncated tail
-    (in_tmp_repo / "BENCH_r05.json").write_text('{"parsed": null, "tail": "...')
-    (in_tmp_repo / "BENCH_r03.json").write_text(
-        json.dumps({"sf": 0.1, "queries": {"q1": 2.0}})
-    )
-    src, old = bench._previous_round_timings(0.1)
-    assert src == "BENCH_r03.json"
-    assert old == {"q1": 2.0}
-
-
-def test_clean_run_persists_self_recording(in_tmp_repo):
-    bench._check_regressions({"q1": 1.0, "q2": 2.0}, 0.1, rerun=None)
-    data = json.loads((in_tmp_repo / bench.SELF_RECORDING).read_text())
+def test_clean_run_persists_self_recording(tmp_path):
+    """Equal counts pass and the run rewrites the ledger (wall time, jobs
+    and stages are recorded whatever they are)."""
+    path = tmp_path / bench.SELF_RECORDING
+    _ledger(path, 0.1, {"q1": _entry(), "q2": _entry()})
+    run = {"q1": dict(_entry(), wall_s=9.0, jobs=30)}
+    bench.check_plan_shape(run, 0.1, path)
+    data = json.loads(path.read_text())
     assert data["sf"] == 0.1
-    assert data["queries"] == {"q1": 1.0, "q2": 2.0}
+    assert data["queries"]["q1"] == run["q1"]
+    assert data["queries"]["q2"] == _entry()  # not run this time: kept
 
 
-def test_single_offender_cleared_by_confirm_rerun(in_tmp_repo):
-    (in_tmp_repo / bench.SELF_RECORDING).write_text(
-        json.dumps({"sf": 0.1, "queries": {"q1": 1.0, "q2": 1.0, "q3": 1.0}})
-    )
-    reran = []
-
-    def rerun(name):
-        reran.append(name)
-        return 1.1  # transient hiccup: fresh run is back to normal
-
-    # q1 flagged (3.0 > 1.5x and >1s over), q2/q3 quiet -> not box noise
-    bench._check_regressions({"q1": 3.0, "q2": 1.0, "q3": 1.0}, 0.1, rerun)
-    assert reran == ["q1"]
-    # the persisted anchor carries the CONFIRMED (clean) number
-    data = json.loads((in_tmp_repo / bench.SELF_RECORDING).read_text())
-    assert data["queries"]["q1"] == 1.1
-
-
-def test_single_offender_confirmed_regression_fails(in_tmp_repo):
-    (in_tmp_repo / bench.SELF_RECORDING).write_text(
-        json.dumps({"sf": 0.1, "queries": {"q1": 1.0, "q2": 1.0, "q3": 1.0}})
-    )
-    before = (in_tmp_repo / bench.SELF_RECORDING).read_text()
+@pytest.mark.parametrize("key", bench.GATED)
+def test_gated_count_rise_fails_naming_query_and_counter(tmp_path, capsys, key):
+    path = tmp_path / bench.SELF_RECORDING
+    _ledger(path, 0.1, {"q1": _entry(), "q2": _entry()})
+    before = path.read_text()
+    run = {"q1": _entry(), "q2": _entry(**{key: 2})}
     with pytest.raises(SystemExit) as exc:
-        bench._check_regressions(
-            {"q1": 3.0, "q2": 1.0, "q3": 1.0}, 0.1, rerun=lambda n: 3.1
-        )
+        bench.check_plan_shape(run, 0.1, path)
     assert exc.value.code == 2
-    # a regressed run must not overwrite the last-clean anchor
-    assert (in_tmp_repo / bench.SELF_RECORDING).read_text() == before
+    assert f"q2: {key} 1 -> 2" in capsys.readouterr().err
+    assert path.read_text() == before  # a failing run does not rebase
 
 
-def test_majority_inflation_is_noise_not_failure(in_tmp_repo):
-    (in_tmp_repo / bench.SELF_RECORDING).write_text(
-        json.dumps({"sf": 0.1, "queries": {"q1": 1.0, "q2": 1.0, "q3": 1.0}})
-    )
-    before = (in_tmp_repo / bench.SELF_RECORDING).read_text()
-    # everything inflated: box under load, no rc=2, anchor untouched
-    bench._check_regressions({"q1": 3.0, "q2": 2.9, "q3": 2.8}, 0.1, rerun=None)
-    assert (in_tmp_repo / bench.SELF_RECORDING).read_text() == before
+def test_gated_count_fall_is_recorded(tmp_path):
+    path = tmp_path / bench.SELF_RECORDING
+    _ledger(path, 0.1, {"q1": _entry(exchanges=5)})
+    bench.check_plan_shape({"q1": _entry(exchanges=3)}, 0.1, path)
+    assert json.loads(path.read_text())["queries"]["q1"]["exchanges"] == 3
 
 
-def test_multi_offenders_each_confirmed_before_failing(in_tmp_repo):
-    """Deep-in-run contention can flag SEVERAL untouched queries at once
-    (measured: 2.3-2.6x flags that re-time at 1.2-1.5x in isolation) —
-    every offender gets an isolated confirm re-run; only confirmed ones
-    fail the round."""
-    (in_tmp_repo / bench.SELF_RECORDING).write_text(
-        json.dumps(
-            {"sf": 0.1, "queries": {f"q{i}": 1.0 for i in range(1, 8)}}
-        )
-    )
-    timings = {f"q{i}": 1.0 for i in range(1, 8)}
-    timings["q1"] = 3.0
-    timings["q2"] = 3.0
-    # both clear on re-run: anchor refreshed with the confirmed times
-    bench._check_regressions(dict(timings), 0.1, rerun=lambda n: 1.1)
-    recorded = json.loads((in_tmp_repo / bench.SELF_RECORDING).read_text())
-    assert recorded["queries"]["q1"] == 1.1
-
-    # one of two reproduces: the round still fails, naming the real one
-    with pytest.raises(SystemExit) as exc:
-        bench._check_regressions(
-            dict(timings), 0.1,
-            rerun=lambda n: 3.0 if n == "q1" else 1.0,
-        )
-    assert exc.value.code == 2
-
-    # no rerun hook available: multi-offenders still fail outright
-    with pytest.raises(SystemExit) as exc:
-        bench._check_regressions(dict(timings), 0.1, rerun=None)
-    assert exc.value.code == 2
+def test_query_missing_from_ledger_is_recorded_not_compared(tmp_path):
+    path = tmp_path / bench.SELF_RECORDING
+    _ledger(path, 0.1, {"q1": _entry()})
+    bench.check_plan_shape({"new": _entry(exchanges=99)}, 0.1, path)
+    assert json.loads(path.read_text())["queries"]["new"]["exchanges"] == 99
 
 
-def test_expected_overrides_lift_the_bar(in_tmp_repo):
-    (in_tmp_repo / bench.SELF_RECORDING).write_text(
-        json.dumps({"sf": 0.1, "queries": {"q1": 1.0, "q2": 1.0, "q3": 1.0}})
-    )
-    (in_tmp_repo / "bench_expected.json").write_text(
-        json.dumps({"_comment": "intentional", "q1": 2.5})
-    )
-    # 3.0 < 1.5 * 2.5 -> not an offender under the documented expectation
-    bench._check_regressions({"q1": 3.0, "q2": 1.0, "q3": 1.0}, 0.1, rerun=None)
+def test_sf_mismatch_is_recorded_not_compared(tmp_path):
+    path = tmp_path / bench.SELF_RECORDING
+    _ledger(path, 0.1, {"q1": _entry()})
+    run = {"q1": _entry(exchanges=99)}
+    bench.check_plan_shape(run, 0.001, path)
+    assert json.loads(path.read_text()) == {"sf": 0.001, "queries": run}
 
 
-def test_spin_calibration_scales_bars(in_tmp_repo, monkeypatch):
-    """A baseline recorded on a 2x-faster box (spin half of today's)
-    must not read as N regressions: the gate scales per-query bars by
-    the spin ratio, so uniform 1.9x timings pass — while a genuinely
-    5x-slower query still fails even on the scaled bar."""
-    (in_tmp_repo / "BENCH_SELF.json").write_text(json.dumps({
-        "sf": 0.1, "queries": {"q1": 2.0, "q2": 2.0, "q3": 0.2},
-        "calibration_spin_sec": 0.10,
-    }))
-    monkeypatch.setattr(bench, "_calibration_spin", lambda: 0.20)
-    # uniform 1.9x: would fail unscaled (>1.5x, >1s), passes scaled (2x)
-    bench._check_regressions(
-        {"q1": 3.8, "q2": 3.8, "q3": 0.38}, 0.1, rerun=None)
-    data = json.loads((in_tmp_repo / "BENCH_SELF.json").read_text())
-    assert data["queries"]["q1"] == 3.8  # persisted = accepted
-    assert data["calibration_spin_sec"] == 0.20
-
-    # a real regression exceeds even the scaled bar
-    (in_tmp_repo / "BENCH_SELF.json").write_text(json.dumps({
-        "sf": 0.1, "queries": {"q1": 2.0, "q2": 2.0, "q3": 2.0},
-        "calibration_spin_sec": 0.10,
-    }))
-    with pytest.raises(SystemExit):
-        bench._check_regressions(
-            {"q1": 10.0, "q2": 2.1, "q3": 2.1}, 0.1, rerun=lambda n: 10.0)
+def test_missing_ledger_is_created(tmp_path):
+    path = tmp_path / bench.SELF_RECORDING
+    bench.check_plan_shape({"q1": _entry()}, 0.1, path)
+    assert json.loads(path.read_text())["queries"] == {"q1": _entry()}
 
 
-def test_spin_calibration_scales_expected_bars(in_tmp_repo, monkeypatch):
-    """r11 advice: a documented bench_expected.json bar was measured on
-    SOME box too — on a 2x-slower box an expectation-dominated bar must
-    scale with the spin ratio instead of false-tripping the gate."""
-    (in_tmp_repo / "BENCH_SELF.json").write_text(json.dumps({
-        "sf": 0.1, "queries": {"q1": 0.5, "q2": 2.0, "q3": 2.0},
-        "calibration_spin_sec": 0.10,
-    }))
-    (in_tmp_repo / "bench_expected.json").write_text(
-        json.dumps({"q1": 2.5}))  # dominates q1's merged bar
-    monkeypatch.setattr(bench, "_calibration_spin", lambda: 0.20)
-    # q1 at 4.2s: fails the unscaled expectation (1.5 * 2.5 = 3.75),
-    # passes the spin-scaled one (1.5 * 2 * 2.5 = 7.5)
-    bench._check_regressions(
-        {"q1": 4.2, "q2": 3.8, "q3": 3.8}, 0.1, rerun=None)
+def test_plan_shape_counts_only_the_initial_plan_of_an_adapted_subtree():
+    plan = """AdaptiveSparkPlan isFinalPlan=false
++- HashAggregate(keys=[k#1], functions=[count(1)])
+   +- Exchange hashpartitioning(k#1, 4), ENSURE_REQUIREMENTS, [plan_id=7]
+      +- FileScan parquet [k#1] Batched: true
+AdaptiveSparkPlan isFinalPlan=true
++- == Final Plan ==
+   ResultQueryStage 1
+   +- *(2) SortMergeJoin [s#9], [s#29], LeftAnti
+      :- *(1) Sort [s#9 ASC NULLS FIRST], false, 0
+      :  +- ShuffleQueryStage 0
+      :     +- Exchange hashpartitioning(s#9, 4), ENSURE_REQUIREMENTS
+      :        +- *(1) Scan ExistingRDD[s#9]
+      +- ReusedExchange [s#29], Exchange hashpartitioning(s#9, 4)
++- == Initial Plan ==
+   BroadcastHashJoin [s#9], [s#29], LeftAnti, BuildRight, false
+   :- Scan ExistingRDD[s#9]
+   +- BroadcastExchange HashedRelationBroadcastMode(List(input[0]),false)
+      +- *(3) MapInPandas udf(s#29), [s#29]
+         +- FileScan parquet [s#29] Batched: true
+"""
+    assert plan_shape(plan) == {
+        "exchanges": 1, "broadcast_exchanges": 1, "scans": 2,
+        "sort_merge_joins": 0, "nested_loop_joins": 0, "python_udfs": 1,
+    }
 
 
-def test_many_correlated_offenders_triage_instead_of_cliff(
-    in_tmp_repo, monkeypatch
-):
-    """r12 VERDICT item 1: >8 offenders used to skip ALL confirmation and
-    exit rc=2 unconfirmed — on a uniformly loaded box (the common case
-    when many queries flag together) the guard gave up exactly when it
-    mattered. Now the top-8 by excess ratio get the in-suite confirm and
-    every survivor goes through the isolated triage; 12 correlated
-    contention flags end rc=0."""
-    queries = {f"q{i:02d}": 1.0 for i in range(30)}
-    (in_tmp_repo / bench.SELF_RECORDING).write_text(
-        json.dumps({"sf": 0.1, "queries": queries,
-                    "calibration_spin_sec": 0.10})
-    )
-    monkeypatch.setattr(bench, "_calibration_spin", lambda: 0.13)  # 1.3x box
-    timings = dict(queries)
-    flagged = [f"q{i:02d}" for i in range(12)]
-    for n in flagged:
-        timings[n] = 3.0  # > 1.5 * 1.3 scaled bar, > 1s over
+def test_noop_local_checkpoint_trips_the_gate(spark, sf_dir, tmp_path, monkeypatch):
+    """Undoing every localCheckpoint of a composed report inlines each
+    shared relation once per consumer: more exchanges and scans. That is
+    the regression the ledger exists to catch."""
+    name = "dedup_lsh_precision_report"
+    path = tmp_path / bench.SELF_RECORDING
+    _, counts = bench.shape_of(spark, name, sf_dir)
+    bench.check_plan_shape({name: counts}, 0.001, path)
 
-    reran = []
+    from pyspark.sql.classic.dataframe import DataFrame
 
-    def rerun(name):  # loaded box: in-suite confirm still inflated
-        reran.append(name)
-        return 2.9
-
-    triaged_with = {}
-
-    def fake_triage(offenders, sf, suite=None):
-        triaged_with.update({n: True for n in offenders})
-        # isolated run on the (briefly quiet) box: all near anchors
-        return {n: (1.2, 1.3) for n in offenders}
-
-    monkeypatch.setattr(bench, "_isolated_triage", fake_triage)
-    bench._check_regressions(timings, 0.1, rerun)
-    assert len(reran) == 8  # top-8 confirmed, not zero
-    assert sorted(triaged_with) == sorted(flagged)  # every flag triaged
-    # clean verdict persisted as the new anchor
-    data = json.loads((in_tmp_repo / bench.SELF_RECORDING).read_text())
-    assert data["queries"]["q20"] == 1.0
-
-
-def test_genuine_regression_still_fails_among_many_flags(
-    in_tmp_repo, monkeypatch
-):
-    """A single genuine 5x regression mixed into 12 correlated flags must
-    still fail rc=2: it reproduces in the isolated triage while the
-    contention flags clear."""
-    queries = {f"q{i:02d}": 1.0 for i in range(30)}
-    (in_tmp_repo / bench.SELF_RECORDING).write_text(
-        json.dumps({"sf": 0.1, "queries": queries,
-                    "calibration_spin_sec": 0.10})
-    )
-    monkeypatch.setattr(bench, "_calibration_spin", lambda: 0.13)
-    timings = dict(queries)
-    for i in range(12):
-        timings[f"q{i:02d}"] = 3.0
-    timings["q00"] = 5.0  # the genuine one: worst excess, confirmed first
-
-    def fake_triage(offenders, sf, suite=None):
-        return {n: ((5.0, 1.3) if n == "q00" else (1.2, 1.3))
-                for n in offenders}
-
-    monkeypatch.setattr(bench, "_isolated_triage", fake_triage)
-    with pytest.raises(SystemExit) as exc:
-        bench._check_regressions(
-            timings, 0.1,
-            rerun=lambda n: 5.0 if n == "q00" else 2.9,
-        )
-    assert exc.value.code == 2
-
-
-def test_uniform_contention_escape_clears_anchorless_flags(
-    in_tmp_repo, monkeypatch
-):
-    """When the box is measurably slow (spin > 1.2x) and >=80% of the
-    anchored flags cleared at <=1.35x isolated, flags with no isolated
-    anchor are presumed contention too — but only then: on a quiet box
-    the anchor-less flag still fails."""
-    queries = {f"q{i:02d}": 1.0 for i in range(30)}
-
-    def write_anchor(spin):
-        (in_tmp_repo / bench.SELF_RECORDING).write_text(
-            json.dumps({"sf": 0.1, "queries": queries,
-                        "calibration_spin_sec": spin})
-        )
-
-    timings = dict(queries)
-    for i in range(10):
-        timings[f"q{i:02d}"] = 3.2
-
-    def fake_triage(offenders, sf, suite=None):
-        # q09 has no family anchor; the other nine clear mildly
-        return {n: (1.2, 1.3) for n in offenders if n != "q09"}
-
-    monkeypatch.setattr(bench, "_isolated_triage", fake_triage)
-    monkeypatch.setattr(bench, "_calibration_spin", lambda: 0.13)
-
-    write_anchor(0.10)  # spin ratio 1.3 > 1.2 -> escape applies
-    bench._check_regressions(dict(timings), 0.1, rerun=lambda n: 3.1)
-
-    write_anchor(0.13)  # spin ratio 1.0 -> no escape, q09 fails
-    with pytest.raises(SystemExit) as exc:
-        bench._check_regressions(dict(timings), 0.1, rerun=lambda n: 3.1)
-    assert exc.value.code == 2
-
-
-def test_rebase_env_persists_without_gate(in_tmp_repo, monkeypatch):
-    """SPARK_GRAFT_REBASE=1 (post-triage use) accepts the run as the new
-    baseline even when it would fail the gate."""
-    (in_tmp_repo / "BENCH_SELF.json").write_text(json.dumps({
-        "sf": 0.1, "queries": {"q1": 1.0},
-    }))
-    monkeypatch.setenv("SPARK_GRAFT_REBASE", "1")
-    bench._check_regressions({"q1": 9.0}, 0.1, rerun=None)
-    data = json.loads((in_tmp_repo / "BENCH_SELF.json").read_text())
-    assert data["queries"]["q1"] == 9.0
-
-
-def test_noisy_clean_run_does_not_loosen_untouched_bars(
-    in_tmp_repo, monkeypatch
-):
-    """r13 VERDICT item 2: in-suite ordering noise inflated a handful of
-    untouched short queries just under the flag threshold (e.g. 1.45x),
-    and the clean-run persist baked those into BENCH_SELF — the next
-    round's flag bar was then ~2-3x the true cost. Persisted growth for
-    a previously-anchored query is now capped at prior * max(spin, 1.3)."""
-    (in_tmp_repo / bench.SELF_RECORDING).write_text(json.dumps({
-        "sf": 0.1, "queries": {"q1": 1.0, "q2": 1.0, "q3": 1.0},
-        "calibration_spin_sec": 0.10,
-    }))
-    monkeypatch.setattr(bench, "_calibration_spin", lambda: 0.10)
-    # q1 noisy at 1.45x (below the 1.5x flag bar): clean run, but the
-    # persisted anchor must not grow past 1.3x of the prior value
-    bench._check_regressions({"q1": 1.45, "q2": 1.0, "q3": 1.0}, 0.1,
-                             rerun=None)
-    data = json.loads((in_tmp_repo / bench.SELF_RECORDING).read_text())
-    assert data["queries"]["q1"] == pytest.approx(1.3)
-    assert data["queries"]["q2"] == 1.0
-    # a brand-new query (no prior anchor) records its first measurement
-    (in_tmp_repo / bench.SELF_RECORDING).write_text(json.dumps({
-        "sf": 0.1, "queries": {"q1": 1.0, "q2": 1.0, "q3": 1.0},
-        "calibration_spin_sec": 0.10,
-    }))
-    bench._check_regressions(
-        {"q1": 1.0, "q2": 1.0, "q3": 1.0, "q_new": 7.0}, 0.1, rerun=None)
-    data = json.loads((in_tmp_repo / bench.SELF_RECORDING).read_text())
-    assert data["queries"]["q_new"] == 7.0
-
-
-def test_triage_cleared_offender_restores_prior_anchor(
-    in_tmp_repo, monkeypatch
-):
-    """r13 ADVICE (medium): an offender cleared by the isolated triage
-    (never by an in-suite confirm) used to persist its contention-
-    inflated suite timing as the next anchor; spin scaling only widens
-    bars, so a later real regression up to ~3x passed silently. The
-    cleared offender now keeps its prior anchor."""
-    queries = {f"q{i:02d}": 1.0 for i in range(30)}
-    (in_tmp_repo / bench.SELF_RECORDING).write_text(json.dumps({
-        "sf": 0.1, "queries": queries, "calibration_spin_sec": 0.10,
-    }))
-    monkeypatch.setattr(bench, "_calibration_spin", lambda: 0.13)
-    timings = dict(queries)
-    flagged = [f"q{i:02d}" for i in range(12)]
-    for n in flagged:
-        timings[n] = 3.0
+    # As if the localCheckpoint calls were deleted from the code: nothing
+    # is checkpointed, so nothing is captured either.
+    monkeypatch.setattr(DataFrame, "localCheckpoint", lambda self, *a, **k: self)
     monkeypatch.setattr(
-        bench, "_isolated_triage",
-        lambda offenders, sf, suite=None: {n: (1.2, 1.3) for n in offenders})
-    # in-suite confirm still inflated (loaded box) -> triage clears all
-    bench._check_regressions(timings, 0.1, rerun=lambda n: 2.9)
-    data = json.loads((in_tmp_repo / bench.SELF_RECORDING).read_text())
-    for n in flagged:
-        assert data["queries"][n] == 1.0, n  # prior restored, not 2.9
-
-
-def test_escape_never_clears_new_this_round_queries(
-    in_tmp_repo, monkeypatch
-):
-    """r13 ADVICE: the uniform-contention escape cleared every
-    anchor-less flag — including queries added THIS round, whose only
-    bar came from bench_expected.json and whose code had never been
-    measured clean. A genuine regression in brand-new code on a loaded
-    box was auto-cleared in exactly the round that introduced it. New
-    queries are now excluded from the escape and keep failing."""
-    queries = {f"q{i:02d}": 1.0 for i in range(30)}
-    (in_tmp_repo / bench.SELF_RECORDING).write_text(json.dumps({
-        "sf": 0.1, "queries": queries, "calibration_spin_sec": 0.10,
-    }))
-    (in_tmp_repo / "bench_expected.json").write_text(
-        json.dumps({"q_new": 1.0}))
-    monkeypatch.setattr(bench, "_calibration_spin", lambda: 0.13)
-    timings = dict(queries)
-    for i in range(10):
-        timings[f"q{i:02d}"] = 3.2
-    timings["q_new"] = 3.2  # new this round, 3.2x its documented bar
-
-    def fake_triage(offenders, sf, suite=None):
-        # the new query has no isolated anchor; the rest clear mildly
-        return {n: (1.2, 1.3) for n in offenders if n != "q_new"}
-
-    monkeypatch.setattr(bench, "_isolated_triage", fake_triage)
+        bench, "captured_checkpoint_subtrees", lambda: contextlib.nullcontext([])
+    )
+    _, inlined = bench.shape_of(spark, name, sf_dir)
+    assert inlined["exchanges"] > counts["exchanges"]
+    assert inlined["scans"] > counts["scans"]
     with pytest.raises(SystemExit) as exc:
-        bench._check_regressions(dict(timings), 0.1, rerun=lambda n: 3.1)
+        bench.check_plan_shape({name: inlined}, 0.001, path)
     assert exc.value.code == 2
-
-    # same shape but the anchor-less flag EXISTED last round (q29 has a
-    # prior anchor, just no family anchor): escape still clears it
-    timings.pop("q_new")
-    timings["q29"] = 3.2
-    monkeypatch.setattr(
-        bench, "_isolated_triage",
-        lambda offenders, sf, suite=None: {n: (1.2, 1.3) for n in offenders
-                               if n != "q29"})
-    bench._check_regressions(dict(timings), 0.1, rerun=lambda n: 3.1)
-    data = json.loads((in_tmp_repo / bench.SELF_RECORDING).read_text())
-    assert data["queries"]["q29"] == 1.0  # escape-cleared: prior restored
-
-
-def test_isolated_triage_contamination_uses_min_and_retries(
-    in_tmp_repo, monkeypatch
-):
-    """r14: the isolated subset run itself can hit a steal burst (suite
-    3.8s -> isolated 13.2s minutes apart). A fresh-JVM run cannot be
-    slower than the loaded in-suite run for any CODE reason, so when
-    isolated > 2x suite the subset retries once and each verdict rides
-    min(isolated tries, suite) — steal only inflates, so the minimum of
-    independent measurements is the steal-resistant estimator."""
-    import subprocess
-    import types
-
-    (in_tmp_repo / "bench_family_anchors.json").write_text(json.dumps({
-        "sf": bench.SF_DIR,
-        "families": {"f": {"q1": 2.6}},
-        "calibration_spin_sec": 0.10,
-    }))
-    monkeypatch.setattr(bench, "_calibration_spin", lambda: 0.10)
-
-    calls = []
-
-    def fake_run(cmd, **kw):
-        calls.append(cmd)
-        t = 12.0 if len(calls) == 1 else 9.0  # both tries burst-inflated
-        return types.SimpleNamespace(
-            stdout=json.dumps({"queries": {"q1": t}}) + "\n")
-
-    monkeypatch.setattr(subprocess, "run", fake_run)
-    out = bench._isolated_triage(["q1"], 0.1, {"q1": 3.2})
-    assert len(calls) == 2  # contamination detected -> one retry
-    # evidence = min(12.0, 9.0, suite 3.2) = 3.2 -> clears vs 2.6 anchor
-    t, a = out["q1"]
-    assert t == 3.2 and a == 2.6
-    assert not bench._is_real(t, a)
-
-    # without suite context the raw isolated number stands (fail-safe)
-    calls.clear()
-    out = bench._isolated_triage(["q1"], 0.1, None)
-    assert bench._is_real(*out["q1"])

@@ -15,20 +15,23 @@ from arango_clickhouse_replica_spark.streaming.manager import (
     RestartPolicy,
     TableRunner,
 )
+from arango_clickhouse_replica_spark.streaming.merge_sink import BucketedMergeSink
 
 
-@pytest.fixture
-def runner(spark, sf_dir, tmp_path):
+def _runner(spark, sf_dir, tmp_path, merge_on_write=False):
     env_dir = str(tmp_path / "env")
     os.makedirs(env_dir)
     env = synthetic_event_envelopes(spark, sf_dir)
     env.write.mode("append").parquet(env_dir)
+    target = str(tmp_path / "target")
     pipe = CdcPipeline(
         spark,
-        target_dir=str(tmp_path / "target"),
+        target_dir=target,
         checkpoint_dir=str(tmp_path / "ckpt"),
         keys=["event_id"],
         initial_tick=0,
+        merge_sink=BucketedMergeSink(spark, target, keys=["event_id"], n_buckets=4)
+        if merge_on_write else None,
     )
     return TableRunner(
         name="events",
@@ -37,6 +40,11 @@ def runner(spark, sf_dir, tmp_path):
         envelope_schema=env.schema,
         policy=RestartPolicy(max_restarts=2, min_up_time_s=0.0, restart_delay_s=0.0),
     )
+
+
+@pytest.fixture
+def runner(spark, sf_dir, tmp_path):
+    return _runner(spark, sf_dir, tmp_path)
 
 
 def _wait_for_rows(pipe, timeout=60):
@@ -80,7 +88,10 @@ def test_supervisor_restarts_dead_query(spark, runner):
         runner.stop()
 
 
-def test_resync_rebuilds_and_restarts(spark, sf_dir, runner):
+@pytest.mark.parametrize("merge_on_write", [False, True],
+                         ids=["merge_on_read", "merge_on_write"])
+def test_resync_rebuilds_and_restarts(spark, sf_dir, tmp_path, merge_on_write):
+    runner = _runner(spark, sf_dir, tmp_path, merge_on_write)
     mgr = ReplicationManager(spark)
     mgr.add(runner)
     mgr.start_all()

@@ -11,10 +11,12 @@ whose single-partition window provably runs over a bounded relation
 explicit allowlist entry with the reason — additions must be deliberate.
 """
 
-from contextlib import contextmanager
-
 import pytest
 
+from arango_clickhouse_replica_spark.plans.capture import (
+    captured_checkpoint_subtrees,
+    whole_computation_plans,
+)
 from arango_clickhouse_replica_spark.queries import QUERIES
 
 _PLAN_MARKERS = ("+- ", ":- ")
@@ -812,56 +814,6 @@ BNLJ_ALLOWED = {
 }
 
 ALL_NAMES = sorted(QUERIES)
-
-
-@contextmanager
-def captured_checkpoint_subtrees():
-    """Capture the query-execution of every DataFrame at the moment it is
-    localCheckpoint()ed during a build.
-
-    The r14 optimization round materializes reused bounded intermediates
-    with eager localCheckpoints (guide §3.3/§5), which TRUNCATES the
-    final plan at a LogicalRDD — without this seam the scale-antipattern
-    lint would silently stop seeing everything upstream of each
-    checkpoint (and the transcendental-triage totality test would read
-    hidden-but-live sqrt lanes as stale rows). Linting the final plan
-    plus every captured subtree restores exactly the pre-checkpoint
-    coverage: the union of the texts is the whole computation."""
-    # Spark 4: pyspark.sql.DataFrame is a facade; live sessions hand out
-    # pyspark.sql.classic.dataframe.DataFrame, whose own localCheckpoint
-    # shadows the base — patch the concrete class.
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame
-    except ImportError:  # pre-4.0 layout
-        from pyspark.sql import DataFrame
-
-    captured: list = []
-    orig = DataFrame.localCheckpoint
-
-    def _capture(self, *a, **kw):
-        captured.append(self._jdf.queryExecution())
-        return orig(self, *a, **kw)
-
-    DataFrame.localCheckpoint = _capture
-    try:
-        yield captured
-    finally:
-        DataFrame.localCheckpoint = orig
-
-
-def whole_computation_plans(df, subtrees) -> tuple[str, str]:
-    """(physical, optimized) plan text of the final DataFrame plus every
-    checkpointed subtree — the full computation, checkpoint-proof."""
-    qe = df._jdf.queryExecution()
-    plan = "\n".join(
-        [qe.executedPlan().toString()]
-        + [c.executedPlan().toString() for c in subtrees]
-    )
-    opt = "\n".join(
-        [qe.optimizedPlan().toString()]
-        + [c.optimizedPlan().toString() for c in subtrees]
-    )
-    return plan, opt
 
 
 @pytest.mark.parametrize("name", ALL_NAMES)

@@ -35,17 +35,19 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from arango_clickhouse_replica_spark.plans.capture import (
+        captured_checkpoint_subtrees,
+        whole_computation_plans,
+    )
     from arango_clickhouse_replica_spark.queries import QUERIES
     from test_plan_quality import (
         BNLJ_ALLOWED,
         RAW_RANK_ALLOWED,
         SP_WINDOW_ALLOWED,
         TRANSCENDENTAL_TRIAGE,
-        captured_checkpoint_subtrees,
         raw_double_ranked_windows,
         transcendentals_in_plan,
         unbounded_single_partition_windows,
-        whole_computation_plans,
     )
 
     spark = (
@@ -60,9 +62,9 @@ def main() -> int:
     bad = []
     for name in sorted(QUERIES):
         try:
-            # r14: eager localCheckpoints truncate the plan — capture each
-            # checkpointed subtree and lint the WHOLE computation, exactly
-            # as tests/test_plan_quality.py does.
+            # Eager localCheckpoints truncate the plan: lint the final plan
+            # plus every checkpointed subtree, as tests/test_plan_quality.py
+            # does.
             with captured_checkpoint_subtrees() as subtrees:
                 df = QUERIES[name].build(spark, args.sf)
             plan, opt = whole_computation_plans(df, subtrees)
