@@ -191,6 +191,13 @@ def txn_atomic_split(
     transactions TERMINATING in the batch (broadcast joins); the
     deferred set is bounded by transactions in flight at the batch cut,
     never by stream volume.
+
+    This split stays lazy: each action over one of its outputs re-runs
+    the terminator aggregate and its broadcast. It suits whole-history
+    batch callers, whose terminators are too many to collect. The
+    streaming gate instead collects one micro-batch's terminators
+    (``collect_terminators``) and filters by membership
+    (``txn_split_by``), so each of its writes is a single narrow job.
     """
     is_doc = F.col(type_col).isin(UPSERT_DOCUMENT, REMOVE_DOCUMENT)
     docs = env.filter(is_doc)
@@ -221,3 +228,80 @@ def txn_atomic_split(
         "__tid", "__term"
     )
     return TxnSplit(applyable, deferred, aborted)
+
+
+def collect_terminators(
+    env: DataFrame,
+    *,
+    tid_col: str = "tid",
+    type_col: str = "type",
+    tick_col: str = "tick",
+) -> dict[str, int]:
+    """The last marker type (commit or abort) per ``tid`` in ``env``.
+
+    One narrow job collects the marker rows; the last one per tid is
+    picked on the driver exactly as ``txn_atomic_split``'s
+    ``max_by(type, (tick, type))`` does: the later tick wins, abort wins a
+    tie, and a null tick sorts first. The result is bounded by the
+    transactions terminating in ``env``. Keys are the tids cast to
+    string, which is how ``txn_split_by`` compares them.
+    """
+    markers = (
+        env.filter(F.col(type_col).isin(TXN_COMMIT, TXN_ABORT))
+        .filter(F.col(tid_col).isNotNull())
+        .select(
+            F.col(tid_col).cast("string"),
+            F.col(tick_col).cast("long"),
+            F.col(type_col).cast("int"),
+        )
+        .collect()
+    )
+    last: dict[str, tuple[bool, int, int]] = {}
+    for tid, tick, typ in markers:
+        key = (tick is not None, tick or 0, typ)
+        if tid not in last or key > last[tid]:
+            last[tid] = key
+    return {tid: key[2] for tid, key in last.items()}
+
+
+# Separates the values of a membership set on their way to the JVM.
+_SEP = "\x1f"
+
+
+def _isin(spark, col: Column, values: Sequence[str]) -> Column:
+    """``col IN values`` for string literals, built in a fixed number of
+    py4j calls. ``Column.isin(*values)`` makes one call per value
+    (~0.4 ms each), which a batch terminating thousands of transactions
+    would pay on every micro-batch; here the values cross as one string
+    and are split on the JVM. The optimizer turns the ``In`` into a hash
+    ``InSet``."""
+    if not values:
+        return F.lit(False)
+    if any(_SEP in v for v in values):
+        return col.isin(*values)
+    jvm = spark._jvm
+    parts = jvm.java.util.regex.Pattern.compile(_SEP).split(_SEP.join(values), -1)
+    return Column(col._jc.isin(jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(parts)))
+
+
+def txn_split_by(
+    env: DataFrame,
+    terminators: dict[str, int],
+    *,
+    tid_col: str = "tid",
+    type_col: str = "type",
+) -> TxnSplit:
+    """``txn_atomic_split`` with the terminators already in hand (from
+    ``collect_terminators``): each output is a narrow filter of ``env``'s
+    document rows by tid membership, with no join and no shuffle."""
+    spark = env.sparkSession
+    tid = F.col(tid_col)
+    tid_str = tid.cast("string")
+    committed = _isin(spark, tid_str, [t for t, ty in terminators.items() if ty == TXN_COMMIT])
+    terminated = _isin(spark, tid_str, list(terminators))
+    docs = env.filter(F.col(type_col).isin(UPSERT_DOCUMENT, REMOVE_DOCUMENT))
+    return TxnSplit(
+        applyable=docs.filter(tid.isNull() | committed),
+        deferred=docs.filter(tid.isNotNull() & ~terminated),
+        aborted=docs.filter(tid.isNotNull() & terminated & ~committed),
+    )

@@ -9,11 +9,15 @@ tick range per micro-batch: if a batch starts past the last position we
 processed (+1), the ticks in between were lost upstream (WAL truncation,
 envelope files deleted, broker retention).
 
-The check is two scalar aggregates per micro-batch (min/max of ``tick``)
-— a driver-side probe whose cost does not scale with the data, run on
-the RAW envelope batch before op-type filtering (transaction markers
-2200/2201/2202 occupy ticks too, so the raw stream is where tick space
-is dense).
+The check needs the batch's min and max ``tick`` and its row count,
+taken on the RAW envelope batch before op-type filtering (transaction
+markers 2200/2201/2202 occupy ticks too, so the raw stream is where tick
+space is dense). ``CdcPipeline`` observes them (``DataFrame.observe``)
+on the batch's first action instead of running a job of its own, and
+calls ``record`` once the batch is applied: the alarm fires after the
+batch's writes, and a batch whose write raises records nothing, so a
+failed-and-retried batch is counted once. ``observe`` is the standalone
+probe: one aggregate job over a given batch.
 """
 
 from __future__ import annotations
@@ -21,7 +25,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -43,6 +47,8 @@ class BatchProgress:
     tick_from: int
     tick_to: int
     n_envelopes: int
+    n_rejected: int = 0  # rows written to the dead letters
+    n_deferred: int = 0  # rows written to the txn pending buffer
 
 
 @dataclass
@@ -61,30 +67,47 @@ class TickGapMonitor:
     gaps: list[TickGap] = field(default_factory=list)
     progress: list[BatchProgress] = field(default_factory=list)
 
-    def observe(self, batch: DataFrame, batch_id: int) -> TickGap | None:
-        row = batch.agg(
-            F.min(F.col(self.tick_col).cast("long")).alias("mn"),
-            F.max(F.col(self.tick_col).cast("long")).alias("mx"),
+    def metrics(self) -> list[Column]:
+        """The aggregates ``record`` takes: ``mn``, ``mx`` and ``n``."""
+        tick = F.col(self.tick_col).cast("long")
+        return [
+            F.min(tick).alias("mn"),
+            F.max(tick).alias("mx"),
             F.count("*").alias("n"),
-        ).first()
-        if row is None or row.mn is None:
+        ]
+
+    def observe(self, batch: DataFrame, batch_id: int) -> TickGap | None:
+        row = batch.agg(*self.metrics()).first()
+        return self.record(batch_id, row.mn, row.mx, row.n)
+
+    def record(
+        self,
+        batch_id: int,
+        mn: int | None,
+        mx: int | None,
+        n: int,
+        *,
+        n_rejected: int = 0,
+        n_deferred: int = 0,
+    ) -> TickGap | None:
+        if mn is None:
             return None  # empty batch
         self.progress.append(
             BatchProgress(
-                batch_id=batch_id, tick_from=row.mn, tick_to=row.mx,
-                n_envelopes=row.n,
+                batch_id=batch_id, tick_from=mn, tick_to=mx, n_envelopes=n,
+                n_rejected=n_rejected, n_deferred=n_deferred,
             )
         )
         gap = None
-        if self.last_tick is not None and row.mn > self.last_tick + 1:
+        if self.last_tick is not None and mn > self.last_tick + 1:
             gap = TickGap(
                 batch_id=batch_id,
                 expected_from=self.last_tick + 1,
-                observed_from=row.mn,
-                missing=row.mn - self.last_tick - 1,
+                observed_from=mn,
+                missing=mn - self.last_tick - 1,
             )
             self.gaps.append(gap)
             if self.on_gap is not None:
                 self.on_gap(gap)
-        self.last_tick = max(self.last_tick or 0, row.mx)
+        self.last_tick = max(self.last_tick or 0, mx)
         return gap

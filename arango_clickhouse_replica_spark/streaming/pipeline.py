@@ -22,7 +22,10 @@ replay/ack protocol (reader.py:37-60) — source offsets + the idempotent
 version-dedup make redelivery a no-op. ``Trigger.AvailableNow`` is the
 drain-and-stop backlog probe (S6, broker.py:25-32).
 
-Scale notes: the apply is a narrow stage (no shuffle); appends are
+Scale notes: the apply is narrow (no shuffle, no broadcast): with
+``txn_atomic`` a micro-batch runs four jobs (terminator collect, pending
+write, dead-letter write, target part) over the pinned batch, and the
+monitor's metrics ride on them via ``DataFrame.observe``; appends are
 partition-parallel; per-key ordering is irrelevant by design (M5) because
 the merge is version-based, so arbitrary source parallelism is safe — the
 reference needed 1 Kafka partition per topic for ordering; we do not.
@@ -34,15 +37,46 @@ import os
 import shutil
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.cdc import latest_alive, latest_state, preprocess_envelopes
+from ..operators.cdc import (
+    collect_terminators,
+    latest_alive,
+    latest_state,
+    preprocess_envelopes,
+    txn_split_by,
+)
 from ..operators.part_store import PartStore
 from ..schema.dsl import TableMapping, compile_mapping
 from .merge_sink import BucketedMergeSink
 from .monitor import TickGapMonitor
+
+
+class _Watch:
+    """One micro-batch's ``DataFrame.observe`` metrics for the tick
+    monitor. Each is filled by the first action over the frame it
+    watches, so it costs no job of its own; read them after that action.
+    A no-op when the pipeline has no monitor."""
+
+    def __init__(self, enabled: bool) -> None:
+        self.enabled = enabled
+        self.obs: dict[str, Observation] = {}
+
+    def __call__(self, df: DataFrame, name: str, metrics=None) -> DataFrame:
+        if not self.enabled:
+            return df
+        self.obs[name] = Observation()
+        return df.observe(self.obs[name], *(metrics or [F.count("*").alias("n")]))
+
+    def get(self, name: str) -> dict:
+        return self.obs[name].get
+
+    def count(self, name: str) -> int:
+        """A watched frame's row count; 0 if the batch wrote no such frame."""
+        return self.get(name)["n"] if name in self.obs else 0
 
 
 class CdcPipeline:
@@ -107,29 +141,34 @@ class CdcPipeline:
             os.path.join(self._pending_root(), f"batch_id={ids[-1]}")
         )
 
-    def _txn_gate(self, batch: DataFrame, batch_id: int) -> DataFrame:
+    def _txn_gate(self, batch: DataFrame, batch_id: int,
+                  watch: _Watch) -> DataFrame:
         """Union the pending buffer in, split on txn outcome, persist the
         new deferred set (idempotent per-batch overwrite — a retried
         batch rewrites the SAME generation), return the applyable rows.
 
+        The batch's terminators are collected first (one narrow job: the
+        pending buffer holds document rows only), so the split is two
+        membership filters and every write over it is one narrow job.
         The pending write is bounded by transactions in flight at the
         batch cut. Generations older than batch_id-2 are pruned: a
         foreachBatch retry only ever re-runs the latest batch, which
         reads generation batch_id-1."""
-        from ..operators.cdc import txn_atomic_split
-
+        terminators = collect_terminators(batch)
         prior = [i for i in self._pending_ids() if i < batch_id]
         if prior:
+            # The buffer was written from earlier batches of this schema:
+            # reading with it spares a footer-inference job per batch.
             batch = batch.unionByName(
-                self.spark.read.parquet(
+                self.spark.read.schema(batch.schema).parquet(
                     os.path.join(
                         self._pending_root(), f"batch_id={prior[-1]}"
                     )
                 ),
                 allowMissingColumns=True,
             )
-        split = txn_atomic_split(batch)
-        split.deferred.write.mode("overwrite").parquet(
+        split = txn_split_by(batch, terminators)
+        watch(split.deferred, "n_deferred").write.mode("overwrite").parquet(
             os.path.join(self._pending_root(), f"batch_id={batch_id}")
         )
         for i in prior[:-1]:
@@ -143,10 +182,11 @@ class CdcPipeline:
     # -- write path ---------------------------------------------------------
 
     def _apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        # The batch feeds up to four actions (monitor agg, dead-letter
-        # write, merge-sink bucket probe, target write) — pin it so the
-        # source read + transform run once, not once per action.
-        multi_action = self.tick_monitor is not None or (
+        # The batch feeds up to four actions (terminator collect, pending
+        # write, dead-letter write, target write; or the merge sink's
+        # bucket probe and write) — pin it so the source read + transform
+        # run once, not once per action.
+        multi_action = (
             self.mapping is not None and self.dead_letter_dir is not None
         ) or self.merge_sink is not None or self.txn_atomic
         # Keep the persisted handle in its own name: _txn_gate rebinds
@@ -156,13 +196,16 @@ class CdcPipeline:
         if multi_action:
             raw = batch.persist()
             batch = raw
+        monitor = self.tick_monitor if "tick" in batch.columns else None
+        watch = _Watch(monitor is not None)
         try:
-            if self.tick_monitor is not None and "tick" in batch.columns:
-                # A2: tick-continuity probe on the RAW batch (pre-filter —
-                # txn markers occupy ticks too), publisher.py:140-141 analog.
-                self.tick_monitor.observe(batch, batch_id)
+            if monitor is not None:
+                # A2: tick-continuity metrics on the RAW batch (pre-filter
+                # — txn markers occupy ticks too), publisher.py:140-141
+                # analog, observed on the batch's first action.
+                batch = watch(batch, "batch", monitor.metrics())
             if self.txn_atomic and "tid" in batch.columns:
-                batch = self._txn_gate(batch, batch_id)
+                batch = self._txn_gate(batch, batch_id, watch)
             rows = preprocess_envelopes(
                 batch,
                 tracked_cuids=self.tracked_cuids,
@@ -182,7 +225,9 @@ class CdcPipeline:
                     # Idempotent per-batch path: a retried/replayed batch
                     # OVERWRITES its own dead letters instead of appending
                     # duplicates (rejected rows carry no _ver to dedup on).
-                    result.rejected.write.mode("overwrite").parquet(
+                    watch(result.rejected, "n_rejected").write.mode(
+                        "overwrite"
+                    ).parquet(
                         os.path.join(self.dead_letter_dir, f"batch_id={batch_id}")
                     )
             if self.merge_sink is not None:
@@ -191,6 +236,14 @@ class CdcPipeline:
             else:
                 # A replayed batch rewrites its own part: no duplicates.
                 self.store.write_batch(rows, batch_id)
+            if monitor is not None:
+                # After the writes: a batch that raised records nothing.
+                m = watch.get("batch")
+                monitor.record(
+                    batch_id, m["mn"], m["mx"], m["n"],
+                    n_rejected=watch.count("n_rejected"),
+                    n_deferred=watch.count("n_deferred"),
+                )
         finally:
             if multi_action:
                 raw.unpersist()

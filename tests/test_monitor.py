@@ -3,14 +3,18 @@
 (publisher.py:140-141), driven through both direct observe() calls and a
 real gapped envelope stream via CdcPipeline."""
 
+import glob
 import os
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from arango_clickhouse_replica_spark.sources.cdc_envelopes import (
     synthetic_event_envelopes,
 )
 from arango_clickhouse_replica_spark.streaming import CdcPipeline
+from arango_clickhouse_replica_spark.streaming.merge_sink import BucketedMergeSink
 from arango_clickhouse_replica_spark.streaming.monitor import TickGapMonitor
 
 
@@ -18,6 +22,31 @@ def _env(spark, ticks):
     rows = [(t, 2300, "c1", {"k": str(t)}) for t in ticks]
     return spark.createDataFrame(
         rows, "tick long, type int, cuid string, data map<string,string>"
+    )
+
+
+_STRUCT_ENV = "tick long, type int, cuid string, tid string, data struct<event_id: long>"
+
+
+def _land(spark, env_dir, *tick_ranges):
+    """One separately committed file per tick range; returns the files in
+    the order the file source reads them (mtime)."""
+    for ticks in tick_ranges:
+        spark.createDataFrame(
+            [(t, 2300, "c1", None, (t,)) for t in ticks], _STRUCT_ENV
+        ).coalesce(1).write.mode("append").parquet(env_dir)
+    return sorted(glob.glob(os.path.join(env_dir, "*.parquet")),
+                  key=os.path.getmtime)
+
+
+def _pipe(spark, tmp_path, mon, **kw):
+    return CdcPipeline(
+        spark,
+        target_dir=str(tmp_path / "target"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        keys=["event_id"],
+        tick_monitor=mon,
+        **kw,
     )
 
 
@@ -85,3 +114,57 @@ def test_batch_progress_records(spark):
     mon.observe(_env(spark, [8, 9]), 2)
     assert [(p.batch_id, p.tick_from, p.tick_to, p.n_envelopes)
             for p in mon.progress] == [(0, 1, 3, 3), (2, 8, 9, 2)]
+
+
+@pytest.mark.parametrize("mode", ["append", "txn_atomic", "merge_on_write"])
+def test_pipeline_progress_matches_standalone_observe(spark, tmp_path, mode):
+    """The tick metrics the pipeline observes on its own jobs give the
+    same progress and gaps as standalone observe() over the same files,
+    and the gap alarm still fires, whichever action reads the batch
+    first."""
+    env_dir = str(tmp_path / "env")
+    files = _land(spark, env_dir, [1, 2, 3], [4, 5], [9, 10, 11])
+    alarms = []
+    mon = TickGapMonitor(on_gap=alarms.append)
+    kw = {"txn_atomic": mode == "txn_atomic"}
+    if mode == "merge_on_write":
+        kw["merge_sink"] = BucketedMergeSink(
+            spark, str(tmp_path / "target"), ["event_id"])
+    q = _pipe(spark, tmp_path, mon, **kw).start(
+        env_dir, spark.read.parquet(files[0]).schema, max_files_per_trigger=1)
+    q.awaitTermination()
+
+    ref = TickGapMonitor()
+    for i, f in enumerate(files):
+        ref.observe(spark.read.parquet(f), i)
+    assert mon.progress == ref.progress
+    assert [(p.batch_id, p.tick_from, p.tick_to, p.n_envelopes)
+            for p in mon.progress] == [(0, 1, 3, 3), (1, 4, 5, 2), (2, 9, 11, 3)]
+    assert mon.gaps == ref.gaps and len(mon.gaps) == 1
+    assert alarms == mon.gaps
+    assert mon.last_tick == ref.last_tick == 11
+
+
+def test_failed_batch_records_no_progress(spark, tmp_path, monkeypatch):
+    """The monitor records a batch once it is applied: a batch whose
+    write raises records nothing, and its retry is counted once."""
+    env_dir = str(tmp_path / "env")
+    files = _land(spark, env_dir, [1, 2, 3])
+    schema = spark.read.parquet(files[0]).schema
+    mon = TickGapMonitor()
+    pipe = _pipe(spark, tmp_path, mon)
+
+    def disk_full(df, batch_id):
+        raise OSError("disk full")
+
+    with monkeypatch.context() as m:
+        m.setattr(pipe.store, "write_batch", disk_full)
+        q = pipe.start(env_dir, schema)
+        with pytest.raises(StreamingQueryException):
+            q.awaitTermination()
+    assert mon.progress == [] and mon.last_tick is None
+
+    pipe.run_until_drained(env_dir, schema)  # the restart re-runs batch 0
+    assert [(p.batch_id, p.tick_from, p.tick_to, p.n_envelopes)
+            for p in mon.progress] == [(0, 1, 3, 3)]
+    assert {r.event_id for r in pipe.latest_alive().collect()} == {1, 2, 3}

@@ -4,20 +4,27 @@ commit marker, aborted txns never land, unterminated txns defer in the
 pending buffer across batch cuts."""
 
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from arango_clickhouse_replica_spark.operators.cdc import (
+    TXN_ABORT,
+    TXN_COMMIT,
+    collect_terminators,
     latest_alive,
     preprocess_envelopes,
     txn_atomic_split,
+    txn_split_by,
 )
+from arango_clickhouse_replica_spark.schema.dsl import TableMapping
 from arango_clickhouse_replica_spark.sources.cdc_envelopes import (
     synthetic_txn_envelopes,
 )
 from arango_clickhouse_replica_spark.streaming import CdcPipeline
+from arango_clickhouse_replica_spark.streaming.monitor import TickGapMonitor
 
 _DATA = T.StructType(
     [
@@ -152,3 +159,205 @@ def test_txn_pipeline_matches_batch_split(spark, sf_dir, dirs):
         spark.read.schema(schema).parquet(dirs["env"])
     ).deferred
     assert pipe.pending().count() == open_rows.count() > 0
+
+
+# -- the micro-batch gate: collected terminators, membership filters ------
+
+_MAPPING = TableMapping.from_dict(
+    {
+        "table_name": "events_replica",
+        "schema": {
+            "primary_key": ["eid"],
+            "properties": {
+                "eid": {"type": "int", "ref": "event_id"},
+                "v": {"type": "float", "ref": "value", "required": True},
+            },
+        },
+    }
+)
+
+
+def _land(spark, env_dir, *batches):
+    """Each batch becomes one separately committed file, in order."""
+    for rows in batches:
+        _env_df(spark, rows).coalesce(1).write.mode("append").parquet(env_dir)
+
+
+def _pipe(spark, dirs, **kw):
+    return CdcPipeline(
+        spark,
+        target_dir=dirs["target"],
+        checkpoint_dir=dirs["ckpt"],
+        keys=kw.pop("keys", ["event_id"]),
+        txn_atomic=True,
+        **kw,
+    )
+
+
+def _assert_matches_batch(spark, pipe, env_dir):
+    """The streamed replica and pending buffer equal the batch split
+    (txn_atomic_split + latest_alive) over every file landed so far, and
+    the gate's encoding of the split equals the batch one part by part."""
+    env = spark.read.schema(_ENV).parquet(env_dir)
+    split = txn_atomic_split(env)
+    want = latest_alive(preprocess_envelopes(split.applyable), keys=["event_id"])
+    assert Counter(pipe.latest_alive().collect()) == Counter(want.collect())
+    assert Counter(pipe.pending().collect()) == Counter(split.deferred.collect())
+    gate = txn_split_by(env, collect_terminators(env))
+    for part in ("applyable", "deferred", "aborted"):
+        assert Counter(getattr(gate, part).collect()) == Counter(
+            getattr(split, part).collect()), part
+
+
+def _alive_ids(pipe):
+    return {r.event_id for r in pipe.latest_alive().collect()}
+
+
+def test_micro_batch_job_budget(spark, dirs, tmp_path):
+    """A txn-atomic micro-batch with a monitor, a mapping and dead letters
+    runs 4 Spark jobs: terminator collect, pending write, dead-letter
+    write, target write. The monitor's tick metrics and the rejected and
+    deferred counts are observed on those jobs, not run as jobs of their
+    own, and equal the rows each batch wrote."""
+    dead = str(tmp_path / "dead")
+    mon = TickGapMonitor()
+    pipe = _pipe(spark, dirs, keys=["eid"], mapping=_MAPPING,
+                 dead_letter_dir=dead, tick_monitor=mon)
+    _land(spark, dirs["env"], [
+        (10, 2300, "T1", 1, 1.0),
+        (11, 2300, "T1", 2, None),      # rejected: v is required
+        (12, 2201, "T1", None, None),
+        (13, 2300, "T2", 3, 3.0),       # deferred
+    ], [
+        (14, 2300, "T2", 4, None),      # rejected once T2 commits
+        (15, 2300, "T3", 5, 5.0),       # deferred
+        (16, 2201, "T2", None, None),
+        (17, 2300, None, 6, 6.0),
+    ], [
+        (18, 2300, "T4", 7, 7.0),       # deferred
+        (19, 2300, "T4", 9, 9.0),       # deferred
+        (20, 2202, "T3", None, None),
+        (21, 2300, None, 8, None),      # rejected
+    ])
+    q = pipe.start(dirs["env"], _ENV, max_files_per_trigger=1)
+    q.awaitTermination()
+
+    batches = [p for p in q.recentProgress if p.numInputRows > 0]
+    assert len(batches) == 3
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) / len(batches) <= 4
+    assert [(p.batch_id, p.tick_from, p.tick_to, p.n_envelopes)
+            for p in mon.progress] == [(0, 10, 13, 4), (1, 14, 17, 4), (2, 18, 21, 4)]
+    assert [(p.n_rejected, p.n_deferred) for p in mon.progress] == [(1, 1), (1, 1), (1, 2)]
+    for p in mon.progress:
+        assert p.n_rejected == spark.read.parquet(
+            os.path.join(dead, f"batch_id={p.batch_id}")).count()
+        assert p.n_deferred == spark.read.parquet(
+            os.path.join(dirs["ckpt"], "txn_pending", f"batch_id={p.batch_id}")).count()
+    assert {r.eid for r in pipe.latest_alive().collect()} == {1, 3, 6}
+
+
+def test_gate_batch_without_terminator(spark, dirs):
+    """No marker in the batch: the membership sets are empty, every row
+    with a tid defers and rows with a null tid apply."""
+    rows = [
+        (10, 2300, "T1", 1, 1.0),
+        (11, 2300, "T1", 2, 2.0),
+        (12, 2300, None, 3, 3.0),
+        (13, 2300, "T2", 4, 4.0),
+        (14, 2302, None, 5, 5.0),
+    ]
+    assert collect_terminators(_env_df(spark, rows)) == {}
+    pipe = _pipe(spark, dirs)
+    _land(spark, dirs["env"], rows)
+    pipe.run_until_drained(dirs["env"], _ENV)
+    assert _alive_ids(pipe) == {3}  # 5 is a soft delete
+    assert {r.data.event_id for r in pipe.pending().collect()} == {1, 2, 4}
+    _assert_matches_batch(spark, pipe, dirs["env"])
+
+
+def test_gate_last_marker_wins(spark, dirs):
+    """A tid with both a commit and an abort in one batch: the later tick
+    wins, and abort wins a tie, as in the batch split's max_by."""
+    rows = [
+        (10, 2300, "T1", 1, 1.0),
+        (11, 2201, "T1", None, None),
+        (12, 2202, "T1", None, None),   # T1: abort is later
+        (13, 2300, "T2", 2, 2.0),
+        (14, 2202, "T2", None, None),
+        (15, 2201, "T2", None, None),   # T2: commit is later
+        (16, 2300, "T3", 3, 3.0),
+        (17, 2201, "T3", None, None),
+        (17, 2202, "T3", None, None),   # T3: tie, abort wins
+    ]
+    assert collect_terminators(_env_df(spark, rows)) == {
+        "T1": TXN_ABORT, "T2": TXN_COMMIT, "T3": TXN_ABORT}
+    pipe = _pipe(spark, dirs)
+    _land(spark, dirs["env"], rows)
+    pipe.run_until_drained(dirs["env"], _ENV)
+    assert _alive_ids(pipe) == {2}
+    assert pipe.pending().count() == 0
+    _assert_matches_batch(spark, pipe, dirs["env"])
+
+
+def test_gate_txn_spans_three_batches(spark, dirs):
+    """A transaction's rows arrive in two batches and its commit in a
+    third: it stays invisible until the commit, then lands whole."""
+    pipe = _pipe(spark, dirs)
+    _land(spark, dirs["env"], [(10, 2300, "T1", 1, 1.0)])
+    pipe.run_until_drained(dirs["env"], _ENV)
+    assert _alive_ids(pipe) == set()
+    _land(spark, dirs["env"], [(11, 2300, "T1", 2, 2.0), (12, 2300, None, 3, 3.0)])
+    pipe.run_until_drained(dirs["env"], _ENV)
+    assert _alive_ids(pipe) == {3}
+    assert {r.data.event_id for r in pipe.pending().collect()} == {1, 2}
+    _assert_matches_batch(spark, pipe, dirs["env"])
+    _land(spark, dirs["env"], [(13, 2201, "T1", None, None)])
+    pipe.run_until_drained(dirs["env"], _ENV)
+    assert _alive_ids(pipe) == {1, 2, 3}
+    _assert_matches_batch(spark, pipe, dirs["env"])
+
+
+def _py4j_calls(spark, monkeypatch):
+    """Count the py4j commands sent from here on."""
+    client = spark.sparkContext._gateway._gateway_client
+    calls = []
+    send = client.send_command
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return send(*a, **kw)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    return calls
+
+
+def test_gate_many_terminated_txns_in_one_batch(spark, dirs, monkeypatch):
+    """One micro-batch terminating 5,200 transactions (two files drained
+    together): the stream equals the batch split, and the membership
+    predicates are built in a fixed number of py4j calls, not one per
+    tid."""
+    n = 5200
+    rows = []
+    for t in range(n):
+        rows.append((2 * t, 2300, f"T{t}", t, float(t)))
+        rows.append((2 * t + 1, TXN_ABORT if t % 5 == 1 else TXN_COMMIT,
+                     f"T{t}", None, None))
+    rows += [(2 * n + i, 2300, f"open{i}", n + i, 0.0) for i in range(10)]
+    _land(spark, dirs["env"], rows[: len(rows) // 2], rows[len(rows) // 2:])
+    pipe = _pipe(spark, dirs)
+    q = pipe.start(dirs["env"], _ENV)
+    q.awaitTermination()
+    assert len([p for p in q.recentProgress if p.numInputRows > 0]) == 1
+    assert pipe.pending().count() == 10
+    assert len(_alive_ids(pipe)) == n - n // 5
+    _assert_matches_batch(spark, pipe, dirs["env"])
+
+    env = spark.read.schema(_ENV).parquet(dirs["env"])
+    terminators = collect_terminators(env)
+    assert len(terminators) == n
+    # ~200 calls whatever the tid count; one literal per call would
+    # need more than n.
+    calls = _py4j_calls(spark, monkeypatch)
+    txn_split_by(env, terminators)
+    assert 0 < len(calls) < 1000
