@@ -467,10 +467,10 @@ class AggregateStateStore:
         ))
 
     def _states(self) -> DataFrame:
-        parts = self.store.paths()
-        if not parts:
+        states = self.store.read(self.spark)
+        if states is None:
             raise ValueError(f"no state parts under {self.store.root}")
-        return self.spark.read.parquet(*parts).select(*self.keys, *STATE_COLS)
+        return states.select(*self.keys, *STATE_COLS)
 
     def merged(self) -> DataFrame:
         return merge_states(self._states(), self.keys)

@@ -236,10 +236,10 @@ class AnnIndexStore:
         return writer.start()
 
     def entries(self) -> DataFrame:
-        parts = self.store.paths()
-        if not parts:
+        entries = self.store.read(self.spark)
+        if entries is None:
             raise ValueError(f"no index entries under {self.store.root}")
-        return self.spark.read.parquet(*parts).select(*self._entry_cols)
+        return entries.select(*self._entry_cols)
 
     def live(self) -> DataFrame:
         return live_index(self.entries())
@@ -826,7 +826,7 @@ class GraphIndexStore(AnnIndexStore):
     part per micro-batch carries the node delta AND the touched-cell
     adjacency patch, so the part store and compaction are inherited
     unchanged; replay exactness holds because the encoder reads prior
-    state EXCLUDING its own part (``paths(exclude=batch_id)``) — a
+    state EXCLUDING its own part (``read(exclude=batch_id)``) — a
     replayed batch sees exactly what the first attempt saw."""
 
     _entry_cols = GRAPH_ENTRY_COLS
@@ -842,10 +842,9 @@ class GraphIndexStore(AnnIndexStore):
         """Latest node STATE (tombstones kept — graph_adjacency_patch's
         resurrection defense needs them) from every part except
         ``batch_id=N``."""
-        parts = self.store.paths(exclude=batch_id)
-        if not parts:
+        prior = self.store.read(self.spark, exclude=batch_id)
+        if prior is None:
             return self.spark.createDataFrame([], _NODE_SCHEMA)
-        prior = self.spark.read.parquet(*parts)
         return latest_state(
             prior.filter(F.col("kind") == "node").select(*NODE_COLS),
             ["vec_id"],

@@ -15,8 +15,16 @@ A part is **committed** once its ``_SUCCESS`` marker exists; Spark's
 committer writes it last, so a directory without it is the debris of a
 crashed write and is never read. A part is **retired** when a manifest
 entry whose promoted part is committed lists it as superseded. Readers
-get the live parts, committed and not retired, from ``paths()`` and run
-their own ``spark.read`` over them.
+read the live parts, committed and not retired, with ``read()``; the
+names alone are ``paths()``.
+
+``read()`` runs no Spark job. Spark's parquet writer puts the written
+schema in every file's footer (``org.apache.spark.sql.parquet.row.metadata``);
+``read()`` takes it from one data file per live part on the driver,
+merges the schemas by ``mergeSchema``'s rules (below) and reads with that
+schema, where ``mergeSchema`` or a plain read would run a job over the
+footers to infer it. Parts written across restarts may differ: a column
+or a nested field added later reads as null in the parts without it.
 
 Writes are idempotent per batch, the Structured Streaming exactly-once
 rule (sinks keyed by epoch id): ``write_batch(df, N)`` overwrites
@@ -51,12 +59,72 @@ import json
 import os
 import shutil
 import warnings
+from functools import reduce
 
-from pyspark.sql import DataFrame
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType, DataType, MapType, StructField, StructType,
+)
 
 BATCH = "batch_id="
 COMPACT = "compact_id="
 MANIFEST = "compaction_manifest.json"
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(part: str) -> StructType:
+    """The Spark schema a part was written with, from the footer of its
+    first data file (every file of a part holds the same schema)."""
+    files = sorted(n for n in os.listdir(part) if not n.startswith(("_", ".")))
+    if not files:
+        raise ValueError(f"part {part} has no data file")
+    path = os.path.join(part, files[0])
+    meta = pq.read_metadata(path).metadata or {}
+    if SPARK_SCHEMA_KEY not in meta:
+        raise ValueError(
+            f"{path} has no Spark schema in its footer "
+            f"({SPARK_SCHEMA_KEY.decode()}): not written by Spark"
+        )
+    return StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
+
+
+def _merge(left: DataType, right: DataType, fold, column: str) -> DataType:
+    """Spark's ``StructType.merge``, the rule ``mergeSchema`` folds the
+    footers with: struct fields keep their first-seen order and name
+    (matched through ``fold``, case-insensitive unless
+    ``spark.sql.caseSensitive``), a field new in ``right`` goes last,
+    structs inside structs, arrays and maps merge recursively, and any
+    other pair of types must be equal."""
+    if isinstance(left, StructType) and isinstance(right, StructType):
+        extra = {fold(f.name): f for f in right.fields}
+        fields = []
+        for f in left.fields:
+            r = extra.pop(fold(f.name), None)
+            if r is not None:
+                name = f"{column}.{f.name}" if column else f.name
+                f = StructField(
+                    f.name, _merge(f.dataType, r.dataType, fold, name),
+                    True, f.metadata,
+                )
+            fields.append(f)
+        return StructType(fields + list(extra.values()))
+    if isinstance(left, ArrayType) and isinstance(right, ArrayType):
+        return ArrayType(
+            _merge(left.elementType, right.elementType, fold, column), True
+        )
+    if isinstance(left, MapType) and isinstance(right, MapType):
+        return MapType(
+            _merge(left.keyType, right.keyType, fold, column),
+            _merge(left.valueType, right.valueType, fold, column),
+            True,
+        )
+    if left != right:
+        raise ValueError(
+            f"column {column} is {left.simpleString()} in one part and "
+            f"{right.simpleString()} in another"
+        )
+    return left
 
 
 class PartStore:
@@ -138,6 +206,29 @@ class PartStore:
             self._dir(n) for n in self._names()
             if n not in skip and self._committed(n)
         ]
+
+    def read(
+        self, spark: SparkSession, exclude: int | None = None
+    ) -> DataFrame | None:
+        """The live parts (``paths(exclude)``) as one DataFrame, or None
+        when no part is live. The schema is the parts' footer schemas
+        merged on the driver in the order ``mergeSchema`` sees them (by
+        file path), so building the read runs no Spark job; Spark reads
+        it as nullable throughout, as it does an inferred one. Parts
+        whose types conflict raise ``ValueError`` naming the column."""
+        parts = self.paths(exclude)
+        if not parts:
+            return None
+        fold = (
+            str if spark.conf.get("spark.sql.caseSensitive") == "true"
+            else str.lower
+        )
+        schemas = [_footer_schema(p) for p in parts]
+        try:
+            schema = reduce(lambda a, b: _merge(a, b, fold, ""), schemas)
+        except ValueError as e:
+            raise ValueError(f"part store at {self.root}: {e}") from None
+        return spark.read.schema(schema).parquet(*parts)
 
     def write_batch(self, df: DataFrame, batch_id: int) -> None:
         """Idempotently (over)write part ``batch_id=N``."""

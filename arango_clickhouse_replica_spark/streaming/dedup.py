@@ -39,15 +39,6 @@ from ..operators.minhash import band_signatures, candidate_pairs, word_shingles
 from ..operators.part_store import PartStore
 
 
-def _signatures_before(
-    spark: SparkSession, store: PartStore, batch_id: int
-) -> DataFrame | None:
-    """Every live signature part except ``batch_id``'s own: the prior
-    state a replay of that batch must be computed against."""
-    parts = store.paths(exclude=batch_id)
-    return spark.read.parquet(*parts) if parts else None
-
-
 class IncrementalLshDedup:
     """foreachBatch-driven incremental near-dup candidate finder."""
 
@@ -86,7 +77,9 @@ class IncrementalLshDedup:
         # they are bands-per-doc tiny — materialize once.
         sigs = sigs.localCheckpoint(eager=True)
 
-        store = _signatures_before(self.spark, self.store, batch_id)
+        # Every signature part but this batch's own: the prior state a
+        # replay of the batch must be computed against.
+        store = self.store.read(self.spark, exclude=batch_id)
         pairs = candidate_pairs(sigs, id_col=self.id_col)  # new vs new
         if store is not None:
             pairs = pairs.unionByName(
@@ -203,7 +196,7 @@ class IncrementalAHashDedup:
 
         sigs = extract_ahash(media_batch).localCheckpoint(eager=True)
         bands = self._bands(sigs)
-        store = _signatures_before(self.spark, self.store, batch_id)
+        store = self.store.read(self.spark, exclude=batch_id)
         cand = candidate_pairs(bands)  # new vs new
         sigs_all = sigs
         if store is not None:

@@ -350,14 +350,15 @@ class CdcPipeline:
     def raw(self) -> DataFrame:
         if self.merge_sink is not None:
             return self.merge_sink.read()
-        # mergeSchema: the target accumulates parts written across
-        # pipeline restarts; when the source collection gained a field in
-        # between (schema evolution), footers disagree and a plain read
-        # would resolve to whichever footer it samples — merge them so
-        # new columns surface (null-backfilled) instead.
-        return self.spark.read.option("mergeSchema", "true").parquet(
-            *self.store.paths()
-        )
+        # The target accumulates parts written across pipeline restarts;
+        # when the source collection gained a field in between (schema
+        # evolution), their footers disagree. read() merges the footer
+        # schemas on the driver, so new columns surface (null-backfilled)
+        # without a schema-inference job.
+        raw = self.store.read(self.spark)
+        if raw is None:
+            raise ValueError(f"no committed part under {self.target_dir}")
+        return raw
 
     def latest(self) -> DataFrame:
         """All winning versions, including soft-deleted rows."""
