@@ -1,11 +1,9 @@
-"""Environment-gated ArangoDB WAL tail connector.
+"""ArangoDB WAL tail client: the HTTP layer of the native ``arango_wal``
+streaming source (``sources/wal_datasource.py``).
 
-Reference parity: ``replication/producer/reader.py:37-70`` (the tail
-generator with ack/replay), ``replication/producer/publisher.py:30-72``
-(initial-tick bootstrap, op-type + collection filtering) and
-``arangodb/wal.py:14-36`` (the tail client). Where the reference wraps
-python-arango, this speaks the PUBLIC ArangoDB HTTP replication API
-directly with stdlib ``urllib`` only:
+Reference parity: ``arangodb/wal.py:14-36`` (the tail client). Where the
+reference wraps python-arango, this speaks the PUBLIC ArangoDB HTTP
+replication API directly with stdlib ``urllib`` only:
 
     GET /_db/{db}/_api/wal/lastTick
     GET /_db/{db}/_api/wal/tail?from={tick}&serverId={id}&chunkSize={n}
@@ -14,33 +12,29 @@ The tail response body is NDJSON (one log entry per line); pagination
 state rides in the response headers
 ``x-arango-replication-lastincluded`` / ``x-arango-replication-checkmore``.
 
-No live ArangoDB exists in this sandbox, so the HTTP transport is
-INJECTABLE: production uses :func:`urllib_transport`, tests replay
-recorded responses and exercise the ack/replay protocol exactly as the
-reference's ``test/test_producer.py:28-58`` does (read, nack, re-read the
-same batch, ack, drain).
+The reference's producer keeps its position in a Redis ``last-tick``
+token and replays un-acked pages through a generator protocol
+(``replication/producer/publisher.py:24-46``, ``reader.py:37-70``). The
+streaming source needs neither: its offsets are WAL ticks kept in the
+Spark checkpoint, a restarted micro-batch re-reads its exact tick range
+from the server, and its ``fromLatest``/``startTick`` options give the
+first-start position.
 
-Spark-first role: the tail loop is a lightweight DRIVER-SIDE forwarder,
-never a Spark job. :func:`forward_to_jsonl` lands each acked batch as an
-envelope JSONL file that the existing Structured Streaming envelope
-source (``cdc_envelopes.stream_envelopes_jsonl``) consumes — Spark's
-micro-batch engine, checkpointing, and the bucketed CDC merge take over
-from there. At 100 TB/day the forwarder shards by collection onto Kafka
-topics instead (``sources/kafka.py``); the protocol below is identical.
+The HTTP transport is INJECTABLE, so the source runs without a live
+server: production uses :func:`urllib_transport`, tests serve a scripted
+WAL (``tests/wal_fake.py``).
 """
 
 from __future__ import annotations
 
 import base64
 import json
-import os
-import time
 from dataclasses import dataclass
-from typing import Callable, Iterator, Optional
+from typing import Callable, Optional
 from urllib.parse import urlencode
 
-# Transaction markers are filtered out (the reference replicates document
-# ops only — publisher.py:57-60); upsert/remove match operators/cdc.py.
+# WAL op codes (reader.py:9-14): transaction begin/commit/abort markers
+# carry a ``tid`` and no collection; document ops match operators/cdc.py.
 START_TRANSACTION = 2200
 COMMIT_TRANSACTION = 2201
 ABORT_TRANSACTION = 2202
@@ -145,236 +139,3 @@ class ArangoWalClient:
             and headers.get("x-arango-replication-checkmore", "false")
             == "true",
         }
-
-
-class WalTailCursor:
-    """Ack/replay tail iterator in the engine's own idiom: an explicit
-    cursor over :meth:`ArangoWalClient.tail` that owns the tick position
-    and drain state directly (no coroutine plumbing).
-
-    The PROTOCOL is the reference's contract (the behavior
-    ``reference/replication/producer/reader.py`` implements and
-    ``test/test_producer.py:28-58`` pins; our fixtures:
-    ``tests/test_arango_wal.py``):
-
-    - each ``next()`` fetches the page starting after the current tick;
-    - ``ack(True)`` advances the cursor to the page's ``last_included``
-      — and if that page reported ``check_more == false``, iteration
-      ends WITHOUT a further round-trip;
-    - ``ack(False)`` (or no ack at all) leaves the cursor in place, so
-      the next fetch REPLAYS the same tick range — the server re-serves
-      it and nothing buffers in memory, which is also why a crashed
-      consumer re-reads the un-acked range after restart;
-    - a trailing empty page (``last_included == 0``) ends iteration.
-    """
-
-    def __init__(
-        self,
-        client: ArangoWalClient,
-        tick_start,
-        chunk_size: Optional[int] = None,
-    ) -> None:
-        self._client = client
-        self._tick = tick_start
-        self._chunk = chunk_size
-        self._drained = False
-        # what an ack of the most recent page would commit
-        self._acked_tick = tick_start
-        self._acked_more = True
-
-    def __iter__(self) -> "WalTailCursor":
-        return self
-
-    def __next__(self) -> dict:
-        if self._drained:
-            raise StopIteration
-        page = self._client.tail(self._tick, self._chunk)
-        if int(page["last_included"]) == 0:
-            raise StopIteration
-        self._acked_tick = page["last_included"]
-        self._acked_more = page["check_more"]
-        return page
-
-    def ack(self, processed: bool) -> None:
-        """Commit (``True``) or refuse (falsy) the page last returned."""
-        if processed:
-            self._tick = self._acked_tick
-            self._drained = not self._acked_more
-
-
-def is_document_allowed(document: dict, collections_ids) -> bool:
-    """Replicate only document upserts/removes of watched collections
-    (publisher.py:55-60); transaction markers and system collections drop."""
-    cuid = document.get("cuid")
-    doc_type = document.get("type")
-    return (
-        doc_type in (UPSERT_DOCUMENT, REMOVE_DOCUMENT)
-        and cuid in collections_ids
-    )
-
-
-def collect_logs(client: ArangoWalClient, tick_min, batch_size, collections: dict):
-    """Filtered tail (same surface as the reference's publisher.py:63-72):
-    ``collections`` maps collection name -> globallyUniqueId; yields
-    batches whose ``content`` is restricted to allowed documents. The
-    consumer sends True to ack (advance) or anything falsy to replay —
-    forwarded straight to the cursor's ack/replay contract."""
-    watched_ids = frozenset(collections.values())
-    cursor = WalTailCursor(client, tick_min, batch_size)
-    for batch in cursor:
-        batch["content"] = [
-            doc for doc in batch["content"]
-            if is_document_allowed(doc, watched_ids)
-        ]
-        cursor.ack(bool((yield batch)))
-
-
-class FileTickStore:
-    """Durable last-processed-tick checkpoint. The reference stores this
-    in Redis (publisher.py:25-41); a Spark deployment keeps it next to
-    the stream's checkpoint dir — same single-writer semantics, one fewer
-    service. Writes are atomic (tmp + rename)."""
-
-    def __init__(self, path: str) -> None:
-        self.path = path
-
-    def get(self) -> Optional[int]:
-        try:
-            with open(self.path, "r", encoding="utf-8") as f:
-                raw = f.read().strip().rstrip(";")
-                return int(raw) if raw else None
-        except FileNotFoundError:
-            return None
-
-    def set(self, tick) -> None:
-        tmp = f"{self.path}.tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(f"{tick}")
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self.path)
-
-
-def set_tick_if_not_set(client: ArangoWalClient, store: FileTickStore):
-    """First-start bootstrap (publisher.py:30-36): if no tick checkpoint
-    exists, start from the server's CURRENT last tick (snapshot-first
-    design: history before that tick comes from the snapshot scan)."""
-    if store.get() is not None:
-        return None
-    tick = client.get_last_tick()["tick"]
-    store.set(tick)
-    return tick
-
-
-def forward_to_jsonl(
-    client: ArangoWalClient,
-    store: FileTickStore,
-    collections: dict,
-    out_dir: str,
-    max_batches: int = 0,
-) -> list[str]:
-    """Drain available WAL batches into envelope JSONL files consumable
-    by ``cdc_envelopes.stream_envelopes_jsonl`` / ``read_envelopes_jsonl``.
-
-    Each acked page becomes ONE file named by its last-included tick
-    (idempotent across forwarder restarts: re-forwarding a page rewrites
-    the same file; the tick store only advances after the file is
-    durable, so the at-least-once window is exactly one page and the
-    downstream version-replacing merge absorbs it).
-    """
-    os.makedirs(out_dir, exist_ok=True)
-    written: list[str] = []
-    start = store.get()
-    if start is None:
-        raise RuntimeError("tick store empty - call set_tick_if_not_set first")
-    gen = collect_logs(client, start, None, collections)
-    n = 0
-    try:
-        batch = gen.send(None)
-        while True:
-            tick = batch["last_included"]
-            path = os.path.join(out_dir, f"wal-{tick}.jsonl")
-            tmp = f"{path}.tmp-{int(time.time() * 1000)}"
-            with open(tmp, "w", encoding="utf-8") as f:
-                for doc in batch["content"]:
-                    f.write(json.dumps(doc, separators=(",", ":")) + "\n")
-            os.replace(tmp, path)
-            written.append(path)
-            store.set(tick)
-            n += 1
-            if max_batches and n >= max_batches:
-                break
-            batch = gen.send(True)
-    except StopIteration:
-        pass
-    return written
-
-
-def forward_to_jsonl_sharded(
-    client: ArangoWalClient,
-    store: FileTickStore,
-    collections: dict,
-    out_dir: str,
-    max_batches: int = 0,
-) -> dict[str, list[str]]:
-    """The SHARDED forwarder — the documented scale escape for the
-    single-cursor WAL tail, as files instead of Kafka topics.
-
-    One WAL is one ordered log, so the tail cursor is inherently serial
-    (the reference's producer is the same single loop). What does NOT
-    have to be serial is everything downstream: this forwarder routes
-    each acked page's documents into PER-COLLECTION subdirectories
-    (``out_dir/<collection>/wal-<tick>.jsonl`` — the file analogue of
-    one Kafka topic per collection, readme.md:84), so N independent
-    Structured Streaming sources consume N collections in parallel,
-    each with its own checkpoint, trigger, and backpressure, and a slow
-    table never stalls the others. At very high change rates the
-    remaining serial segment is a page fetch plus an in-memory
-    group-by-collection — I/O-bound fan-out, not per-document work;
-    beyond one WAL's bandwidth the unit of further sharding is the
-    DATABASE (one forwarder per db WAL).
-
-    Durability contract: all of a page's per-collection files are
-    written atomically (tmp + rename) BEFORE the tick store advances,
-    so the at-least-once window stays exactly one page and replayed
-    pages rewrite the same tick-named files (idempotent, absorbed by
-    the version-replacing merge downstream).
-    """
-    id_to_name = {cid: name for name, cid in collections.items()}
-    for name in collections:
-        os.makedirs(os.path.join(out_dir, name), exist_ok=True)
-    written: dict[str, list[str]] = {name: [] for name in collections}
-    start = store.get()
-    if start is None:
-        raise RuntimeError("tick store empty - call set_tick_if_not_set first")
-    gen = collect_logs(client, start, None, collections)
-    n = 0
-    try:
-        batch = gen.send(None)
-        while True:
-            tick = batch["last_included"]
-            by_coll: dict[str, list[dict]] = {}
-            for doc in batch["content"]:
-                by_coll.setdefault(id_to_name[doc["cuid"]], []).append(doc)
-            for name, docs in by_coll.items():
-                path = os.path.join(out_dir, name, f"wal-{tick}.jsonl")
-                tmp = f"{path}.tmp-{int(time.time() * 1000)}"
-                with open(tmp, "w", encoding="utf-8") as f:
-                    for doc in docs:
-                        f.write(json.dumps(doc, separators=(",", ":")) + "\n")
-                os.replace(tmp, path)
-                written[name].append(path)
-            store.set(tick)
-            n += 1
-            if max_batches and n >= max_batches:
-                break
-            batch = gen.send(True)
-    except StopIteration:
-        pass
-    return written
-
-
-def iter_documents(batches: Iterator[dict]) -> Iterator[dict]:
-    """Flatten tail batches to their documents (consumer convenience)."""
-    for batch in batches:
-        yield from batch["content"]

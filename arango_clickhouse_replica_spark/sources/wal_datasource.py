@@ -2,12 +2,21 @@
 
 ``spark.readStream.format("arango_wal")`` — the Python DataSource API
 (SPARK-44076, stable since Spark 4.0) lets the WAL tail live INSIDE
-Structured Streaming instead of behind a driver-side forwarder + file/
-Kafka hop: offsets are WAL ticks, so the checkpoint IS the tick store,
-micro-batch replay re-serves the exact tick range from the server (the
-WAL retains history — the same property the reference's ack/replay
-generator relies on, ``replication/producer/reader.py:62-70``), and
-exactly-once lands on the version-deduped CDC merge as usual.
+Structured Streaming, with no file or Kafka hop: offsets are WAL ticks,
+so the checkpoint IS the tick store, micro-batch replay re-serves the
+exact tick range from the server (the WAL retains history — the same
+property the reference's ack/replay generator relies on,
+``replication/producer/reader.py:62-70``), and exactly-once lands on the
+version-deduped CDC merge as usual. This source is the engine's analog
+of the reference's producer; :func:`wal_envelope_stream` is the typed
+envelope stream ``CdcPipeline.start_wal`` and
+``StreamingCurationGate.attach_wal`` consume.
+
+Every op type passes the source, transaction markers (2200/2201/2202)
+included, so the transaction gate of ``CdcPipeline(txn_atomic=True)``
+sees each commit and abort; ``preprocess_envelopes`` (P1) drops the
+markers downstream, as on the file and Kafka paths. The ``collections``
+option filters by ``cuid``; markers carry none and always pass.
 
 The reader is a ``SimpleDataSourceStreamReader``: a WAL tail is a single
 ordered cursor (one page per micro-batch), so the driver-side simple
@@ -32,16 +41,12 @@ testable against a scripted server with no live Arango.
 from __future__ import annotations
 
 import json
-from typing import Iterator, Optional
+from typing import Iterator, Optional, Sequence
 
+from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
-from .arango_wal import (
-    REMOVE_DOCUMENT,
-    UPSERT_DOCUMENT,
-    ArangoWalClient,
-    ArangoWalConfig,
-)
+from .arango_wal import ArangoWalClient, ArangoWalConfig
 
 #: envelope wire shape; `data` is the raw document as a JSON string
 WAL_SOURCE_SCHEMA = (
@@ -74,11 +79,10 @@ def _client(options: dict) -> ArangoWalClient:
 
 
 def _allowed(entry: dict, cuids: Optional[set]) -> bool:
-    # document ops only (transaction markers drop — publisher.py:57-60);
-    # collection filter applies when configured
-    if entry.get("type") not in (UPSERT_DOCUMENT, REMOVE_DOCUMENT):
-        return False
-    return cuids is None or entry.get("cuid") in cuids
+    # the collection filter, when configured; entries of no collection
+    # (transaction markers) always pass
+    cuid = entry.get("cuid")
+    return cuids is None or cuid is None or cuid in cuids
 
 
 def _rows(entries: list, cuids: Optional[set], lo: int, hi: Optional[int]):
@@ -173,3 +177,33 @@ class ArangoWalDataSource(DataSource):
 def register(spark) -> None:
     """Idempotent format registration for the current session."""
     spark.dataSource.register(ArangoWalDataSource)
+
+
+def wal_envelope_stream(
+    spark,
+    data_schema,
+    *,
+    wal_options: Optional[dict] = None,
+    collections: Optional[Sequence[str]] = None,
+):
+    """The WAL as a typed envelope stream: ``tick`` (long), ``type``,
+    ``cuid``, ``tid`` and ``data`` parsed with ``data_schema``.
+
+    ``tid`` is null for an operation outside any transaction (Arango
+    writes ``"0"`` there), which is what the transaction gate reads as
+    non-transactional; any other value waits for its commit or abort.
+    ``wal_options`` pass to the source as is; ``collections`` is the
+    list of watched ``cuid`` values."""
+    register(spark)
+    reader = spark.readStream.format("arango_wal")
+    for k, v in (wal_options or {}).items():
+        reader = reader.option(k, str(v))
+    if collections:
+        reader = reader.option("collections", ",".join(collections))
+    return reader.load().select(
+        F.col("tick").cast("long").alias("tick"),
+        "type",
+        "cuid",
+        F.nullif("tid", F.lit("0")).alias("tid"),
+        F.from_json("data", data_schema).alias("data"),
+    )

@@ -185,24 +185,12 @@ class StreamingCurationGate:
         """
         from ..schema.dsl import compile_mapping
         from ..sources.arango_wal import UPSERT_DOCUMENT
-        from ..sources.wal_datasource import register
+        from ..sources.wal_datasource import wal_envelope_stream
 
-        register(self.spark)
-        reader = self.spark.readStream.format("arango_wal")
-        for k, v in (wal_options or {}).items():
-            reader = reader.option(k, str(v))
-        if collections:
-            reader = reader.option("collections", ",".join(collections))
-        stream = (
-            reader.load()
-            .select(
-                F.col("tick").cast("long").alias("tick"),
-                "type",
-                "cuid",
-                F.from_json("data", data_schema).alias("data"),
-            )
-            .filter(F.col("type") == UPSERT_DOCUMENT)
-        )
+        stream = wal_envelope_stream(
+            self.spark, data_schema,
+            wal_options=wal_options, collections=collections,
+        ).filter(F.col("type") == UPSERT_DOCUMENT)
         compiled = compile_mapping(mapping, stream.schema, doc_col="data")
         dead_dir = os.path.join(self.out_root, "dead_letter")
 

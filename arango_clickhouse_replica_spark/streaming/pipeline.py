@@ -321,22 +321,14 @@ class CdcPipeline:
         collapses the reference's producer + broker + consumer into ONE
         streaming query; the ``data`` JSON string parses into the typed
         document struct here (from_json + data_schema), after which the
-        path is identical to the file/Kafka sources."""
-        from pyspark.sql import functions as F
+        path is identical to the file/Kafka sources. The stream carries
+        the transaction markers and ``tid``, so ``txn_atomic`` gates it
+        as it does the others."""
+        from ..sources.wal_datasource import wal_envelope_stream
 
-        from ..sources.wal_datasource import register
-
-        register(self.spark)
-        reader = self.spark.readStream.format("arango_wal")
-        for k, v in (wal_options or {}).items():
-            reader = reader.option(k, str(v))
-        if collections:
-            reader = reader.option("collections", ",".join(collections))
-        stream = reader.load().select(
-            F.col("tick").cast("long").alias("tick"),
-            "type",
-            "cuid",
-            F.from_json("data", data_schema).alias("data"),
+        stream = wal_envelope_stream(
+            self.spark, data_schema,
+            wal_options=wal_options, collections=collections,
         )
         return (
             stream.writeStream.foreachBatch(self._apply_batch)

@@ -1,65 +1,13 @@
-"""Arango WAL tail connector: protocol tests against a recorded/scripted
-HTTP transport (no live server), mirroring the reference's
-``test/test_producer.py:28-58`` replay semantics, plus the end-to-end
-bridge into the Spark envelope pipeline."""
-
-import json
-
-import pytest
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+"""Arango WAL tail client against the scripted replication API
+(``tests/wal_fake.py``, no live server): the two HTTP calls the native
+``arango_wal`` streaming source is built on."""
 
 from arango_clickhouse_replica_spark.sources.arango_wal import (
     ArangoWalClient,
     ArangoWalConfig,
-    COMMIT_TRANSACTION,
-    FileTickStore,
-    REMOVE_DOCUMENT,
-    START_TRANSACTION,
     UPSERT_DOCUMENT,
-    collect_logs,
-    WalTailCursor,
-    forward_to_jsonl,
-    set_tick_if_not_set,
 )
-
-
-class ScriptedWalServer:
-    """A deterministic fake of the ArangoDB HTTP replication API: holds a
-    WAL (list of (tick, entry)), serves /_api/wal/lastTick and
-    /_api/wal/tail with real pagination headers, and records every
-    request so tests can assert the replay protocol on the wire."""
-
-    def __init__(self, entries, page_size=2):
-        self.entries = entries  # list of dicts each carrying 'tick'
-        self.page_size = page_size
-        self.requests = []
-
-    def transport(self, url, headers):
-        self.requests.append(url)
-        assert headers.get("Authorization", "").startswith("Basic ")
-        if "/_api/wal/lastTick" in url:
-            last = self.entries[-1]["tick"] if self.entries else "0"
-            body = json.dumps({"tick": last, "server": {"serverId": "1"}})
-            return 200, {}, body.encode()
-        assert "/_api/wal/tail" in url
-        from urllib.parse import parse_qs, urlparse
-
-        q = parse_qs(urlparse(url).query)
-        lower = int(q["from"][0])
-        pending = [e for e in self.entries if int(e["tick"]) > lower]
-        page = pending[: self.page_size]
-        body = "\n".join(json.dumps(e) for e in page).encode()
-        if not page:
-            return 204, {
-                "x-arango-replication-lastincluded": "0",
-                "x-arango-replication-checkmore": "false",
-            }, b""
-        return 200, {
-            "x-arango-replication-lastincluded": page[-1]["tick"],
-            "x-arango-replication-checkmore":
-                "true" if len(pending) > len(page) else "false",
-        }, body
+from tests import wal_fake
 
 
 def _entry(tick, typ=UPSERT_DOCUMENT, cuid="h123/1", key="k", **data):
@@ -73,188 +21,15 @@ def _entry(tick, typ=UPSERT_DOCUMENT, cuid="h123/1", key="k", **data):
     }
 
 
-@pytest.fixture
-def wal_client():
-    def make(entries, page_size=2):
-        server = ScriptedWalServer(entries, page_size)
-        client = ArangoWalClient(
-            ArangoWalConfig(db="testdb"), transport=server.transport
-        )
-        return client, server
-
-    return make
-
-
-def test_last_tick_and_tail_page(wal_client):
-    client, _ = wal_client([_entry(10), _entry(20)])
+def test_last_tick_and_tail_page(tmp_path):
+    wal = str(tmp_path / "wal.json")
+    wal_fake.write_wal(wal, [_entry(10), _entry(20)])
+    client = ArangoWalClient(
+        ArangoWalConfig(db="testdb"),
+        transport=wal_fake.make_transport({"walfile": wal}),
+    )
     assert client.get_last_tick()["tick"] == "20"
     page = client.tail(0)
     assert [e["tick"] for e in page["content"]] == ["10", "20"]
     assert page["last_included"] == "20"
     assert page["check_more"] is False
-
-
-def test_log_generator_replay_protocol(wal_client):
-    """The reference's retry contract (test_producer.py:28-58): nack a
-    batch -> the SAME tick range is re-fetched from the server; ack ->
-    the cursor advances; the trailing empty page ends iteration."""
-    client, server = wal_client(
-        [_entry(1), _entry(2), _entry(3)], page_size=2
-    )
-    gen = WalTailCursor(client, 0)
-
-    t1 = next(gen)["content"]
-    gen.ack(False)  # nack: replay
-    t2 = next(gen)["content"]
-    gen.ack(True)  # ack: advance
-    t3 = next(gen)["content"]
-    gen.ack(True)
-
-    assert t1 == t2  # replay served the identical batch
-    assert [e["tick"] for e in t1] == ["1", "2"]
-    assert [e["tick"] for e in t3] == ["3"]
-    with pytest.raises(StopIteration):
-        next(gen)
-    # on the wire: two identical `from=0` fetches (the replay), then
-    # from=2; NO fourth fetch — an acked page with check_more=false ends
-    # iteration without an extra empty round-trip (reader.py:41-55).
-    froms = [u.split("from=")[1].split("&")[0]
-             for u in server.requests if "tail" in u]
-    assert froms == ["0", "0", "2"]
-
-
-def test_collect_logs_filters_ops_and_collections(wal_client):
-    entries = [
-        _entry(1, typ=START_TRANSACTION),
-        _entry(2, cuid="h123/1"),                    # watched upsert
-        _entry(3, cuid="h999/9"),                    # unwatched collection
-        _entry(4, typ=REMOVE_DOCUMENT, cuid="h123/1"),
-        _entry(5, typ=COMMIT_TRANSACTION),
-    ]
-    client, _ = wal_client(entries, page_size=10)
-    gen = collect_logs(client, 0, None, {"events": "h123/1"})
-    batch = gen.send(None)
-    assert [e["tick"] for e in batch["content"]] == ["2", "4"]
-    with pytest.raises(StopIteration):
-        gen.send(True)
-
-
-def test_set_tick_if_not_set_bootstrap(wal_client, tmp_path):
-    client, _ = wal_client([_entry(42)])
-    store = FileTickStore(str(tmp_path / "last-tick.txt"))
-    assert store.get() is None
-    assert set_tick_if_not_set(client, store) == "42"
-    assert store.get() == 42
-    # second start: already set, no-op (reference asserts the same)
-    assert set_tick_if_not_set(client, store) is None
-
-
-def test_forward_to_jsonl_end_to_end_spark(wal_client, tmp_path, spark):
-    """Forwarded WAL pages -> JSONL envelope files -> the existing Spark
-    envelope reader -> CDC preprocess/merge: upsert then update then
-    delete resolve exactly as the live pipeline would."""
-    from arango_clickhouse_replica_spark.operators.cdc import (
-        latest_alive,
-        preprocess_envelopes,
-    )
-    from arango_clickhouse_replica_spark.sources.cdc_envelopes import (
-        read_envelopes_jsonl,
-    )
-
-    entries = [
-        _entry(1, key="a", v=1),
-        _entry(2, key="b", v=1),
-        _entry(3, key="a", v=2),                      # update wins
-        _entry(4, typ=REMOVE_DOCUMENT, key="b", v=1), # delete wins
-        _entry(5, cuid="h999/9", key="x", v=9),       # unwatched: dropped
-    ]
-    # distinct _key per logical doc: strip the tick suffix _entry appends
-    for e in entries:
-        e["data"]["_key"] = e["data"]["_key"][0]
-
-    client, _ = wal_client(entries, page_size=2)
-    store = FileTickStore(str(tmp_path / "tick"))
-    set_tick_if_not_set(client, store)
-    store.set(0)  # replicate from the beginning for the test
-    out = str(tmp_path / "envelopes")
-    written = forward_to_jsonl(client, store, {"events": "h123/1"}, out)
-    assert len(written) == 3  # ceil(5/2) pages
-    assert store.get() == 5
-
-    data_schema = T.StructType(
-        [T.StructField("_key", T.StringType()), T.StructField("v", T.LongType())]
-    )
-    env = read_envelopes_jsonl(spark, out, data_schema)
-    state = latest_alive(preprocess_envelopes(env), keys=["_key"])
-    rows = {r["_key"]: r["v"] for r in state.collect()}
-    assert rows == {"a": 2}  # b deleted, a updated, x never ingested
-
-
-def test_forward_is_idempotent_after_restart(wal_client, tmp_path):
-    """Re-running the forwarder after a crash re-lands at most the last
-    page under the SAME file name — the at-least-once window the
-    version-replacing merge absorbs."""
-    entries = [_entry(1), _entry(2), _entry(3)]
-    client, _ = wal_client(entries, page_size=2)
-    store = FileTickStore(str(tmp_path / "tick"))
-    store.set(0)
-    out = str(tmp_path / "env")
-    first = forward_to_jsonl(client, store, {"events": "h123/1"}, out)
-    # simulate losing the last ack: rewind the tick store one page
-    store.set(2)
-    second = forward_to_jsonl(client, store, {"events": "h123/1"}, out)
-    assert [p.split("/")[-1] for p in second] == ["wal-3.jsonl"]
-    assert set(first) >= set(second)  # same names: overwrite, no dup files
-
-
-def test_forward_sharded_routes_per_collection(wal_client, tmp_path):
-    """Sharded forwarder: two watched collections interleaved in one WAL
-    land in per-collection directories (the one-topic-per-collection
-    shape), page-atomically, with the tick store advancing once per
-    page; re-forwarding replays idempotently."""
-    import json as _json
-    import os as _os
-
-    entries = [
-        _entry(1, cuid="h123/1", key="a", v=1),
-        _entry(2, cuid="h456/2", key="u", v=1),
-        _entry(3, cuid="h123/1", key="b", v=1),
-        _entry(4, cuid="h999/9", key="x", v=9),   # unwatched: dropped
-        _entry(5, cuid="h456/2", key="w", v=2),
-    ]
-    client, _ = wal_client(entries, page_size=2)
-    store = FileTickStore(str(tmp_path / "tick"))
-    set_tick_if_not_set(client, store)
-    store.set(0)
-    out = str(tmp_path / "sharded")
-    colls = {"events": "h123/1", "users": "h456/2"}
-
-    from arango_clickhouse_replica_spark.sources.arango_wal import (
-        forward_to_jsonl_sharded,
-    )
-
-    written = forward_to_jsonl_sharded(client, store, colls, out)
-    assert set(written) == {"events", "users"}
-
-    def docs(coll):
-        rows = []
-        d = _os.path.join(out, coll)
-        for f in sorted(_os.listdir(d)):
-            with open(_os.path.join(d, f)) as fh:
-                rows += [_json.loads(line) for line in fh]
-        return rows
-
-    ev, us = docs("events"), docs("users")
-    assert [e["tick"] for e in ev] == ["1", "3"]
-    assert [e["tick"] for e in us] == ["2", "5"]
-    assert all(e["cuid"] == "h123/1" for e in ev)
-    assert all(e["cuid"] == "h456/2" for e in us)
-    assert store.get() == 5  # cursor at the last acked page
-
-    # replay from scratch rewrites the same tick-named files, no dups
-    before = {c: sorted(_os.listdir(_os.path.join(out, c))) for c in colls}
-    store.set(0)
-    forward_to_jsonl_sharded(client, store, colls, out)
-    after = {c: sorted(_os.listdir(_os.path.join(out, c))) for c in colls}
-    assert before == after
-    assert [e["tick"] for e in docs("events")] == ["1", "3"]

@@ -1,18 +1,22 @@
 """Native arango_wal streaming DataSource (sources/wal_datasource.py):
 end-to-end Structured Streaming against a scripted WAL server —
-delivery, filtering, mid-stream growth, checkpoint-restart replay, and
-the bridge into the CDC latest-state merge."""
+delivery, filtering, start position, mid-stream growth,
+checkpoint-restart replay, transactions, and the bridge into the CDC
+latest-state merge."""
 
 import json
+import os
 import time
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from arango_clickhouse_replica_spark.sources.wal_datasource import register
 from tests import wal_fake
 from tests.test_arango_wal import _entry
 from arango_clickhouse_replica_spark.sources.arango_wal import (
+    ABORT_TRANSACTION,
     COMMIT_TRANSACTION,
     REMOVE_DOCUMENT,
     START_TRANSACTION,
@@ -64,10 +68,11 @@ def test_stream_delivers_and_filters_envelopes(spark, tmp_path):
         .start()
     )
     sink = spark.sql("SELECT * FROM wal_sink1")
-    _drain(q, sink, want_rows=3)
+    _drain(q, sink, want_rows=5)
     rows = {r.tick: r for r in sink.collect()}
-    # transaction markers and the unwatched collection are gone
-    assert set(rows) == {"1", "3", "5"}
+    # the unwatched collection is gone; transaction markers (no cuid)
+    # pass, for the pipeline's transaction gate
+    assert set(rows) == {"1", "2", "3", "4", "5"}
     assert rows["5"].type == REMOVE_DOCUMENT
     assert json.loads(rows["1"].data)["v"] == 1
 
@@ -410,3 +415,197 @@ def test_replicate_cli_wal_mode(spark, tmp_path, monkeypatch):
         .select("_key", "v")
     )
     assert {(r._key, r.v) for r in alive.collect()} == {("a", 2)}
+
+
+def _memory_query(df, name, tmp_path):
+    return (
+        df.writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(processingTime="200 milliseconds")
+        .start()
+    )
+
+
+def test_start_tick_delivers_only_later_ticks(spark, tmp_path):
+    wal = str(tmp_path / "wal.json")
+    wal_fake.write_wal(wal, [_entry(t, v=t) for t in (1, 2, 3, 4, 5)],
+                       page_size=2)
+    q = _memory_query(_reader(spark, wal, startTick="3"), "wal_sink5",
+                      tmp_path)
+    q.processAllAvailable()
+    q.stop()
+    q.awaitTermination(30)
+    ticks = {r.tick for r in spark.sql("SELECT * FROM wal_sink5").collect()}
+    assert ticks == {"4", "5"}
+
+
+def test_from_latest_delivers_only_later_writes(spark, tmp_path):
+    """fromLatest=true starts at the server's head tick when the query
+    first starts: history before it belongs to the snapshot."""
+    wal = str(tmp_path / "wal.json")
+    wal_fake.write_wal(wal, [_entry(1, v=1), _entry(2, v=2)], page_size=2)
+    q = _memory_query(_reader(spark, wal, fromLatest="true"), "wal_sink6",
+                      tmp_path)
+    # the first trigger has taken the head tick (2) as its start
+    deadline = time.monotonic() + 60
+    while q.lastProgress is None and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert q.lastProgress is not None
+    wal_fake.append_entries(wal, [_entry(3, v=3), _entry(4, v=4)])
+    q.processAllAvailable()
+    q.stop()
+    q.awaitTermination(30)
+    ticks = {r.tick for r in spark.sql("SELECT * FROM wal_sink6").collect()}
+    assert ticks == {"3", "4"}
+
+
+# -- CdcPipeline.start_wal: replay and transactions -------------------------
+
+_DOC_SCHEMA = T.StructType([
+    T.StructField("_key", T.StringType()),
+    T.StructField("v", T.LongType()),
+])
+
+
+def _doc(tick, key, v, tid="0"):
+    e = _entry(tick, cuid="c_events", v=v)
+    e["data"]["_key"] = key
+    e["tid"] = tid
+    return e
+
+
+def _marker(tick, typ, tid):
+    return {"tick": str(tick), "type": typ, "db": "testdb", "cuid": None,
+            "tid": tid, "data": None}
+
+
+def _start_pipe(spark, tmp_path, wal, txn_atomic=False):
+    from arango_clickhouse_replica_spark.streaming.pipeline import CdcPipeline
+
+    pipe = CdcPipeline(
+        spark,
+        target_dir=str(tmp_path / "target"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        keys=["_key"],
+        tracked_cuids=["c_events"],
+        txn_atomic=txn_atomic,
+    )
+    q = pipe.start_wal(
+        data_schema=_DOC_SCHEMA,
+        wal_options={
+            "transportFactory": "tests.wal_fake:make_transport",
+            "walFile": wal,
+            "host": "scripted",
+        },
+        collections=["c_events"],
+        processing_time="200 milliseconds",
+    )
+    return pipe, q
+
+
+def _alive(pipe):
+    return {(r._key, r.v)
+            for r in pipe.latest_alive().select("_key", "v").collect()}
+
+
+def _pending_keys(pipe):
+    pending = pipe.pending()
+    return set() if pending is None else {
+        r.data["_key"] for r in pending.collect()}
+
+
+def test_restart_rereads_last_batch_between_offsets(spark, tmp_path):
+    """Drop the last batch's commit (as perfbench's replay check does)
+    and restart: Spark re-runs that batch from the offsets it logged,
+    through readBetweenOffsets, so it reads the same ticks and leaves
+    the served view unchanged."""
+    entries = [_doc(t, k, t) for t, k in
+               zip((10, 20, 30, 40, 50, 60), "abcabd")]
+    wal = str(tmp_path / "wal.json")
+    wal_fake.write_wal(wal, entries, page_size=2)
+    pipe, q = _start_pipe(spark, tmp_path, wal)
+    q.processAllAvailable()
+    q.stop()
+    q.awaitTermination(30)
+    batches = [p for p in q.recentProgress if p.numInputRows > 0]
+    assert [p.numInputRows for p in batches] == [2, 2, 2]
+    last = batches[-1].batchId
+    part = str(tmp_path / "target" / f"batch_id={last}")
+
+    def part_ticks():
+        return sorted(r._ver for r in spark.read.parquet(part).collect())
+
+    assert part_ticks() == [50, 60]
+    before = _alive(pipe)
+    assert before == {("a", 40), ("b", 50), ("c", 30), ("d", 60)}
+
+    commits = str(tmp_path / "ckpt" / "commits")
+    for name in (str(last), f".{last}.crc"):
+        os.remove(os.path.join(commits, name))
+    # One entry per page now: a re-run that fetched a fresh page from its
+    # start tick would read (40, 50] only.
+    wal_fake.write_wal(wal, entries, page_size=1)
+    pipe2, q2 = _start_pipe(spark, tmp_path, wal)
+    q2.processAllAvailable()
+    q2.stop()
+    q2.awaitTermination(30)
+    rerun = [p for p in q2.recentProgress if p.batchId == last]
+    assert rerun and rerun[0].numInputRows == 2
+    assert part_ticks() == [50, 60]
+    assert _alive(pipe2) == before
+
+
+def test_wal_aborted_transaction_never_applies(spark, tmp_path):
+    wal = str(tmp_path / "wal.json")
+    wal_fake.write_wal(wal, [
+        _doc(1, "a", 1),
+        _doc(2, "b", 2, tid="7"),
+        _doc(3, "c", 3, tid="7"),
+        _marker(4, ABORT_TRANSACTION, "7"),
+    ], page_size=2)
+    pipe, q = _start_pipe(spark, tmp_path, wal, txn_atomic=True)
+    q.processAllAvailable()
+    q.stop()
+    q.awaitTermination(30)
+    assert _alive(pipe) == {("a", 1)}
+    assert _pending_keys(pipe) == set()
+
+
+def test_wal_transaction_applies_with_its_commit_page(spark, tmp_path):
+    """Rows of tid 7 arrive on two tail pages before its COMMIT: none of
+    them is served until the batch that reads the COMMIT applies."""
+    wal = str(tmp_path / "wal.json")
+    wal_fake.write_wal(wal, [
+        _doc(1, "a", 1),
+        _doc(2, "b", 2, tid="7"),
+        _doc(3, "c", 3, tid="7"),
+    ], page_size=2)
+    pipe, q = _start_pipe(spark, tmp_path, wal, txn_atomic=True)
+    try:
+        q.processAllAvailable()
+        assert _alive(pipe) == {("a", 1)}
+        assert _pending_keys(pipe) == {"b", "c"}
+        wal_fake.append_entries(wal, [_marker(4, COMMIT_TRANSACTION, "7")])
+        q.processAllAvailable()
+        assert _alive(pipe) == {("a", 1), ("b", 2), ("c", 3)}
+        assert _pending_keys(pipe) == set()
+    finally:
+        q.stop()
+        q.awaitTermination(30)
+
+
+def test_wal_document_outside_transaction_applies_in_its_batch(spark, tmp_path):
+    """Arango writes tid "0" on an operation outside any transaction: it
+    applies in the batch that reads it, while the open tid 7 beside it
+    waits."""
+    wal = str(tmp_path / "wal.json")
+    wal_fake.write_wal(wal, [_doc(1, "a", 1), _doc(2, "b", 2, tid="7")],
+                       page_size=2)
+    pipe, q = _start_pipe(spark, tmp_path, wal, txn_atomic=True)
+    q.processAllAvailable()
+    q.stop()
+    q.awaitTermination(30)
+    assert [p.numInputRows for p in q.recentProgress
+            if p.numInputRows > 0] == [2]
+    assert _alive(pipe) == {("a", 1)}
+    assert _pending_keys(pipe) == {"b"}

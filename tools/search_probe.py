@@ -2,8 +2,8 @@
 """Pruning + throughput probe for the search serving CLI
 (tools/search.py) — VERDICT r7 item 4.
 
-The index layout's two scale claims get the same evidence standard the
-sharded-WAL forwarder got (inputFiles-level proof, not prose):
+The index layout's two scale claims get inputFiles-level proof, not
+prose:
 
 1. **Dense pruning**: a vector query reads ONLY its nprobe probed cell
    directories — asserted via ``inputFiles()`` on the serving scan
