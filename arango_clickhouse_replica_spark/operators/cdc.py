@@ -35,7 +35,7 @@ only, which preserves per-key monotonicity and makes replays idempotent.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -48,6 +48,42 @@ TXN_MARKERS = (2200, 2201, 2202)  # filtered out (publisher.py:54-58)
 
 VER_COL = "_ver"
 DELETED_COL = "_deleted"
+
+
+def preprocess_columns(
+    *,
+    tracked_cuids: Sequence[str] | None = None,
+    initial_tick: int | None = None,
+    doc_col: str = "data",
+    tick_col: str = "tick",
+    type_col: str = "type",
+    cuid_col: str = "cuid",
+) -> tuple[Column, list[Column]]:
+    """The envelope preprocess as Columns: ``(keep, projection)`` such that
+    ``env.filter(keep).select(*projection)`` is ``preprocess_envelopes``.
+    They depend on the arguments only, not on a batch, so a stream builds
+    them once and applies them to every micro-batch."""
+    # P1: keep only document upserts/removes; drop txn markers & untracked
+    p1 = F.col(type_col).isin(UPSERT_DOCUMENT, REMOVE_DOCUMENT)
+    if tracked_cuids is not None:
+        p1 = p1 & F.col(cuid_col).isin(list(tracked_cuids))
+    # P2: tombstone filter (null payload)
+    rest = F.col(doc_col).isNotNull()
+    # P3: replay cutoff after a snapshot (tick recorded before snapshot read)
+    if initial_tick is not None:
+        rest = rest & (F.col(tick_col).cast("long") >= F.lit(int(initial_tick)))
+    # Nested as the optimizer combines one filter per step, so the
+    # optimized plan equals that of the per-step chain.
+    keep = p1 & rest
+    # P5 + D1 + D2: the payload, a deterministic version from the WAL
+    # position, and the soft-delete flag
+    projection = [
+        F.col(f"{doc_col}.*"),
+        F.col(tick_col).cast("long").alias(VER_COL),
+        F.when(F.col(type_col) == REMOVE_DOCUMENT, F.lit(1))
+        .otherwise(F.lit(0)).alias(DELETED_COL),
+    ]
+    return keep, projection
 
 
 def preprocess_envelopes(
@@ -63,26 +99,15 @@ def preprocess_envelopes(
     """WAL envelope stream -> typed change rows ready for the mapping DSL.
 
     Output: the payload struct fields of ``doc_col`` flattened, plus
-    ``_ver`` (monotone version from the tick) and ``_deleted``.
+    ``_ver`` (monotone version from the tick) and ``_deleted``. One
+    ``filter`` and one ``select`` over ``preprocess_columns``.
     """
-    df = env
-    # P1: keep only document upserts/removes; drop txn markers & untracked
-    keep = F.col(type_col).isin(UPSERT_DOCUMENT, REMOVE_DOCUMENT)
-    if tracked_cuids is not None:
-        keep = keep & F.col(cuid_col).isin(list(tracked_cuids))
-    df = df.filter(keep)
-    # P2: tombstone filter (null payload)
-    df = df.filter(F.col(doc_col).isNotNull())
-    # P3: replay cutoff after a snapshot (tick recorded before snapshot read)
-    if initial_tick is not None:
-        df = df.filter(F.col(tick_col).cast("long") >= F.lit(int(initial_tick)))
-    # D1 + D2: deterministic version from the WAL position; soft-delete flag
-    df = df.withColumn(VER_COL, F.col(tick_col).cast("long")).withColumn(
-        DELETED_COL,
-        F.when(F.col(type_col) == REMOVE_DOCUMENT, F.lit(1)).otherwise(F.lit(0)),
+    keep, projection = preprocess_columns(
+        tracked_cuids=tracked_cuids, initial_tick=initial_tick,
+        doc_col=doc_col, tick_col=tick_col, type_col=type_col,
+        cuid_col=cuid_col,
     )
-    # P5: project payload + metadata
-    return df.select(F.col(f"{doc_col}.*"), F.col(VER_COL), F.col(DELETED_COL))
+    return env.filter(keep).select(*projection)
 
 
 def latest_state(
@@ -156,15 +181,26 @@ TXN_ABORT = 2202
 
 
 class TxnSplit:
-    """Three-way split of an envelope set by transaction outcome."""
+    """Three-way split of an envelope set by transaction outcome.
 
-    __slots__ = ("applyable", "deferred", "aborted")
+    ``aborted`` is built on its first read, by the function passed in:
+    the streaming gate writes only the other two parts, and building a
+    frame costs py4j calls on every micro-batch."""
+
+    __slots__ = ("applyable", "deferred", "_aborted", "_build_aborted")
 
     def __init__(self, applyable: DataFrame, deferred: DataFrame,
-                 aborted: DataFrame) -> None:
+                 build_aborted: Callable[[], DataFrame]) -> None:
         self.applyable = applyable
         self.deferred = deferred
-        self.aborted = aborted
+        self._aborted: DataFrame | None = None
+        self._build_aborted = build_aborted
+
+    @property
+    def aborted(self) -> DataFrame:
+        if self._aborted is None:
+            self._aborted = self._build_aborted()
+        return self._aborted
 
 
 def txn_atomic_split(
@@ -224,10 +260,9 @@ def txn_atomic_split(
     deferred = tagged.filter(
         F.col(tid_col).isNotNull() & F.col("__term").isNull()
     ).drop("__tid", "__term")
-    aborted = tagged.filter(F.col("__term") == TXN_ABORT).drop(
-        "__tid", "__term"
-    )
-    return TxnSplit(applyable, deferred, aborted)
+    return TxnSplit(applyable, deferred, lambda: tagged.filter(
+        F.col("__term") == TXN_ABORT
+    ).drop("__tid", "__term"))
 
 
 def collect_terminators(
@@ -303,5 +338,5 @@ def txn_split_by(
     return TxnSplit(
         applyable=docs.filter(tid.isNull() | committed),
         deferred=docs.filter(tid.isNotNull() & ~terminated),
-        aborted=docs.filter(tid.isNotNull() & terminated & ~committed),
+        build_aborted=lambda: docs.filter(tid.isNotNull() & terminated & ~committed),
     )

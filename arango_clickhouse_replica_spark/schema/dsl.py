@@ -8,11 +8,17 @@ default / validate over Python dicts) and its YAML table mapping format
 Instead of a per-row interpreter, the mapping compiles ONCE into:
 
 - one ``Column`` expression per target property (rename + cast + default),
-- one boolean validity predicate + per-property error messages,
+- one ``_errors`` array of per-property error messages, and the
+  valid/rejected predicates over it,
 
 and applies as a single ``df.select`` — analyzed by Catalyst, executed in
 whole-stage codegen, no Python in the row path. At 100 TB the transform is
 a narrow map stage: no shuffle, fully pipelined with the scan.
+
+The streaming path keeps the "once": ``CdcPipeline`` compiles a mapping on
+the first micro-batch of each envelope schema and reuses the
+``CompiledMapping`` for every later batch of that schema, so a batch pays
+only for composing the frames (``CompiledMapping.apply``).
 
 Semantics parity with the reference interpreter:
 
@@ -213,9 +219,16 @@ class TransformResult:
 
 @dataclass
 class CompiledMapping:
+    """A mapping compiled against one source schema. Every Column here is
+    built once by ``compile_mapping``; ``apply`` only composes frames, so
+    applying it to each micro-batch of a schema costs no expression
+    building. The Columns are handles in one session's JVM."""
+
     mapping: TableMapping
     value_cols: list[Column]
-    error_cols: list[Column]
+    errors: Column  # array<string> of the row's non-null error messages
+    is_valid: Column
+    is_rejected: Column
     spark_schema: T.StructType
 
     def apply(self, df: DataFrame, passthrough: Sequence[str] = ()) -> TransformResult:
@@ -227,11 +240,9 @@ class CompiledMapping:
         declare them — without them the version merge and soft-delete
         filter would silently degrade).
         """
-        errors = F.filter(F.array(*self.error_cols), lambda x: x.isNotNull())
-        with_err = df.withColumn("_errors", errors)
-        extra = [F.col(c) for c in passthrough]
-        valid = with_err.filter(F.size("_errors") == 0).select(*self.value_cols, *extra)
-        rejected = with_err.filter(F.size("_errors") > 0)
+        with_err = df.withColumn("_errors", self.errors)
+        valid = with_err.filter(self.is_valid).select(*self.value_cols, *passthrough)
+        rejected = with_err.filter(self.is_rejected)
         return TransformResult(valid=valid, rejected=rejected)
 
 
@@ -360,10 +371,13 @@ def compile_mapping(
         error_cols.append(err)
         out_fields.append(T.StructField(prop.name, out_t, True))
 
+    n_errors = F.size("_errors")
     return CompiledMapping(
         mapping=mapping,
         value_cols=value_cols,
-        error_cols=error_cols,
+        errors=F.filter(F.array(*error_cols), lambda x: x.isNotNull()),
+        is_valid=n_errors == 0,
+        is_rejected=n_errors > 0,
         spark_schema=T.StructType(out_fields),
     )
 

@@ -29,6 +29,15 @@ monitor's metrics ride on them via ``DataFrame.observe``; appends are
 partition-parallel; per-key ordering is irrelevant by design (M5) because
 the merge is version-based, so arbitrary source parallelism is safe — the
 reference needed 1 Kafka partition per topic for ordering; we do not.
+
+The Spark driver builds each batch's plan from PySpark calls, and every
+Column built costs py4j round trips. So what depends only on the
+envelope schema is built once per schema and pipeline (``_program``):
+the preprocess predicate and projection, the compiled mapping with its
+``_errors`` and valid/rejected predicates, and the ``_ver``/``_deleted``
+passthrough. Per batch the Spark driver only composes frames over them,
+and builds what depends on the batch's data: its observations, the
+terminator membership sets, the pending-buffer read and the writes.
 """
 
 from __future__ import annotations
@@ -36,21 +45,24 @@ from __future__ import annotations
 import os
 import shutil
 from collections.abc import Sequence
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.cdc import (
+    DELETED_COL,
+    VER_COL,
     collect_terminators,
     latest_alive,
     latest_state,
-    preprocess_envelopes,
+    preprocess_columns,
     txn_split_by,
 )
 from ..operators.part_store import PartStore
-from ..schema.dsl import TableMapping, compile_mapping
+from ..schema.dsl import CompiledMapping, TableMapping, compile_mapping
 from .merge_sink import BucketedMergeSink
 from .monitor import TickGapMonitor
 
@@ -77,6 +89,17 @@ class _Watch:
     def count(self, name: str) -> int:
         """A watched frame's row count; 0 if the batch wrote no such frame."""
         return self.get(name)["n"] if name in self.obs else 0
+
+
+class _BatchProgram(NamedTuple):
+    """What a micro-batch's apply builds from its envelope schema: the
+    preprocess predicate and projection, the compiled mapping and the
+    ``_ver``/``_deleted`` columns it must pass through."""
+
+    keep: Column
+    projection: list[Column]
+    mapping: CompiledMapping | None
+    passthrough: list[str]
 
 
 class CdcPipeline:
@@ -114,6 +137,9 @@ class CdcPipeline:
         # unterminated rows persist in a pending buffer unioned into the
         # next batch. Requires `tid` on the envelope wire.
         self.txn_atomic = txn_atomic
+        # Keyed by the raw batch schema. Per instance, never per module:
+        # the Columns are handles in this session's JVM.
+        self._programs: dict[T.StructType, _BatchProgram] = {}
 
     # -- txn-atomic pending buffer -------------------------------------------
 
@@ -141,8 +167,8 @@ class CdcPipeline:
             os.path.join(self._pending_root(), f"batch_id={ids[-1]}")
         )
 
-    def _txn_gate(self, batch: DataFrame, batch_id: int,
-                  watch: _Watch) -> DataFrame:
+    def _txn_gate(self, batch: DataFrame, schema: T.StructType,
+                  batch_id: int, watch: _Watch) -> DataFrame:
         """Union the pending buffer in, split on txn outcome, persist the
         new deferred set (idempotent per-batch overwrite — a retried
         batch rewrites the SAME generation), return the applyable rows.
@@ -160,7 +186,7 @@ class CdcPipeline:
             # The buffer was written from earlier batches of this schema:
             # reading with it spares a footer-inference job per batch.
             batch = batch.unionByName(
-                self.spark.read.schema(batch.schema).parquet(
+                self.spark.read.schema(schema).parquet(
                     os.path.join(
                         self._pending_root(), f"batch_id={prior[-1]}"
                     )
@@ -181,6 +207,29 @@ class CdcPipeline:
 
     # -- write path ---------------------------------------------------------
 
+    def _program(self, batch: DataFrame, schema: T.StructType) -> _BatchProgram:
+        """The columns for a batch of ``schema``, built on its first batch.
+        A restart on an envelope schema that gained a field builds anew."""
+        program = self._programs.get(schema)
+        if program is None:
+            keep, projection = preprocess_columns(
+                tracked_cuids=self.tracked_cuids,
+                initial_tick=self.initial_tick,
+            )
+            compiled, passthrough = None, []
+            if self.mapping is not None:
+                rows = batch.filter(keep).select(*projection)
+                compiled = compile_mapping(self.mapping, rows.schema)
+                # Re-attach _ver/_deleted when the mapping does not declare
+                # them: without _ver, latest() raises; without _deleted,
+                # latest_alive() silently stops filtering soft deletes.
+                declared = {p.name for p in self.mapping.properties}
+                passthrough = [c for c in (VER_COL, DELETED_COL)
+                               if c not in declared]
+            program = _BatchProgram(keep, projection, compiled, passthrough)
+            self._programs[schema] = program
+        return program
+
     def _apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         # The batch feeds up to four actions (terminator collect, pending
         # write, dead-letter write, target write; or the merge sink's
@@ -196,30 +245,21 @@ class CdcPipeline:
         if multi_action:
             raw = batch.persist()
             batch = raw
-        monitor = self.tick_monitor if "tick" in batch.columns else None
+        schema = batch.schema
+        monitor = self.tick_monitor if "tick" in schema.names else None
         watch = _Watch(monitor is not None)
         try:
+            program = self._program(batch, schema)
             if monitor is not None:
                 # A2: tick-continuity metrics on the RAW batch (pre-filter
                 # — txn markers occupy ticks too), publisher.py:140-141
                 # analog, observed on the batch's first action.
                 batch = watch(batch, "batch", monitor.metrics())
-            if self.txn_atomic and "tid" in batch.columns:
-                batch = self._txn_gate(batch, batch_id, watch)
-            rows = preprocess_envelopes(
-                batch,
-                tracked_cuids=self.tracked_cuids,
-                initial_tick=self.initial_tick,
-            )
-            if self.mapping is not None:
-                compiled = compile_mapping(self.mapping, rows.schema)
-                # Re-attach _ver/_deleted when the mapping does not declare
-                # them: without _ver, latest() raises; without _deleted,
-                # latest_alive() silently stops filtering soft deletes.
-                declared = {p.name for p in self.mapping.properties}
-                meta = [c for c in ("_ver", "_deleted")
-                        if c not in declared and c in rows.columns]
-                result = compiled.apply(rows, passthrough=meta)
+            if self.txn_atomic and "tid" in schema.names:
+                batch = self._txn_gate(batch, schema, batch_id, watch)
+            rows = batch.filter(program.keep).select(*program.projection)
+            if program.mapping is not None:
+                result = program.mapping.apply(rows, passthrough=program.passthrough)
                 rows = result.valid
                 if self.dead_letter_dir is not None:
                     # Idempotent per-batch path: a retried/replayed batch

@@ -3,7 +3,12 @@ tick cutoff, _ver/_deleted stamping) plus latest-state merge semantics
 (version wins, delete wins, replay/overlap idempotence) that the reference
 delegates to ClickHouse ReplacingMergeTree."""
 
+import re
+from collections import Counter
+
+import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from arango_clickhouse_replica_spark.operators.cdc import (
     latest_alive,
@@ -41,6 +46,40 @@ def test_preprocess_mirror_of_reference_case(spark):
         {"_key": "2", "name": "t1", "attr1": 2, "_ver": 101, "_deleted": 0},
         {"_key": "3", "name": "t1", "attr1": 3, "_ver": 102, "_deleted": 1},
     ]
+
+
+def _chained_preprocess(env, *, tracked_cuids=None, initial_tick=None):
+    """The reference: one DataFrame call per step (P1, P2, P3, D1, D2, P5)."""
+    keep = F.col("type").isin(2300, 2302)
+    if tracked_cuids is not None:
+        keep = keep & F.col("cuid").isin(list(tracked_cuids))
+    df = env.filter(keep).filter(F.col("data").isNotNull())
+    if initial_tick is not None:
+        df = df.filter(F.col("tick").cast("long") >= F.lit(int(initial_tick)))
+    df = df.withColumn("_ver", F.col("tick").cast("long")).withColumn(
+        "_deleted", F.when(F.col("type") == 2302, F.lit(1)).otherwise(F.lit(0))
+    )
+    return df.select(F.col("data.*"), F.col("_ver"), F.col("_deleted"))
+
+
+def _optimized(df):
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.sub(r"#\d+L?", "", plan)
+
+
+@pytest.mark.parametrize("tracked_cuids, initial_tick", [
+    (None, None), (["c1"], None), (None, 101), (["c1", "c_untracked"], 102),
+])
+def test_preprocess_matches_chained_steps(spark, tracked_cuids, initial_tick):
+    """One filter and one select give the rows, schema and optimized plan
+    of the per-step chain, over upserts, removes, a tombstone, a txn
+    marker and an untracked collection."""
+    env = _envelopes(spark)
+    kw = dict(tracked_cuids=tracked_cuids, initial_tick=initial_tick)
+    got, want = preprocess_envelopes(env, **kw), _chained_preprocess(env, **kw)
+    assert got.schema == want.schema
+    assert Counter(got.collect()) == Counter(want.collect())
+    assert _optimized(got) == _optimized(want)
 
 
 def test_latest_state_version_wins(spark):

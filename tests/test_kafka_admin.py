@@ -4,6 +4,8 @@ carry-through on recreate, failure propagation — against an injected
 in-memory client (no broker in this environment; the protocol is the
 contract, mirroring reference sync.py:18-72)."""
 
+from pathlib import Path
+
 from arango_clickhouse_replica_spark.sources.kafka_admin import KafkaTopicAdmin
 
 
@@ -77,7 +79,7 @@ def test_cli_kafka_admin_flag_is_cleanly_env_gated():
 
     import pytest
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     import tools.replicate as replicate
 
     old = sys.argv

@@ -4,6 +4,7 @@ commit marker, aborted txns never land, unterminated txns defer in the
 pending buffer across batch cuts."""
 
 import os
+import threading
 from collections import Counter
 
 import pytest
@@ -255,6 +256,106 @@ def test_micro_batch_job_budget(spark, dirs, tmp_path):
         assert p.n_deferred == spark.read.parquet(
             os.path.join(dirs["ckpt"], "txn_pending", f"batch_id={p.batch_id}")).count()
     assert {r.eid for r in pipe.latest_alive().collect()} == {1, 3, 6}
+
+
+def _apply_batch_py4j_calls(spark, pipe, monkeypatch):
+    """Count, per micro-batch, the py4j commands sent from the
+    ``foreachBatch`` thread while ``pipe._apply_batch`` runs. Patch
+    before ``start``: the stream binds ``_apply_batch`` then."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, apply = client.send_command, pipe._apply_batch
+    per_batch, active = [], set()
+
+    def counting(*a, **kw):
+        if threading.get_ident() in active:
+            per_batch[-1] += 1
+        return send(*a, **kw)
+
+    def counted_apply(batch, batch_id):
+        per_batch.append(0)
+        active.add(threading.get_ident())
+        try:
+            apply(batch, batch_id)
+        finally:
+            active.discard(threading.get_ident())
+
+    monkeypatch.setattr(client, "send_command", counting)
+    monkeypatch.setattr(pipe, "_apply_batch", counted_apply)
+    return per_batch
+
+
+def test_micro_batch_py4j_budget(spark, dirs, tmp_path, monkeypatch):
+    """The job-budget pipeline (mapping, monitor, dead letters, txn gate)
+    builds its schema-dependent columns on the first batch only: every
+    later batch sends at most half the py4j commands that rebuilding
+    them per batch sent (1,304 per batch over these five batches)."""
+    pipe = _pipe(spark, dirs, keys=["eid"], mapping=_MAPPING,
+                 dead_letter_dir=str(tmp_path / "dead"),
+                 tick_monitor=TickGapMonitor())
+    per_batch = _apply_batch_py4j_calls(spark, pipe, monkeypatch)
+    _land(spark, dirs["env"], *[[
+        (10 * b, 2300, f"T{b}", 10 * b + 1, 1.0),
+        (10 * b + 1, 2300, f"T{b}", 10 * b + 2, None),   # rejected
+        (10 * b + 2, 2201, f"T{b}", None, None),
+        (10 * b + 3, 2300, f"U{b}", 10 * b + 3, 3.0),    # deferred
+        (10 * b + 4, 2300, None, 10 * b + 4, 4.0),
+    ] for b in range(1, 6)])
+    q = pipe.start(dirs["env"], _ENV, max_files_per_trigger=1)
+    q.awaitTermination()
+    print(f"py4j calls per batch: {per_batch}")  # shown by pytest -rP
+    assert len(per_batch) == 5
+    assert max(per_batch[1:]) <= 1304 // 2, per_batch
+    assert len({r.eid for r in pipe.latest_alive().collect()}) == 10
+
+
+def test_mapping_compiled_once_per_schema(spark, dirs, tmp_path, monkeypatch):
+    """Three batches of one envelope schema compile the mapping once. A
+    restart on a schema whose payload gained a field compiles it once
+    more, and the new field reaches the replica: set in the new rows,
+    null in the parts written before it existed (and for the row that
+    waited in the pending buffer across the restart)."""
+    import arango_clickhouse_replica_spark.streaming.pipeline as pipeline_mod
+
+    compiles = []
+    compile_mapping = pipeline_mod.compile_mapping
+
+    def counting(*a, **kw):
+        compiles.append(1)
+        return compile_mapping(*a, **kw)
+
+    monkeypatch.setattr(pipeline_mod, "compile_mapping", counting)
+    mapping = TableMapping.from_dict({"schema": {
+        "primary_key": ["eid"],
+        "properties": {
+            "eid": {"type": "int", "ref": "event_id"},
+            "v": {"type": "float", "ref": "value"},
+            "note": {"type": "str"},
+        },
+    }})
+    pipe = _pipe(spark, dirs, keys=["eid"], mapping=mapping)
+    _land(spark, dirs["env"], [(10, 2300, None, 1, 1.0)],
+          [(11, 2300, "T1", 2, 2.0)],                 # deferred
+          [(12, 2300, None, 3, 3.0)])
+    q = pipe.start(dirs["env"], _ENV, max_files_per_trigger=1)
+    q.awaitTermination()
+    assert len([p for p in q.recentProgress if p.numInputRows > 0]) == 3
+    assert len(compiles) == 1
+
+    env2 = T.StructType(_ENV.fields[:-1] + [T.StructField("data", T.StructType(
+        _DATA.fields + [T.StructField("note", T.StringType())]))])
+    for rows in ([(13, 2300, None, 4, 4.0, "n4"), (14, 2201, "T1", None, None, None)],
+                 [(15, 2300, None, 5, 5.0, "n5")]):
+        spark.createDataFrame(
+            [(t, ty, "c", tid, (eid, val, note) if eid is not None else None)
+             for (t, ty, tid, eid, val, note) in rows],
+            env2,
+        ).coalesce(1).write.mode("append").parquet(dirs["env"])
+    q = pipe.start(dirs["env"], env2, max_files_per_trigger=1)
+    q.awaitTermination()
+    assert len([p for p in q.recentProgress if p.numInputRows > 0]) == 2
+    assert len(compiles) == 2
+    assert {(r.eid, r.note) for r in pipe.latest_alive().collect()} == {
+        (1, None), (2, None), (3, None), (4, "n4"), (5, "n5")}
 
 
 def test_gate_batch_without_terminator(spark, dirs):

@@ -7,6 +7,7 @@ latest-state merge."""
 import json
 import os
 import time
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -374,7 +375,7 @@ def test_replicate_cli_wal_mode(spark, tmp_path, monkeypatch):
     run, and the resulting latest-state target."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     import tools.replicate as replicate
 
     entries = [
@@ -390,7 +391,7 @@ def test_replicate_cli_wal_mode(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("ARANGO_WAL_TRANSPORT_FACTORY",
                        "tests.wal_fake:make_transport")
     monkeypatch.setenv("ARANGO_WAL_FILE", wal)
-    monkeypatch.setenv("ARANGO_WAL_MAX_RUNTIME_S", "6")
+    monkeypatch.setenv("ARANGO_WAL_DRAIN_AND_STOP", "1")
     monkeypatch.setattr(
         sys, "argv",
         ["replicate.py", "--tables", "events",

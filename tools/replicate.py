@@ -245,14 +245,14 @@ def _run_wal_mode(spark, args, keys) -> None:
             )
         )
     print(f"tailing WAL {args.wal_url} for {args.tables}")
-    # test hook: bounded run instead of tail-forever
-    max_s = os.environ.get("ARANGO_WAL_MAX_RUNTIME_S")
+    # test hook: stop once the source is drained instead of tailing
+    # forever (bounded by work done, not wall time, so a cold JVM still
+    # commits every batch)
+    drain = os.environ.get("ARANGO_WAL_DRAIN_AND_STOP")
     try:
-        if max_s:
-            import time
-
-            time.sleep(float(max_s))
+        if drain:
             for q in queries:
+                q.processAllAvailable()
                 q.stop()
         for q in queries:
             q.awaitTermination()
