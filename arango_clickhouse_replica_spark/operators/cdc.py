@@ -49,38 +49,39 @@ TXN_MARKERS = (2200, 2201, 2202)  # filtered out (publisher.py:54-58)
 VER_COL = "_ver"
 DELETED_COL = "_deleted"
 
+# The envelope columns read below (``tick``, ``type``, ``cuid``, ``tid``,
+# ``data``) are named as every source delivers them (sources/kafka.py
+# ``ENVELOPE_SCHEMA``, sources/wal_datasource.py ``WAL_SOURCE_SCHEMA``),
+# so they are not options.
+
 
 def preprocess_columns(
     *,
     tracked_cuids: Sequence[str] | None = None,
     initial_tick: int | None = None,
-    doc_col: str = "data",
-    tick_col: str = "tick",
-    type_col: str = "type",
-    cuid_col: str = "cuid",
 ) -> tuple[Column, list[Column]]:
     """The envelope preprocess as Columns: ``(keep, projection)`` such that
     ``env.filter(keep).select(*projection)`` is ``preprocess_envelopes``.
     They depend on the arguments only, not on a batch, so a stream builds
     them once and applies them to every micro-batch."""
     # P1: keep only document upserts/removes; drop txn markers & untracked
-    p1 = F.col(type_col).isin(UPSERT_DOCUMENT, REMOVE_DOCUMENT)
+    p1 = F.col("type").isin(UPSERT_DOCUMENT, REMOVE_DOCUMENT)
     if tracked_cuids is not None:
-        p1 = p1 & F.col(cuid_col).isin(list(tracked_cuids))
+        p1 = p1 & F.col("cuid").isin(list(tracked_cuids))
     # P2: tombstone filter (null payload)
-    rest = F.col(doc_col).isNotNull()
+    rest = F.col("data").isNotNull()
     # P3: replay cutoff after a snapshot (tick recorded before snapshot read)
     if initial_tick is not None:
-        rest = rest & (F.col(tick_col).cast("long") >= F.lit(int(initial_tick)))
+        rest = rest & (F.col("tick").cast("long") >= F.lit(int(initial_tick)))
     # Nested as the optimizer combines one filter per step, so the
     # optimized plan equals that of the per-step chain.
     keep = p1 & rest
     # P5 + D1 + D2: the payload, a deterministic version from the WAL
     # position, and the soft-delete flag
     projection = [
-        F.col(f"{doc_col}.*"),
-        F.col(tick_col).cast("long").alias(VER_COL),
-        F.when(F.col(type_col) == REMOVE_DOCUMENT, F.lit(1))
+        F.col("data.*"),
+        F.col("tick").cast("long").alias(VER_COL),
+        F.when(F.col("type") == REMOVE_DOCUMENT, F.lit(1))
         .otherwise(F.lit(0)).alias(DELETED_COL),
     ]
     return keep, projection
@@ -91,21 +92,15 @@ def preprocess_envelopes(
     *,
     tracked_cuids: Sequence[str] | None = None,
     initial_tick: int | None = None,
-    doc_col: str = "data",
-    tick_col: str = "tick",
-    type_col: str = "type",
-    cuid_col: str = "cuid",
 ) -> DataFrame:
     """WAL envelope stream -> typed change rows ready for the mapping DSL.
 
-    Output: the payload struct fields of ``doc_col`` flattened, plus
+    Output: the payload struct fields of ``data`` flattened, plus
     ``_ver`` (monotone version from the tick) and ``_deleted``. One
     ``filter`` and one ``select`` over ``preprocess_columns``.
     """
     keep, projection = preprocess_columns(
         tracked_cuids=tracked_cuids, initial_tick=initial_tick,
-        doc_col=doc_col, tick_col=tick_col, type_col=type_col,
-        cuid_col=cuid_col,
     )
     return env.filter(keep).select(*projection)
 
@@ -114,7 +109,6 @@ def latest_state(
     df: DataFrame,
     keys: Sequence[str],
     ver_col: str = VER_COL,
-    tiebreakers: Sequence[Column | str] = (),
 ) -> DataFrame:
     """ReplacingMergeTree(_ver) merge-on-read view: max-version row per key.
 
@@ -124,7 +118,6 @@ def latest_state(
     order = [F.col(ver_col).desc(), F.col(DELETED_COL).desc()] if DELETED_COL in df.columns else [
         F.col(ver_col).desc()
     ]
-    order += [F.col(t).desc() if isinstance(t, str) else t for t in tiebreakers]
     w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(*order)
     return (
         df.withColumn("__rn", F.row_number().over(w))
@@ -203,13 +196,7 @@ class TxnSplit:
         return self._aborted
 
 
-def txn_atomic_split(
-    env: DataFrame,
-    *,
-    tid_col: str = "tid",
-    type_col: str = "type",
-    tick_col: str = "tick",
-) -> TxnSplit:
+def txn_atomic_split(env: DataFrame) -> TxnSplit:
     """Partition envelope DOCUMENT rows by their transaction's outcome.
 
     - ``applyable``: rows whose ``tid`` has a COMMIT marker in ``env``,
@@ -235,43 +222,37 @@ def txn_atomic_split(
     (``collect_terminators``) and filters by membership
     (``txn_split_by``), so each of its writes is a single narrow job.
     """
-    is_doc = F.col(type_col).isin(UPSERT_DOCUMENT, REMOVE_DOCUMENT)
-    docs = env.filter(is_doc)
+    tid = F.col("tid")
+    docs = env.filter(F.col("type").isin(UPSERT_DOCUMENT, REMOVE_DOCUMENT))
     # last marker wins per tid (max tick; abort beats commit on a tie —
     # a tid is never legally terminated twice)
     terminators = (
-        env.filter(F.col(type_col).isin(TXN_COMMIT, TXN_ABORT))
-        .filter(F.col(tid_col).isNotNull())
-        .groupBy(tid_col)
+        env.filter(F.col("type").isin(TXN_COMMIT, TXN_ABORT))
+        .filter(tid.isNotNull())
+        .groupBy("tid")
         .agg(
-            F.max_by(F.col(type_col), F.struct(
-                F.col(tick_col).cast("long"), F.col(type_col)
+            F.max_by(F.col("type"), F.struct(
+                F.col("tick").cast("long"), F.col("type")
             )).alias("__term")
         )
     )
     tagged = docs.join(
-        F.broadcast(terminators.withColumnRenamed(tid_col, "__tid")),
-        F.col(tid_col) == F.col("__tid"),
+        F.broadcast(terminators.withColumnRenamed("tid", "__tid")),
+        tid == F.col("__tid"),
         "left",
     )
     applyable = tagged.filter(
-        F.col(tid_col).isNull() | (F.col("__term") == TXN_COMMIT)
+        tid.isNull() | (F.col("__term") == TXN_COMMIT)
     ).drop("__tid", "__term")
     deferred = tagged.filter(
-        F.col(tid_col).isNotNull() & F.col("__term").isNull()
+        tid.isNotNull() & F.col("__term").isNull()
     ).drop("__tid", "__term")
     return TxnSplit(applyable, deferred, lambda: tagged.filter(
         F.col("__term") == TXN_ABORT
     ).drop("__tid", "__term"))
 
 
-def collect_terminators(
-    env: DataFrame,
-    *,
-    tid_col: str = "tid",
-    type_col: str = "type",
-    tick_col: str = "tick",
-) -> dict[str, int]:
+def collect_terminators(env: DataFrame) -> dict[str, int]:
     """The last marker type (commit or abort) per ``tid`` in ``env``.
 
     One narrow job collects the marker rows; the last one per tid is
@@ -282,12 +263,12 @@ def collect_terminators(
     string, which is how ``txn_split_by`` compares them.
     """
     markers = (
-        env.filter(F.col(type_col).isin(TXN_COMMIT, TXN_ABORT))
-        .filter(F.col(tid_col).isNotNull())
+        env.filter(F.col("type").isin(TXN_COMMIT, TXN_ABORT))
+        .filter(F.col("tid").isNotNull())
         .select(
-            F.col(tid_col).cast("string"),
-            F.col(tick_col).cast("long"),
-            F.col(type_col).cast("int"),
+            F.col("tid").cast("string"),
+            F.col("tick").cast("long"),
+            F.col("type").cast("int"),
         )
         .collect()
     )
@@ -319,22 +300,16 @@ def _isin(spark, col: Column, values: Sequence[str]) -> Column:
     return Column(col._jc.isin(jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(parts)))
 
 
-def txn_split_by(
-    env: DataFrame,
-    terminators: dict[str, int],
-    *,
-    tid_col: str = "tid",
-    type_col: str = "type",
-) -> TxnSplit:
+def txn_split_by(env: DataFrame, terminators: dict[str, int]) -> TxnSplit:
     """``txn_atomic_split`` with the terminators already in hand (from
     ``collect_terminators``): each output is a narrow filter of ``env``'s
     document rows by tid membership, with no join and no shuffle."""
     spark = env.sparkSession
-    tid = F.col(tid_col)
+    tid = F.col("tid")
     tid_str = tid.cast("string")
     committed = _isin(spark, tid_str, [t for t, ty in terminators.items() if ty == TXN_COMMIT])
     terminated = _isin(spark, tid_str, list(terminators))
-    docs = env.filter(F.col(type_col).isin(UPSERT_DOCUMENT, REMOVE_DOCUMENT))
+    docs = env.filter(F.col("type").isin(UPSERT_DOCUMENT, REMOVE_DOCUMENT))
     return TxnSplit(
         applyable=docs.filter(tid.isNull() | committed),
         deferred=docs.filter(tid.isNotNull() & ~terminated),

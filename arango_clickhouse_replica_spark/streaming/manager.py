@@ -15,7 +15,8 @@ plus a thin supervisor:
   protocol;
 - a ``StreamingQueryListener`` replaces the SMTP failure alerts (C7) —
   terminations land in a status log any alerting hook can consume;
-- resync = stop query -> clear checkpoint + target -> batch backfill ->
+- resync = stop query -> recreate the topic (with a topic admin) ->
+  ``CdcPipeline.reset(snapshot)``, which owns the table's state ->
   restart stream (the reference's topic-recreate + snapshot + restart
   dance, minus the external services).
 
@@ -138,44 +139,26 @@ class ReplicationManager:
         return [r.status() for r in self.runners.values()]
 
     def resync(self, name: str, snapshot_df) -> None:
-        """Full table resync (C3, sync.py:75-160): stop the stream, wipe
-        checkpoint + target, batch-load the snapshot, restart the stream.
-        Overlap between the snapshot and replayed envelopes is absorbed
-        by version dedup (M4) — the reference's records-tick-before-
-        snapshot trick, without the Redis token. On merge-on-read the
-        snapshot is written as the target's compacted part, so the
-        restarted stream's ``batch_id=0, 1, ...`` parts cannot overwrite
-        it; on merge-on-write it is loaded through the sink, which writes
-        its ``__bucket=`` partitions."""
-        import shutil
-
-        from ..operators.part_store import PartStore
-
+        """Full table resync (C3, sync.py:75-160): stop the stream,
+        recreate its topic when a topic admin is set, reset the table to
+        the snapshot (``CdcPipeline.reset``), restart the stream. Overlap
+        between the snapshot and replayed envelopes is absorbed by version
+        dedup (M4) — the reference's records-tick-before-snapshot trick,
+        without the Redis token."""
         r = self.runners[name]
-        sink = getattr(r.pipeline, "merge_sink", None)
         r.stop()
         if self.topic_admin is not None:
             # C4: the reference drops + recreates the table's topic between
-            # stop and backfill (sync.py:119-130); a failed recreation
-            # aborts the resync rather than replaying stale history.
-            # reapply the table's declared topic shape (partitions +
-            # configs) rather than broker defaults — the reference passes
-            # the table's topic_config on recreate (sync.py:64-70)
-            partitions = getattr(r, "topic_partitions", 1)
-            configs = getattr(r, "topic_configs", None)
+            # stop and backfill (sync.py:119-130), with the table's
+            # topic_config (sync.py:64-70); a failed recreation aborts the
+            # resync rather than replaying stale history.
             ok = self.topic_admin.recreate(
                 [name],
-                partitions=partitions,
-                topic_configs={name: configs} if configs else None,
+                partitions=r.topic_partitions,
+                topic_configs={name: r.topic_configs} if r.topic_configs else None,
             )
             if not ok:
                 raise RuntimeError(f"topic recreation failed for {name!r}")
-        for d in (r.pipeline.checkpoint_dir, r.pipeline.target_dir):
-            shutil.rmtree(d, ignore_errors=True)
-        if sink is not None:
-            shutil.rmtree(sink.target_dir, ignore_errors=True)
-            sink.apply_batch(snapshot_df, 0)
-        else:
-            PartStore(r.pipeline.target_dir).compact(snapshot_df)
+        r.pipeline.reset(snapshot_df)
         r.restarts = 0
         r.start()

@@ -61,7 +61,6 @@ class TickGapMonitor:
     (publisher.py:130-131).
     """
 
-    tick_col: str = "tick"
     on_gap: Callable[[TickGap], None] | None = None
     last_tick: int | None = None
     gaps: list[TickGap] = field(default_factory=list)
@@ -69,7 +68,7 @@ class TickGapMonitor:
 
     def metrics(self) -> list[Column]:
         """The aggregates ``record`` takes: ``mn``, ``mx`` and ``n``."""
-        tick = F.col(self.tick_col).cast("long")
+        tick = F.col("tick").cast("long")
         return [
             F.min(tick).alias("mn"),
             F.max(tick).alias("mx"),

@@ -22,6 +22,12 @@ replay/ack protocol (reader.py:37-60) — source offsets + the idempotent
 version-dedup make redelivery a no-op. ``Trigger.AvailableNow`` is the
 drain-and-stop backlog probe (S6, broker.py:25-32).
 
+A table's state is three directories: the checkpoint (source offsets
+and the transaction pending buffer), the target (the part store, or the
+merge-on-write sink's directory) and the dead letters. ``reset`` is the
+one place that knows them: it wipes all three and can load a snapshot
+as the target's base, the whole of a resync (C3) once the stream stops.
+
 Scale notes: the apply is narrow (no shuffle, no broadcast): with
 ``txn_atomic`` a micro-batch runs four jobs (terminator collect, pending
 write, dead-letter write, target part) over the pinned batch, and the
@@ -299,14 +305,8 @@ class CdcPipeline:
         reader = self.spark.readStream.schema(envelope_schema)
         if max_files_per_trigger is not None:  # backpressure (T1/T4 analog)
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        stream = reader.parquet(envelope_dir)
-        writer = (
-            stream.writeStream.foreachBatch(self._apply_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        trigger = {"availableNow": True} if available_now else {}
+        return self._run(reader.parquet(envelope_dir), **trigger)
 
     def run_until_drained(self, envelope_dir: str, envelope_schema: T.StructType) -> None:
         q = self.start(envelope_dir, envelope_schema, available_now=True)
@@ -339,13 +339,8 @@ class CdcPipeline:
         stream = decode_envelopes(raw, data_schema).drop(
             "key", "topic", "partition", "offset"
         )
-        writer = (
-            stream.writeStream.foreachBatch(self._apply_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        trigger = {"availableNow": True} if available_now else {}
+        return self._run(stream, **trigger)
 
     def start_wal(
         self,
@@ -370,12 +365,19 @@ class CdcPipeline:
             self.spark, data_schema,
             wal_options=wal_options, collections=collections,
         )
-        return (
+        return self._run(stream, processingTime=processing_time)
+
+    def _run(self, stream: DataFrame, **trigger) -> StreamingQuery:
+        """Start ``stream`` through the micro-batch apply, its progress
+        in the checkpoint; ``trigger`` is ``DataStreamWriter.trigger``'s
+        (none: the default processing-time trigger)."""
+        writer = (
             stream.writeStream.foreachBatch(self._apply_batch)
             .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(processingTime=processing_time)
-            .start()
         )
+        if trigger:
+            writer = writer.trigger(**trigger)
+        return writer.start()
 
     # -- read path (merge-on-read, M1/M2) -----------------------------------
 
@@ -404,7 +406,27 @@ class CdcPipeline:
             return self.merge_sink.read_alive()
         return latest_alive(self.raw(), self.keys)
 
-    # -- maintenance (M3/K4) ------------------------------------------------
+    # -- maintenance (M3/K4, C3) --------------------------------------------
+
+    def reset(self, snapshot: DataFrame | None = None) -> None:
+        """Wipe the table's state: its checkpoint (source offsets, the
+        transaction pending buffer), target and dead letters. Given a
+        ``snapshot`` of the target's shape, load it as the target's base:
+        the compacted part on merge-on-read (the restarted stream's
+        ``batch_id=`` parts cannot overwrite it), through the sink on
+        merge-on-write. Stop the stream first."""
+        dirs = [self.checkpoint_dir, self.target_dir, self.dead_letter_dir]
+        if self.merge_sink is not None:
+            dirs.append(self.merge_sink.target_dir)
+        for d in dirs:
+            if d is not None:
+                shutil.rmtree(d, ignore_errors=True)
+        if snapshot is None:
+            return
+        if self.merge_sink is not None:
+            self.merge_sink.apply_batch(snapshot, 0)
+        else:
+            self.store.compact(snapshot)
 
     def compact(self) -> None:
         """Rewrite the target keeping only winners (crash-safe, and a

@@ -98,15 +98,17 @@ def test_resync_recreates_topic_and_aborts_on_failure(spark, sf_dir, tmp_path):
     import pytest
 
     from arango_clickhouse_replica_spark.sources.tables import load_table
+    from arango_clickhouse_replica_spark.streaming import CdcPipeline
     from arango_clickhouse_replica_spark.streaming.manager import ReplicationManager
 
-    class _Pipeline:
-        checkpoint_dir = str(tmp_path / "ckpt")
-        target_dir = str(tmp_path / "target")
+    target_dir = str(tmp_path / "target")
 
     class _Runner:
         name = "events"
-        pipeline = _Pipeline()
+        # a real pipeline (resync resets it); no stream is started
+        pipeline = CdcPipeline(spark, target_dir=target_dir,
+                               checkpoint_dir=str(tmp_path / "ckpt"),
+                               keys=["event_id"])
         restarts = 3
         # declared topic shape must survive the recreate (ADVICE r4:
         # resync previously recreated with broker defaults)
@@ -128,7 +130,7 @@ def test_resync_recreates_topic_and_aborts_on_failure(spark, sf_dir, tmp_path):
     mgr.resync("events", snapshot)
     assert client.created and runner.started and runner.restarts == 0
     assert client.created == [("events", 4, 1, {"cleanup.policy": "delete"})]
-    assert spark.read.parquet(_Pipeline.target_dir).count() == 10
+    assert spark.read.parquet(target_dir).count() == 10
 
     stuck = FakeAdminClient(topics=["events"], lag=10**9)
     mgr2 = ReplicationManager(

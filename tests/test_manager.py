@@ -2,12 +2,16 @@
 policy) and full-resync orchestration."""
 
 import os
+import sys
 import time
+from pathlib import Path
 
 import pytest
+import yaml
 from pyspark.sql import functions as F
 
-from arango_clickhouse_replica_spark.operators.cdc import preprocess_envelopes
+from arango_clickhouse_replica_spark.operators.cdc import latest_alive, preprocess_envelopes
+from arango_clickhouse_replica_spark.schema.dsl import TableMapping, apply_mapping
 from arango_clickhouse_replica_spark.sources.cdc_envelopes import synthetic_event_envelopes
 from arango_clickhouse_replica_spark.streaming import CdcPipeline
 from arango_clickhouse_replica_spark.streaming.manager import (
@@ -111,6 +115,123 @@ def test_resync_rebuilds_and_restarts(spark, sf_dir, tmp_path, merge_on_write):
         assert after == before  # snapshot ∪ replay collapses to the same state
     finally:
         mgr.stop_all()
+
+
+# ---------------------------------------------------------------------------
+# A table's state is its checkpoint, target and dead letters: a resync (the
+# manager's or the CLI's --resync) resets all three
+# ---------------------------------------------------------------------------
+
+_ENV = "tick long, type int, cuid string, data struct<event_id: long, value: double>"
+
+_MAPPING_DICT = {
+    "table_name": "events",
+    "schema": {
+        "primary_key": ["eid"],
+        "properties": {
+            "eid": {"type": "int", "ref": "event_id"},
+            "v": {"type": "float", "ref": "value", "required": True},
+            "_ver": {"type": "int"},
+            "_deleted": {"type": "int"},
+        },
+    },
+}
+_MAPPING = TableMapping.from_dict(_MAPPING_DICT)
+
+# One envelope file per batch: each upserts a key and has one row the
+# mapping rejects (value is required); later files update key 0, the
+# last removes key 2.
+_FILES = [
+    [(1, 2300, "c1", (0, 0.0)), (2, 2300, "c1", (1, None))],
+    [(3, 2300, "c1", (2, 2.0)), (4, 2300, "c1", (3, None)),
+     (5, 2300, "c1", (0, 10.0))],
+    [(6, 2300, "c1", (4, 4.0)), (7, 2300, "c1", (5, None)),
+     (8, 2300, "c1", (0, 20.0))],
+    [(9, 2300, "c1", (6, 6.0)), (10, 2300, "c1", (7, None)),
+     (11, 2302, "c1", (2, 2.0))],
+]
+
+
+def _land(spark, env_dir, files):
+    for rows in files:
+        spark.createDataFrame(rows, _ENV).coalesce(1).write.mode("append").parquet(env_dir)
+
+
+def _mapped(spark, env_dir):
+    """The batch reference of the envelopes landed so far: preprocess,
+    then the mapping's valid rows."""
+    return apply_mapping(preprocess_envelopes(spark.read.parquet(env_dir)), _MAPPING).valid
+
+
+def _served(df):
+    return sorted(tuple(r) for r in df.select("eid", "v", "_ver").collect())
+
+
+def _dead_keys(spark, dead_dir):
+    return sorted(r.event_id for r in spark.read.parquet(dead_dir).collect())
+
+
+def test_resync_drops_previous_epoch_dead_letters(spark, tmp_path):
+    """The restarted stream numbers its batches from 0 again: a
+    dead-letter part the previous epoch wrote under a later batch id
+    must not survive beside the new epoch's."""
+    env_dir, dead = str(tmp_path / "env"), str(tmp_path / "dead")
+    _land(spark, env_dir, _FILES)
+    schema = spark.read.parquet(env_dir).schema
+    pipe = CdcPipeline(
+        spark,
+        target_dir=str(tmp_path / "target"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        keys=["eid"],
+        mapping=_MAPPING,
+        dead_letter_dir=dead,
+    )
+    pipe.start(env_dir, schema, max_files_per_trigger=1).awaitTermination()
+    assert len(os.listdir(dead)) >= len(_FILES)  # one part per batch
+    before = _served(pipe.latest_alive())
+
+    mgr = ReplicationManager(spark)
+    runner = TableRunner("events", pipe, env_dir, schema)
+    mgr.add(runner)
+    mgr.resync("events", _mapped(spark, env_dir))
+    try:
+        runner.query.processAllAvailable()
+    finally:
+        mgr.stop_all()
+    assert _dead_keys(spark, dead) == [1, 3, 5, 7]
+    assert _served(pipe.latest_alive()) == before
+
+
+def test_replicate_cli_envelope_mode(spark, tmp_path, monkeypatch):
+    """tools/replicate.py over envelope dirs: two --drain runs (two
+    batches of one checkpoint), then --resync --drain on the same state
+    root. After each, the served view equals the batch reference and the
+    dead letters hold each rejected row once."""
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+    import tools.replicate as replicate
+
+    env_root, state, tables = tmp_path / "env", tmp_path / "state", tmp_path / "tables"
+    env_dir = str(env_root / "events")
+    tables.mkdir()
+    (tables / "events.yaml").write_text(yaml.safe_dump(_MAPPING_DICT))
+
+    def run(*extra, rejected):
+        monkeypatch.setattr(sys, "argv", [
+            "replicate.py", "--tables", "events", "--keys", "eid",
+            "--envelope-root", str(env_root), "--mappings", str(tables),
+            "--state-root", str(state), "--drain", *extra])
+        replicate.main()
+        served = CdcPipeline(spark, target_dir=str(state / "events" / "target"),
+                             checkpoint_dir=str(state / "events" / "ckpt"),
+                             keys=["eid"]).latest_alive()
+        assert _served(served) == _served(latest_alive(_mapped(spark, env_dir), ["eid"]))
+        assert _dead_keys(spark, str(state / "events" / "dead")) == rejected
+
+    _land(spark, env_dir, _FILES[:2])
+    run(rejected=[1, 3])
+    _land(spark, env_dir, _FILES[2:])
+    run(rejected=[1, 3, 5, 7])
+    run("--resync", rejected=[1, 3, 5, 7])
 
 
 # ---------------------------------------------------------------------------

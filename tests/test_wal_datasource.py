@@ -391,13 +391,12 @@ def test_replicate_cli_wal_mode(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("ARANGO_WAL_TRANSPORT_FACTORY",
                        "tests.wal_fake:make_transport")
     monkeypatch.setenv("ARANGO_WAL_FILE", wal)
-    monkeypatch.setenv("ARANGO_WAL_DRAIN_AND_STOP", "1")
     monkeypatch.setattr(
         sys, "argv",
         ["replicate.py", "--tables", "events",
          "--state-root", str(tmp_path / "state"),
          "--wal-url", "http://scripted:8529/_system",
-         "--data-schema", "_key string, v long",
+         "--data-schema", "_key string, v long", "--drain",
          "--failure-log", str(tmp_path / "alerts" / "failures.jsonl")],
     )
     replicate.main()
@@ -416,6 +415,42 @@ def test_replicate_cli_wal_mode(spark, tmp_path, monkeypatch):
         .select("_key", "v")
     )
     assert {(r._key, r.v) for r in alive.collect()} == {("a", 2)}
+
+
+def test_replicate_cli_wal_mode_gates_transactions(spark, tmp_path, monkeypatch):
+    """The CLI's pipelines apply on transaction boundaries: the two
+    documents of the aborted tid 7 never reach the target, the document
+    outside any transaction (tid "0") does."""
+    import sys
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+    import tools.replicate as replicate
+
+    wal = str(tmp_path / "wal.json")
+    wal_fake.write_wal(wal, [
+        _doc(1, "b", 2, tid="7"),
+        _doc(2, "c", 3, tid="7"),
+        _marker(3, ABORT_TRANSACTION, "7"),
+        _doc(4, "a", 1),
+    ], page_size=2)
+    monkeypatch.setenv("ARANGO_WAL_TRANSPORT_FACTORY",
+                       "tests.wal_fake:make_transport")
+    monkeypatch.setenv("ARANGO_WAL_FILE", wal)
+    state = tmp_path / "state" / "c_events"
+    monkeypatch.setattr(
+        sys, "argv",
+        ["replicate.py", "--tables", "c_events",
+         "--state-root", str(tmp_path / "state"),
+         "--wal-url", "http://scripted:8529/_system",
+         "--data-schema", "_key string, v long", "--drain"],
+    )
+    replicate.main()
+
+    from arango_clickhouse_replica_spark.streaming.pipeline import CdcPipeline
+
+    pipe = CdcPipeline(spark, target_dir=str(state / "target"),
+                       checkpoint_dir=str(state / "ckpt"), keys=["_key"])
+    assert _alive(pipe) == {("a", 1)}
 
 
 def _memory_query(df, name, tmp_path):

@@ -8,12 +8,16 @@ full resync, driven by YAML table mappings.
         --envelope-root /data/envelopes --state-root /data/state \\
         [--mappings tables/] [--resync] [--drain]
 
-Per table this either starts a supervised continuous stream or (with
---drain) processes the backlog with Trigger.AvailableNow and exits —
-the snapshot/cutover dance collapses into: wipe state, batch-load, let
-the checkpointed stream take over (overlap absorbed by version dedup).
-No Redis, no PM2, no Kafka admin: the checkpoint directory is the only
-progress state.
+Each table is one CdcPipeline, built alike for envelope dirs and for a
+live WAL (--wal-url): its state under --state-root/<table>, its mapping
+from --mappings/<table>.yaml when that exists, the transaction gate on
+(envelopes without ``tid`` skip it), a tick monitor and dead letters.
+Per table this either starts a continuous stream or (with --drain)
+processes what is available and exits. --resync is
+``CdcPipeline.reset()``: the table's checkpoint, target and dead letters
+are wiped and the stream rebuilds the table from the source's start
+(overlap absorbed by version dedup). No Redis, no PM2: the checkpoint
+directory is the only progress state.
 """
 
 from __future__ import annotations
@@ -39,9 +43,12 @@ def main() -> None:
     ap.add_argument("--keys", default="_key",
                     help="comma-separated primary-key columns (default: _key)")
     ap.add_argument("--resync", action="store_true",
-                    help="wipe checkpoint+target and rebuild from the full envelope log")
+                    help="wipe each table's checkpoint, target and dead letters "
+                         "and rebuild it from the source's start")
     ap.add_argument("--drain", action="store_true",
-                    help="process available envelopes then exit (Trigger.AvailableNow)")
+                    help="process what is available, then exit (envelope dirs: "
+                         "Trigger.AvailableNow; --wal-url: processAllAvailable, "
+                         "then stop)")
     ap.add_argument("--ddl", action="store_true",
                     help="print the generated ClickHouse target DDL per mapped "
                          "table (schema/ddl.py) and exit — for bootstrapping a "
@@ -70,13 +77,10 @@ def main() -> None:
 
     from arango_clickhouse_replica_spark.schema.dsl import TableMapping
     from arango_clickhouse_replica_spark.session import get_spark
-    from arango_clickhouse_replica_spark.streaming import CdcPipeline
     from arango_clickhouse_replica_spark.streaming.manager import (
         ReplicationManager,
         TableRunner,
     )
-    from arango_clickhouse_replica_spark.streaming.merge_sink import BucketedMergeSink
-    from arango_clickhouse_replica_spark.streaming.monitor import TickGapMonitor
 
     if args.ddl:
         from arango_clickhouse_replica_spark.schema.ddl import create_table_ddl
@@ -104,10 +108,9 @@ def main() -> None:
         # C7 default-on alerting, matching the reference's always-wired
         # mailer hook (loader.py:172-187): failures land in the JSONL log.
         mgr.attach_alerts(args.failure_log)
-    keys = args.keys.split(",")
 
     if args.wal_url:
-        _run_wal_mode(spark, args, keys)
+        _run_wal_mode(spark, args)
         return
     if not args.envelope_root:
         raise SystemExit("--envelope-root is required unless --wal-url is given")
@@ -116,41 +119,8 @@ def main() -> None:
         env_dir = os.path.join(args.envelope_root, name)
         if not os.path.isdir(env_dir):
             raise SystemExit(f"no envelope dir for table {name!r}: {env_dir}")
-        mapping = None
-        if args.mappings:
-            yml = os.path.join(args.mappings, f"{name}.yaml")
-            if os.path.exists(yml):
-                mapping = TableMapping.from_yaml_file(yml)
-        state = os.path.join(args.state_root, name)
-        target_dir = os.path.join(state, "target")
-        sink = (
-            BucketedMergeSink(spark, target_dir, keys)
-            if args.merge_on_write
-            else None
-        )
-        monitor = TickGapMonitor(
-            on_gap=lambda g, t=name: print(
-                f"{t}: TICKS LOST asked for {g.expected_from} "
-                f"but got {g.observed_from} ({g.missing} missing)",
-                file=sys.stderr,
-            )
-        )
-        pipe = CdcPipeline(
-            spark,
-            target_dir=target_dir,
-            checkpoint_dir=os.path.join(state, "ckpt"),
-            keys=keys,
-            mapping=mapping,
-            dead_letter_dir=os.path.join(state, "dead"),
-            tick_monitor=monitor,
-            merge_sink=sink,
-        )
+        pipe = _table_pipeline(spark, args, name)
         schema = spark.read.parquet(env_dir).schema
-        if args.resync:
-            import shutil
-
-            for d in (pipe.checkpoint_dir, pipe.target_dir):
-                shutil.rmtree(d, ignore_errors=True)
         if args.drain:
             pipe.run_until_drained(env_dir, schema)
             print(f"{name}: drained; latest-state rows = {pipe.latest_alive().count()}")
@@ -167,7 +137,49 @@ def main() -> None:
             mgr.stop_all()
 
 
-def _run_wal_mode(spark, args, keys) -> None:
+def _table_pipeline(spark, args, name, tracked_cuids=None):
+    """The CdcPipeline of table ``name``, alike in both modes (see the
+    module docstring); ``--resync`` resets it here, before its stream
+    starts."""
+    from arango_clickhouse_replica_spark.schema.dsl import TableMapping
+    from arango_clickhouse_replica_spark.streaming import CdcPipeline
+    from arango_clickhouse_replica_spark.streaming.merge_sink import BucketedMergeSink
+    from arango_clickhouse_replica_spark.streaming.monitor import TickGapMonitor
+
+    keys = args.keys.split(",")
+    mapping = None
+    if args.mappings:
+        yml = os.path.join(args.mappings, f"{name}.yaml")
+        if os.path.exists(yml):
+            mapping = TableMapping.from_yaml_file(yml)
+    state = os.path.join(args.state_root, name)
+    target_dir = os.path.join(state, "target")
+    monitor = TickGapMonitor(
+        on_gap=lambda g: print(
+            f"{name}: TICKS LOST asked for {g.expected_from} "
+            f"but got {g.observed_from} ({g.missing} missing)",
+            file=sys.stderr,
+        )
+    )
+    pipe = CdcPipeline(
+        spark,
+        target_dir=target_dir,
+        checkpoint_dir=os.path.join(state, "ckpt"),
+        keys=keys,
+        mapping=mapping,
+        dead_letter_dir=os.path.join(state, "dead"),
+        tick_monitor=monitor,
+        merge_sink=(BucketedMergeSink(spark, target_dir, keys)
+                    if args.merge_on_write else None),
+        tracked_cuids=tracked_cuids,
+        txn_atomic=True,
+    )
+    if args.resync:
+        pipe.reset()
+    return pipe
+
+
+def _run_wal_mode(spark, args) -> None:
     """One CdcPipeline per watched collection, fed by the native
     ``arango_wal`` streaming source (no envelope dirs, no broker); the
     checkpoint carries the WAL tick. ``--tables`` entries name the
@@ -176,85 +188,36 @@ def _run_wal_mode(spark, args, keys) -> None:
 
     from pyspark.sql.types import _parse_datatype_string
 
-    from arango_clickhouse_replica_spark.schema.dsl import TableMapping
-    from arango_clickhouse_replica_spark.streaming import CdcPipeline
-    from arango_clickhouse_replica_spark.streaming.merge_sink import BucketedMergeSink
-    from arango_clickhouse_replica_spark.streaming.monitor import TickGapMonitor
-
     if not args.data_schema:
         raise SystemExit("--wal-url requires --data-schema")
     u = urlparse(args.wal_url)
-    db = (u.path or "/_system").strip("/") or "_system"
+    wal_options = {
+        "host": u.hostname or "localhost",
+        "port": u.port or 8529,
+        "db": (u.path or "/_system").strip("/") or "_system",
+        "username": os.environ.get("ARANGO_USER", "root"),
+        "password": os.environ.get("ARANGO_PASSWORD", ""),
+        # test hook: scripted transport + its state file (the same
+        # env-gating as the connector itself)
+        **({"transportFactory": os.environ["ARANGO_WAL_TRANSPORT_FACTORY"]}
+           if "ARANGO_WAL_TRANSPORT_FACTORY" in os.environ else {}),
+        **({"walFile": os.environ["ARANGO_WAL_FILE"]}
+           if "ARANGO_WAL_FILE" in os.environ else {}),
+    }
     data_schema = _parse_datatype_string(args.data_schema)
-    queries = []
-    for name in args.tables.split(","):
-        state = os.path.join(args.state_root, name)
-        target_dir = os.path.join(state, "target")
-        # --mappings / --merge-on-write apply in WAL mode exactly as in
-        # envelope mode (previously they were silently ignored here)
-        mapping = None
-        if args.mappings:
-            yml = os.path.join(args.mappings, f"{name}.yaml")
-            if os.path.exists(yml):
-                mapping = TableMapping.from_yaml_file(yml)
-        sink = (
-            BucketedMergeSink(spark, target_dir, keys)
-            if args.merge_on_write
-            else None
+    queries = [
+        _table_pipeline(spark, args, name, tracked_cuids=[name]).start_wal(
+            data_schema=data_schema, wal_options=wal_options,
+            collections=[name],
         )
-        monitor = TickGapMonitor(
-            on_gap=lambda g, t=name: print(
-                f"{t}: TICKS LOST asked for {g.expected_from} "
-                f"but got {g.observed_from} ({g.missing} missing)",
-                file=sys.stderr,
-            )
-        )
-        pipe = CdcPipeline(
-            spark,
-            target_dir=target_dir,
-            checkpoint_dir=os.path.join(state, "ckpt"),
-            keys=keys,
-            mapping=mapping,
-            dead_letter_dir=os.path.join(state, "dead"),
-            tick_monitor=monitor,
-            merge_sink=sink,
-            tracked_cuids=[name],
-        )
-        if args.resync:
-            import shutil
-
-            for d in (pipe.checkpoint_dir, pipe.target_dir):
-                shutil.rmtree(d, ignore_errors=True)
-        queries.append(
-            pipe.start_wal(
-                data_schema=data_schema,
-                wal_options={
-                    "host": u.hostname or "localhost",
-                    "port": u.port or 8529,
-                    "db": db,
-                    "username": os.environ.get("ARANGO_USER", "root"),
-                    "password": os.environ.get("ARANGO_PASSWORD", ""),
-                    # test hook: scripted transport + its state file (the
-                    # same env-gating as the connector itself)
-                    **({"transportFactory": os.environ["ARANGO_WAL_TRANSPORT_FACTORY"]}
-                       if "ARANGO_WAL_TRANSPORT_FACTORY" in os.environ else {}),
-                    **({"walFile": os.environ["ARANGO_WAL_FILE"]}
-                       if "ARANGO_WAL_FILE" in os.environ else {}),
-                },
-                collections=[name],
-            )
-        )
+        for name in args.tables.split(",")
+    ]
     print(f"tailing WAL {args.wal_url} for {args.tables}")
-    # test hook: stop once the source is drained instead of tailing
-    # forever (bounded by work done, not wall time, so a cold JVM still
-    # commits every batch)
-    drain = os.environ.get("ARANGO_WAL_DRAIN_AND_STOP")
     try:
-        if drain:
-            for q in queries:
+        for q in queries:
+            if args.drain:
                 q.processAllAvailable()
                 q.stop()
-        for q in queries:
             q.awaitTermination()
     except KeyboardInterrupt:
         for q in queries:
