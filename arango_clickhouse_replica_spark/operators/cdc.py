@@ -50,9 +50,8 @@ VER_COL = "_ver"
 DELETED_COL = "_deleted"
 
 # The envelope columns read below (``tick``, ``type``, ``cuid``, ``tid``,
-# ``data``) are named as every source delivers them (sources/kafka.py
-# ``ENVELOPE_SCHEMA``, sources/wal_datasource.py ``WAL_SOURCE_SCHEMA``),
-# so they are not options.
+# ``data``) are named as every source delivers them (the one wire decoder,
+# sources/cdc_envelopes.py ``decode_wire``), so they are not options.
 
 
 def preprocess_columns(

@@ -1,8 +1,16 @@
-"""Deterministic synthetic WAL-envelope streams over the fixture tables.
+"""The envelope wire, and deterministic synthetic envelope streams over
+the fixture tables.
 
-The driver provides no live ArangoDB/Kafka, so CDC correctness is proven
-on synthetic change streams derived from a keyed fixture table, following
-the FIXTURES.md recipe (§"CDC-apply fixture recipe"):
+Every wire source decodes through this module: ``envelope_schema`` is
+the one wire schema (test/test_consumer.py:8-26) and ``decode_wire`` the
+one function from wire rows to the envelope columns the pipeline reads.
+``read_envelopes`` reads JSONL, CSV and ORC envelope files with them;
+``sources/kafka.py`` parses its record values with the same schema, and
+``sources/wal_datasource.py`` declares its rows with it.
+
+No live ArangoDB/Kafka is needed to prove CDC correctness: the synthetic
+change streams, already in the decoded shape, derive from a keyed
+fixture table by the FIXTURES.md recipe (§"CDC-apply fixture recipe"):
 
 - every row becomes an upsert envelope (``type=2300``, ``tick=2*key``);
 - keys with ``key % 10 == 0`` get a later update (``tick=2*key+1``) with a
@@ -13,14 +21,15 @@ the FIXTURES.md recipe (§"CDC-apply fixture recipe"):
 
 The same construction is expressible in plain SQL, so the full CDC
 pipeline (preprocess -> version dedup -> soft-delete filter) has a DuckDB
-oracle. Envelope wire shape mirrors test/test_consumer.py:8-26.
+oracle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamReader
 
 from ..operators.cdc import REMOVE_DOCUMENT, UPSERT_DOCUMENT
 from .tables import load_table
@@ -77,13 +86,14 @@ CHANGES_SQL = """
 
 
 # ---------------------------------------------------------------------------
-# JSONL envelope files (the reference's exact wire shape)
+# The envelope wire: one schema and one decoder for every wire source
 # ---------------------------------------------------------------------------
 
 def envelope_schema(data_schema: T.DataType) -> T.StructType:
     """The WAL envelope wire schema (test/test_consumer.py:8-26): ``tick``
-    is a STRING-encoded integer on the wire (reader.py:53), ``data`` holds
-    the full post-image document."""
+    is a STRING-encoded integer on the wire (reader.py:53; a JSON number
+    reads as its text too), ``data`` holds the full post-image document,
+    typed by ``data_schema`` or a JSON string when it is ``StringType``."""
     return T.StructType(
         [
             T.StructField("tick", T.StringType()),
@@ -96,144 +106,50 @@ def envelope_schema(data_schema: T.DataType) -> T.StructType:
     )
 
 
-def _normalize(env: DataFrame) -> DataFrame:
-    """Wire shape -> the pipeline's envelope columns (tick LONG)."""
-    return env.select(
+def decode_wire(wire: DataFrame, data_schema: T.DataType,
+                *carry: str) -> DataFrame:
+    """Wire rows -> the envelope columns ``CdcPipeline`` and
+    ``preprocess_envelopes`` read: ``tick`` (long), ``type``, ``cuid``,
+    ``tid`` and ``data``, after the ``carry`` columns of the wire.
+
+    ``tid`` is null for an operation outside any transaction (Arango
+    writes ``"0"`` there), which the transaction gate reads as
+    non-transactional. A ``data`` carried as a JSON string parses
+    JVM-side with ``data_schema`` (``from_json``); a NULL or empty one
+    becomes a NULL struct, the tombstone shape P2 drops."""
+    data = F.col("data")
+    string_cell = isinstance(wire.schema["data"].dataType, T.StringType)
+    if string_cell and not isinstance(data_schema, T.StringType):
+        data = F.from_json(data, data_schema)
+    return wire.select(
+        *carry,
         F.col("tick").cast("long").alias("tick"),
         "type",
         "cuid",
-        "data",
+        F.nullif("tid", F.lit("0")).alias("tid"),
+        data.alias("data"),
     )
 
 
-def read_envelopes_jsonl(
-    spark: SparkSession, path: str, data_schema: T.DataType
-) -> DataFrame:
-    """Batch-read newline-delimited JSON envelopes (one orjson-encoded
-    envelope per line — the Kafka message value format, reader.py:27-28),
-    normalized for ``preprocess_envelopes``."""
-    return _normalize(spark.read.schema(envelope_schema(data_schema)).json(path))
+def read_envelopes(reader: DataFrameReader | DataStreamReader, path: str,
+                   data_schema: T.DataType, fmt: str) -> DataFrame:
+    """Envelope files of format ``fmt`` (``json``: one envelope per line,
+    the Kafka message value format, reader.py:27-28; ``csv``; ``orc``)
+    under ``path``, decoded. ``reader`` is ``spark.read``, or
+    ``spark.readStream`` with the caller's options (say
+    ``maxFilesPerTrigger``) to tail a directory: the file-drop ingest
+    path, S1 without a broker.
 
-
-def stream_envelopes_jsonl(
-    spark: SparkSession,
-    path: str,
-    data_schema: T.DataType,
-    *,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming variant of :func:`read_envelopes_jsonl` — the file-drop
-    ingest path (S1 without a broker): tail a directory of JSONL envelope
-    files exactly as the Kafka source tails topics."""
-    reader = spark.readStream.schema(envelope_schema(data_schema))
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return _normalize(reader.json(path))
-
-
-# ---------------------------------------------------------------------------
-# CSV envelope files (flat dump shape: JSON payload in a string column)
-# ---------------------------------------------------------------------------
-
-def _csv_wire_schema() -> T.StructType:
-    """CSV wire columns: same envelope fields as JSONL, but ``data`` is an
-    orjson-encoded STRING cell (CSV has no nested types). This is the
-    flat-file dump shape WAL archives land in when the broker sink writes
-    CSV instead of JSONL."""
-    return T.StructType(
-        [
-            T.StructField("tick", T.StringType()),
-            T.StructField("type", T.IntegerType()),
-            T.StructField("db", T.StringType()),
-            T.StructField("cuid", T.StringType()),
-            T.StructField("tid", T.StringType()),
-            T.StructField("data", T.StringType()),
-        ]
-    )
-
-
-def _parse_csv(env: DataFrame, data_schema: T.DataType) -> DataFrame:
-    """CSV wire shape -> pipeline envelope columns: the JSON payload cell
-    parses JVM-side (``from_json``, whole-stage codegen — no Python); a
-    NULL/empty cell becomes a NULL struct, exactly the tombstone shape
-    P2 drops."""
-    return env.select(
-        F.col("tick").cast("long").alias("tick"),
-        "type",
-        "cuid",
-        F.from_json("data", data_schema).alias("data"),
-    )
-
-
-def read_envelopes_csv(
-    spark: SparkSession, path: str, data_schema: T.DataType
-) -> DataFrame:
-    """Batch-read CSV envelope dumps (header row, quoted JSON payload
-    column), normalized for ``preprocess_envelopes``."""
-    reader = (
-        spark.read.schema(_csv_wire_schema())
-        .option("header", "true")
+    CSV has no nested types, so its ``data`` is a JSON string cell
+    under a header row. ORC keeps the nested struct, and a tick-range
+    or op-type replay filter reaches its stripe index."""
+    wire = envelope_schema(T.StringType() if fmt == "csv" else data_schema)
+    if fmt == "csv":
         # RFC-4180 dumps escape quotes by doubling them; Spark's default
         # escape is backslash, so the JSON payload cell needs this or it
         # truncates at the first embedded quote
-        .option("escape", '"')
-    )
-    return _parse_csv(reader.csv(path), data_schema)
-
-
-def stream_envelopes_csv(
-    spark: SparkSession,
-    path: str,
-    data_schema: T.DataType,
-    *,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming variant of :func:`read_envelopes_csv` — tail a directory
-    of CSV envelope dumps (S1 without a broker), same file-drop mechanics
-    as the JSONL source."""
-    reader = (
-        spark.readStream.schema(_csv_wire_schema())
-        .option("header", "true")
-        .option("escape", '"')  # RFC-4180 doubled quotes (see batch reader)
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return _parse_csv(reader.csv(path), data_schema)
-
-
-# ---------------------------------------------------------------------------
-# ORC envelope archives (columnar WAL-archive shape: nested data struct,
-# predicate pushdown + column pruning on cold replay)
-# ---------------------------------------------------------------------------
-
-def read_envelopes_orc(
-    spark: SparkSession, path: str, data_schema: T.DataType
-) -> DataFrame:
-    """Batch-read ORC envelope archives. ORC keeps the nested ``data``
-    struct natively (no JSON cell like CSV), and a cold WAL replay gets
-    columnar pruning + predicate pushdown: a tick-range or op-type
-    replay filter reaches the ORC stripe index instead of re-reading
-    the full archive — the property that makes ORC/parquet the archive
-    format of choice for multi-year WAL retention at 100 TB."""
-    return _normalize(
-        spark.read.schema(envelope_schema(data_schema)).orc(path)
-    )
-
-
-def stream_envelopes_orc(
-    spark: SparkSession,
-    path: str,
-    data_schema: T.DataType,
-    *,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming variant of :func:`read_envelopes_orc` — tail a directory
-    of ORC envelope archives (S1 without a broker), same file-drop
-    mechanics as the JSONL/CSV sources."""
-    reader = spark.readStream.schema(envelope_schema(data_schema))
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return _normalize(reader.orc(path))
+        reader = reader.option("header", "true").option("escape", '"')
+    return decode_wire(reader.schema(wire).format(fmt).load(path), data_schema)
 
 
 # Deterministic transaction lanes for the txn-atomic fixtures: 4

@@ -12,8 +12,11 @@ the built-in Kafka connector:
 - sink: ``write.format("kafka")`` with ``key``/``value``/``topic``
   columns — keyed writes, per-message topic, flushed per batch.
 
-Envelope JSON <-> columns uses ``from_json``/``to_json`` with the WAL
-envelope schema (test/test_consumer.py:8-26 shape).
+A record value is one JSON envelope. ``decode_envelopes`` parses it with
+the one wire schema, ``cdc_envelopes.envelope_schema``, and decodes it
+with ``cdc_envelopes.decode_wire``, as the file and WAL sources do: the
+reference's string ``tick`` becomes a long and Arango's ``tid "0"`` a
+null. ``encode_envelopes`` writes it with ``to_json``.
 
 No broker exists in the test environment, so builders only CONSTRUCT
 the reader/writer (connection is attempted lazily by Spark on
@@ -32,38 +35,23 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: WAL envelope shape (fixed by test/test_consumer.py:8-26).
-ENVELOPE_SCHEMA = T.StructType(
-    [
-        T.StructField("tick", T.LongType()),
-        T.StructField("type", T.IntegerType()),
-        T.StructField("db", T.StringType()),
-        T.StructField("cuid", T.StringType()),
-        T.StructField("tid", T.StringType()),
-    ]
-)
-
-
-def envelope_schema(data_schema: T.DataType) -> T.StructType:
-    """Full envelope schema with a typed ``data`` payload."""
-    return T.StructType(ENVELOPE_SCHEMA.fields + [T.StructField("data", data_schema)])
+from .cdc_envelopes import decode_wire, envelope_schema
 
 
 def decode_envelopes(raw: DataFrame, data_schema: T.DataType) -> DataFrame:
-    """Kafka records (binary key/value) -> typed envelope columns.
+    """Kafka records (binary key/value) -> the Kafka ``key`` and the
+    decoded envelope columns.
 
     The reference JSON-decodes each message value (broker.py:20-21);
-    here it's one ``from_json`` projection, with the Kafka key and
-    offset carried through (key = ``data._key``, publisher.py:86-88;
-    offset feeds ``_ver`` like loader.py:76)."""
-    schema = envelope_schema(data_schema)
-    return raw.select(
+    here it's one ``from_json`` projection (key = ``data._key``,
+    publisher.py:86-88)."""
+    wire = raw.select(
         F.col("key").cast("string").alias("key"),
-        F.from_json(F.col("value").cast("string"), schema).alias("env"),
-        "topic",
-        "partition",
-        "offset",
-    ).select("key", "env.*", "topic", "partition", "offset")
+        F.from_json(
+            F.col("value").cast("string"), envelope_schema(data_schema)
+        ).alias("env"),
+    ).select("key", "env.*")
+    return decode_wire(wire, data_schema, "key")
 
 
 def encode_envelopes(df: DataFrame, *, topic_col: str = "topic",

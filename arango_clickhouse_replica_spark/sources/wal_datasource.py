@@ -26,10 +26,10 @@ is. At reference scale (one Arango deployment, thousands of writes/sec)
 the tail is never the bottleneck; sharding happens downstream by
 collection/key.
 
-Rows use the envelope WIRE shape (``sources/kafka.py`` /
-``cdc_envelopes.envelope_schema``) with ``data`` as a JSON string —
-schema-free at the source, parsed downstream by ``from_json`` + the
-mapping DSL, exactly like the Kafka path.
+Rows use the one envelope wire schema, ``cdc_envelopes.envelope_schema``,
+with ``data`` as a JSON string: schema-free at the source.
+:func:`wal_envelope_stream` decodes them with ``cdc_envelopes.decode_wire``,
+the decoder of the file and Kafka sources.
 
 The HTTP transport is injectable via the ``transportFactory`` option
 (``"module.path:callable"`` resolved at read time; the callable receives
@@ -43,15 +43,14 @@ from __future__ import annotations
 import json
 from typing import Iterator, Optional, Sequence
 
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 from .arango_wal import ArangoWalClient, ArangoWalConfig
+from .cdc_envelopes import decode_wire, envelope_schema
 
 #: envelope wire shape; `data` is the raw document as a JSON string
-WAL_SOURCE_SCHEMA = (
-    "tick string, type int, db string, cuid string, tid string, data string"
-)
+WAL_SOURCE_SCHEMA = envelope_schema(T.StringType())
 
 
 def _resolve_transport(options: dict):
@@ -167,7 +166,7 @@ class ArangoWalDataSource(DataSource):
     def name(cls) -> str:
         return "arango_wal"
 
-    def schema(self) -> str:
+    def schema(self) -> T.StructType:
         return WAL_SOURCE_SCHEMA
 
     def simpleStreamReader(self, schema) -> SimpleDataSourceStreamReader:
@@ -186,24 +185,13 @@ def wal_envelope_stream(
     wal_options: Optional[dict] = None,
     collections: Optional[Sequence[str]] = None,
 ):
-    """The WAL as a typed envelope stream: ``tick`` (long), ``type``,
-    ``cuid``, ``tid`` and ``data`` parsed with ``data_schema``.
-
-    ``tid`` is null for an operation outside any transaction (Arango
-    writes ``"0"`` there), which is what the transaction gate reads as
-    non-transactional; any other value waits for its commit or abort.
-    ``wal_options`` pass to the source as is; ``collections`` is the
-    list of watched ``cuid`` values."""
+    """The WAL as a typed envelope stream, decoded by ``decode_wire``
+    with ``data_schema``. ``wal_options`` pass to the source as is;
+    ``collections`` is the list of watched ``cuid`` values."""
     register(spark)
     reader = spark.readStream.format("arango_wal")
     for k, v in (wal_options or {}).items():
         reader = reader.option(k, str(v))
     if collections:
         reader = reader.option("collections", ",".join(collections))
-    return reader.load().select(
-        F.col("tick").cast("long").alias("tick"),
-        "type",
-        "cuid",
-        F.nullif("tid", F.lit("0")).alias("tid"),
-        F.from_json("data", data_schema).alias("data"),
-    )
+    return decode_wire(reader.load(), data_schema)

@@ -336,9 +336,7 @@ class CdcPipeline:
             starting_offsets=starting_offsets,
             max_offsets_per_trigger=max_offsets_per_trigger,
         ).load()
-        stream = decode_envelopes(raw, data_schema).drop(
-            "key", "topic", "partition", "offset"
-        )
+        stream = decode_envelopes(raw, data_schema).drop("key")
         trigger = {"availableNow": True} if available_now else {}
         return self._run(stream, **trigger)
 

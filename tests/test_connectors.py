@@ -6,11 +6,11 @@ constructible without a live target."""
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from arango_clickhouse_replica_spark.sources.cdc_envelopes import envelope_schema
 from arango_clickhouse_replica_spark.sources.jdbc_sink import jdbc_batch_writer
 from arango_clickhouse_replica_spark.sources.kafka import (
     decode_envelopes,
     encode_envelopes,
-    envelope_schema,
     kafka_stream_reader,
 )
 from arango_clickhouse_replica_spark.sources.tables import load_table
@@ -45,6 +45,19 @@ def test_envelope_roundtrip(spark, sf_dir):
     got = {r.data.event_id for r in decoded.select("data").collect()}
     want = {r.event_id for r in ev.collect()}
     assert got == want
+
+
+def test_decode_reference_wire_record(spark):
+    """A record in the reference's wire shape: ``tick`` a JSON string
+    (reader.py:53), ``tid "0"`` for a write outside any transaction."""
+    value = ('{"tick": "100", "type": 2300, "db": "d", "cuid": "c1", '
+             '"tid": "0", "data": {"_key": "k1"}}')
+    raw = spark.createDataFrame(
+        [(b"k1", value.encode())], "key binary, value binary"
+    )
+    data_schema = T.StructType([T.StructField("_key", T.StringType())])
+    (row,) = decode_envelopes(raw, data_schema).collect()
+    assert (row.key, row.tick, row.tid, row.data._key) == ("k1", 100, None, "k1")
 
 
 def test_envelope_schema_shape():

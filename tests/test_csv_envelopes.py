@@ -12,11 +12,7 @@ from arango_clickhouse_replica_spark.operators.cdc import (
     latest_alive,
     preprocess_envelopes,
 )
-from arango_clickhouse_replica_spark.sources.cdc_envelopes import (
-    read_envelopes_csv,
-    read_envelopes_jsonl,
-    stream_envelopes_csv,
-)
+from arango_clickhouse_replica_spark.sources.cdc_envelopes import read_envelopes
 
 from .test_jsonl_envelopes import DATA_SCHEMA, _wire_lines
 
@@ -36,7 +32,7 @@ def _write_csv(path, lines):
 def test_batch_csv_roundtrip(spark, tmp_path):
     src = str(tmp_path / "wire")
     _write_csv(os.path.join(src, "part-0.csv"), _wire_lines())
-    env = read_envelopes_csv(spark, src, DATA_SCHEMA)
+    env = read_envelopes(spark.read, src, DATA_SCHEMA, "csv")
     assert dict(env.dtypes)["tick"] == "bigint"
     alive = latest_alive(preprocess_envelopes(env), keys=["_key"])
     rows = {r._key: (r.attr1, r._ver) for r in alive.collect()}
@@ -52,8 +48,9 @@ def test_csv_and_jsonl_wire_shapes_agree(spark, tmp_path):
     with open(os.path.join(jsonl_src, "part-0.jsonl"), "w") as f:
         for line in lines:
             f.write(json.dumps(line) + "\n")
-    a = read_envelopes_csv(spark, csv_src, DATA_SCHEMA)
-    b = read_envelopes_jsonl(spark, jsonl_src, DATA_SCHEMA)
+    a = read_envelopes(spark.read, csv_src, DATA_SCHEMA, "csv")
+    b = read_envelopes(spark.read, jsonl_src, DATA_SCHEMA, "json")
+    assert "tid" in a.columns and "tid" in b.columns
     ra = sorted(map(tuple, a.collect()))
     rb = sorted(map(tuple, b.collect()))
     assert ra == rb
@@ -67,7 +64,9 @@ def test_stream_csv_matches_batch(spark, tmp_path):
 
     target = str(tmp_path / "target")
     checkpoint = str(tmp_path / "ckpt")
-    stream = stream_envelopes_csv(spark, src, DATA_SCHEMA, max_files_per_trigger=1)
+    stream = read_envelopes(
+        spark.readStream.option("maxFilesPerTrigger", 1), src, DATA_SCHEMA, "csv"
+    )
     q = (
         preprocess_envelopes(stream)
         .writeStream.format("parquet")

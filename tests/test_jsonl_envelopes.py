@@ -12,10 +12,8 @@ from arango_clickhouse_replica_spark.operators.cdc import (
     latest_alive,
     preprocess_envelopes,
 )
-from arango_clickhouse_replica_spark.sources.cdc_envelopes import (
-    read_envelopes_jsonl,
-    stream_envelopes_jsonl,
-)
+from arango_clickhouse_replica_spark.sources.cdc_envelopes import read_envelopes
+from arango_clickhouse_replica_spark.streaming.pipeline import CdcPipeline
 
 DATA_SCHEMA = T.StructType(
     [
@@ -59,7 +57,7 @@ def _write(path, lines):
 def test_batch_jsonl_roundtrip(spark, tmp_path):
     src = str(tmp_path / "wire")
     _write(os.path.join(src, "part-0.jsonl"), _wire_lines())
-    env = read_envelopes_jsonl(spark, src, DATA_SCHEMA)
+    env = read_envelopes(spark.read, src, DATA_SCHEMA, "json")
     assert dict(env.dtypes)["tick"] == "bigint"
     alive = latest_alive(preprocess_envelopes(env), keys=["_key"])
     rows = {r._key: (r.attr1, r._ver) for r in alive.collect()}
@@ -73,7 +71,9 @@ def test_stream_jsonl_matches_batch(spark, tmp_path):
     _write(os.path.join(src, "b.jsonl"), lines[2:])
 
     target = str(tmp_path / "target")
-    stream = stream_envelopes_jsonl(spark, src, DATA_SCHEMA, max_files_per_trigger=1)
+    stream = read_envelopes(
+        spark.readStream.option("maxFilesPerTrigger", 1), src, DATA_SCHEMA, "json"
+    )
     q = (
         preprocess_envelopes(stream)
         .writeStream.format("parquet")
@@ -89,3 +89,30 @@ def test_stream_jsonl_matches_batch(spark, tmp_path):
         for r in latest_alive(spark.read.parquet(target), keys=["_key"]).collect()
     }
     assert got == {"1": (10, 102)}
+
+
+def test_txn_gate_holds_on_file_envelopes(spark, tmp_path):
+    """The file reader keeps ``tid``, so the transaction gate sees it: an
+    aborted transaction's documents are never served, and a document
+    outside any transaction (Arango's ``tid "0"``) applies at once."""
+    def env(tick, op, tid, key):
+        data = None if key is None else {
+            "_key": key, "_id": f"X/{key}", "_rev": "_r", "name": "t",
+            "attr1": tick,
+        }
+        return {"tick": str(tick), "type": op, "db": "d", "cuid": "c",
+                "tid": tid, "data": data}
+
+    src = str(tmp_path / "wire")
+    _write(os.path.join(src, "part-0.jsonl"), [
+        env(100, 2300, "7", "a"),
+        env(101, 2300, "7", "b"),
+        env(102, 2202, "7", None),   # ABORT of tid 7
+        env(103, 2300, "0", "c"),    # outside any transaction
+    ])
+    env_df = read_envelopes(spark.read, src, DATA_SCHEMA, "json")
+    pipe = CdcPipeline(spark, target_dir=str(tmp_path / "target"),
+                       checkpoint_dir=str(tmp_path / "ckpt"), keys=["_key"],
+                       txn_atomic=True)
+    pipe._apply_batch(env_df, 0)
+    assert {r._key for r in pipe.latest_alive().collect()} == {"c"}

@@ -4,8 +4,6 @@ carry-through on recreate, failure propagation — against an injected
 in-memory client (no broker in this environment; the protocol is the
 contract, mirroring reference sync.py:18-72)."""
 
-from pathlib import Path
-
 from arango_clickhouse_replica_spark.sources.kafka_admin import KafkaTopicAdmin
 
 
@@ -69,27 +67,6 @@ def test_recreate_drops_then_creates_with_configs():
     assert ok is True
     assert client.created == [("events", 4, 1, {"cleanup.policy": "delete"})]
     assert "events" in client.topics()
-
-
-def test_cli_kafka_admin_flag_is_cleanly_env_gated():
-    """tools/replicate.py --kafka-admin constructs the kafka-python-backed
-    client; in this environment (no kafka-python) that must fail fast with
-    the documented ImportError, not a deep stack later."""
-    import sys
-
-    import pytest
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-    import tools.replicate as replicate
-
-    old = sys.argv
-    sys.argv = ["replicate.py", "--tables", "events", "--state-root", "/tmp/x",
-                "--kafka-admin", "broker:9092"]
-    try:
-        with pytest.raises(ImportError, match="kafka-python is required"):
-            replicate.main()
-    finally:
-        sys.argv = old
 
 
 def test_resync_recreates_topic_and_aborts_on_failure(spark, sf_dir, tmp_path):

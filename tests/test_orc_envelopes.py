@@ -11,9 +11,7 @@ from arango_clickhouse_replica_spark.operators.cdc import (
 )
 from arango_clickhouse_replica_spark.sources.cdc_envelopes import (
     envelope_schema,
-    read_envelopes_jsonl,
-    read_envelopes_orc,
-    stream_envelopes_orc,
+    read_envelopes,
 )
 
 from .test_jsonl_envelopes import DATA_SCHEMA, _wire_lines
@@ -33,7 +31,7 @@ def _write_orc(spark, path, lines):
 def test_batch_orc_roundtrip(spark, tmp_path):
     src = str(tmp_path / "wire")
     _write_orc(spark, src, _wire_lines())
-    env = read_envelopes_orc(spark, src, DATA_SCHEMA)
+    env = read_envelopes(spark.read, src, DATA_SCHEMA, "orc")
     assert dict(env.dtypes)["tick"] == "bigint"
     alive = latest_alive(preprocess_envelopes(env), keys=["_key"])
     rows = {r._key: (r.attr1, r._ver) for r in alive.collect()}
@@ -49,8 +47,9 @@ def test_orc_and_jsonl_wire_shapes_agree(spark, tmp_path):
     with open(os.path.join(jsonl_src, "part-0.jsonl"), "w") as f:
         for line in lines:
             f.write(json.dumps(line) + "\n")
-    a = read_envelopes_orc(spark, orc_src, DATA_SCHEMA)
-    b = read_envelopes_jsonl(spark, jsonl_src, DATA_SCHEMA)
+    a = read_envelopes(spark.read, orc_src, DATA_SCHEMA, "orc")
+    b = read_envelopes(spark.read, jsonl_src, DATA_SCHEMA, "json")
+    assert "tid" in a.columns and "tid" in b.columns
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
@@ -62,8 +61,9 @@ def test_stream_orc_matches_batch(spark, tmp_path):
 
     target = str(tmp_path / "target")
     checkpoint = str(tmp_path / "ckpt")
-    stream = stream_envelopes_orc(spark, src, DATA_SCHEMA,
-                                  max_files_per_trigger=1)
+    stream = read_envelopes(
+        spark.readStream.option("maxFilesPerTrigger", 1), src, DATA_SCHEMA, "orc"
+    )
     q = (
         preprocess_envelopes(stream)
         .writeStream.format("parquet")

@@ -69,10 +69,6 @@ def main() -> None:
                     help="JSONL file for structured query-failure records "
                          "(C7 alerting; streaming/alerts.py) — every stream "
                          "termination with an exception is appended here")
-    ap.add_argument("--kafka-admin", default=None, metavar="BOOTSTRAP",
-                    help="Kafka bootstrap servers for topic administration "
-                         "during --resync (C4): the table's topic is "
-                         "deleted, awaited, and recreated before backfill")
     args = ap.parse_args()
 
     from arango_clickhouse_replica_spark.schema.dsl import TableMapping
@@ -95,15 +91,7 @@ def main() -> None:
         return
 
     spark = get_spark("replicate")
-    topic_admin = None
-    if args.kafka_admin:
-        from arango_clickhouse_replica_spark.sources.kafka_admin import (
-            KafkaPythonAdminClient,
-            KafkaTopicAdmin,
-        )
-
-        topic_admin = KafkaTopicAdmin(KafkaPythonAdminClient(args.kafka_admin))
-    mgr = ReplicationManager(spark, topic_admin=topic_admin)
+    mgr = ReplicationManager(spark)
     if args.failure_log:
         # C7 default-on alerting, matching the reference's always-wired
         # mailer hook (loader.py:172-187): failures land in the JSONL log.
