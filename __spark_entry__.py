@@ -85,13 +85,12 @@ ROTATION_EXEMPT = frozenset({
     "q_weighted_avg_discount",        # weighted agg: q1_pricing_summary
     # Grown r7 alongside the 3 color-codec registrations (each pick has
     # 6 green driver rounds r1-r6):
-    "q_rollup_revenue_by_year_status",  # ROLLUP: q_grouping_sets_revenue superset
     "q_orders_per_customer",            # plain groupBy count: q_top_customers
     "q_window_running_spend",           # rows-frame running sum: q_window_range_30d_spend
     # Grown r7 alongside the 4 retrieval/LM/curation registrations
     # (rrf, bigram LM, matryoshka, DSIR); each pick has 4-6 green
     # driver rounds plus the r7 full-registry record:
-    "q_json_extract_props",           # JSON paths: cdc_schema_drift_census (rotating) parses real JSON key sets end-to-end
+    "q_json_extract_props",           # JSON paths: cdc_schema_migration_plan (rotating) parses real JSON key sets end-to-end
     "q_explode_token_counts",         # explode+count: every text_* explode query
     "q_argmax_latest_order",          # argmax: q_asof_join_latest_order, cdc_latest_state
     "q_top_customers",                # global top-N: every *_topk TakeOrdered query
@@ -102,15 +101,9 @@ ROTATION_EXEMPT = frozenset({
     # record):
     "q_scd2_event_intervals",         # interval assembly: cdc_scd2_history
     "q_window_top_orders_per_customer",  # per-group top-N window: ann_* rank windows
-    # Grown r7 alongside embed_silhouette_approx + dedup_minhash_band_sweep
-    # (each pick 6 green driver rounds r1-r6 + the r7 full-registry
-    # record):
-    "q_cube_lineitem_flags",          # CUBE: q_grouping_sets_revenue superset
     # Grown r8 alongside the 4 new registrations (unimax, knn-label,
     # ttr, audio clipping); each pick has 7 green driver rounds r1-r7
     # incl. the r7 full-registry record:
-    "mm_feature_extract",             # fake-decode plumbing: subsumed by the real codec family (mm_wav/png/jpeg_decode_features)
-    "mm_resize_decimate",             # fake byte resize: mm_png_resize_features is the real path
     "q_pivot_status_by_year",         # pivot: q_grouping_sets_revenue + q_unpivot pair covers the reshape surface
     # Grown r8 alongside the PMI/quant-error/shard-balance registrations
     # (each pick has 7 green driver rounds r1-r7 incl. the full-registry
@@ -119,15 +112,13 @@ ROTATION_EXEMPT = frozenset({
     "q_funnel_conversion",            # event-sequence analytics: q_clickhouse_window_funnel (rotating) runs the stricter windowed ordered chain; q_clickhouse_retention keeps the cohort-flag lane
     "text_bigram_heavy_hitters",      # raw pair-count top-k: text_cooccurrence_pmi + text_bigram_logprob are the kept pair-statistics siblings
     "dsl_mapping_events",             # same cast kernel as dsl_mapping_documents (exempt since r11; the kernel rotates via cdc_migration_applied_deadletter) + dsl_deadletter_split (kept) on another table
-    # Grown r8 alongside cdc_churn_report + curation_dedup_survivorship_bias:
-    "q_salted_skew_agg",              # salting demo: the production salting lives in operators/blocking.py + AQE (DESIGN.md §3); cdc_churn_report now measures the skew itself
+    # Grown r8 alongside curation_dedup_survivorship_bias:
+    "q_salted_skew_agg",              # salting demo: the production salting lives in operators/blocking.py + AQE (DESIGN.md §3); cdc_hot_key_skew_report now measures the skew itself
     "q_cohort_retention",             # cohort-offset matrix: q_clickhouse_retention (rotating) keeps the retention lane (CH-function scalar shape); q_event_transitions keeps sequence pairs
     # Grown r8 alongside the interval-merge/late-arrival/temperature/
     # fertility registrations (each pick has 2-3 green driver rounds
     # plus the r7 AND r8 full-registry records):
     "dedup_simhash_fingerprints",     # fingerprint build: dedup_simhash_hamming_pairs builds the same signatures AND the band join
-    "mm_payload_stats",               # raw byte stats: subsumed by the real codec decode family (mm_wav/png/jpeg_decode_features)
-    "mm_frame_sample",                # fake-decode frame sampling: mm_mjpeg_frame_sample is the real demux path
     "text_token_stats",               # basic token counts: text_doc_length_percentiles + text_c4_line_cleaning cover the family
     # Grown r8 alongside embed_ood_mahalanobis + curation_coreset_kcenter
     # (each pick has 7 green driver rounds r1-r7 plus the r7 and r8
@@ -165,16 +156,14 @@ ROTATION_EXEMPT = frozenset({
     "mm_jpeg_decode_features",        # gray JPEG decode moments: mm_phash_dct_near_dup + mm_image_entropy_census re-prove the gray decoder every round; mm_color_jpeg_decode_features keeps the color path
     # Grown r9 alongside mm_audio_snr_estimate + curation_anneal_mixture:
     "mm_wav_decode_features",         # whole-file WAV moments: mm_audio_snr_estimate + mm_audio_clipping_report + mm_audio_fingerprint_dedup re-prove the WAV decoder every round
-    "curation_source_mixing",         # static source weights: curation_anneal_mixture (rotating) supersets the shape with the two-phase schedule; curation_domain_mixture_weights keeps the single-phase lane
     # Grown r9 alongside q_distinct_minvalue_sketch (pick has 8 green
     # driver rounds r1-r8 incl. the r7/r8 full-registry records):
     "q_approx_distinct_customers",    # HLL++ within-5pct boolean: q_distinct_sketch_merge (rotating) keeps a sketch lane rotating whose estimates themselves hash-match the oracle (strictly stronger check)
-    # Grown r9 alongside cdc_schema_drift_census, cdc_txn_boundary_report,
-    # text_c4_line_cleaning, mm_aspect_bucket_census (each pick has 8
-    # green driver rounds r1-r8 incl. the r9 211/211 full-registry
-    # record):
+    # Grown r9 alongside cdc_txn_boundary_report, text_c4_line_cleaning
+    # (each pick has 8 green driver rounds r1-r8 incl. the r9 211/211
+    # full-registry record):
     "text_c4_heuristics",             # whole-doc C4 pass flags: text_c4_line_cleaning (rotating) applies the same four rules per LINE and proves the reassembled text by checksum — strict superset of the rule surface
-    "q_variant_schemaless",           # JSON-path extraction over schemaless props: cdc_schema_drift_census (rotating) parses real variant payload key sets end-to-end (json_object_keys over three producer versions)
+    "q_variant_schemaless",           # JSON-path extraction over schemaless props: cdc_schema_migration_plan (rotating) parses real variant payload key sets end-to-end (json_object_keys over three producer versions)
     "dedup_minhash_lsh_candidates",   # raw LSH candidate listing: dedup_minhash_band_sweep (rotating) rebuilds the same shingle->lane-min->band-bucket join across three layouts with exact-Jaccard verification every round
     "text_bpe_merge_pairs",           # single merge-pair count: text_bpe_train_steps (rotating) re-runs the pair counting inside every training step
     # Grown r9 alongside decontam_bloom_prefilter, q_heavy_hitters_countmin,
@@ -214,8 +203,6 @@ ROTATION_EXEMPT = frozenset({
     "text_oov_rate",                  # vocab-head OOV rate: curation_excess_surprisal_reweight (rotating) re-runs the same wordcount + rarity-bin machinery; text_vocab_coverage_curve + text_subword_fertility keep the coverage lanes
     "q_set_ops_nation_segments",      # INTERSECT/EXCEPT listing: q_bitmap_segment_census (rotating) computes the same set algebra as exact AND/OR/XOR cardinalities with integer lanes
     "q_distinct_sketch_merge",        # KMV shard-merge: q_sketch_intersection_estimate (rotating) re-runs the identical bucket-min fold for every pair's union sketch AND keeps the exact-comparison lane; q_distinct_minvalue_sketch stays the single-sketch reference
-    # Grown r10 alongside mm_bmp_decode_features:
-    "mm_aspect_bucket_census",        # aspect bucket assignment: mm_aspect_resize_plan (rotating) computes the same bucket election plus the resize decision — strict superset of the census
     # Grown r10 alongside q_clickhouse_sequence_count +
     # cdc_integrity_checksum (each pick has 9 green driver rounds
     # r1-r9 incl. the r7/r8/r9 full-registry records):
@@ -230,7 +217,6 @@ ROTATION_EXEMPT = frozenset({
     # text_instruction_format_census (each pick has 9 green driver
     # rounds r1-r9 incl. the full-registry records):
     "embed_quantization_error_report",  # quantizer width sweep: ann_topk_int8_rerank re-runs the int8 quantizer inside its rerank; embed_pq_codebooks + ann_pq_adc_rerank keep the PQ lane; embed_binary_hamming_topk (composed end-to-end in the rotating recall reports) adds the 1-bit extreme of the same axis
-    "cdc_replay_idempotent",          # its oracle IS _LATEST_ALIVE_SQL (identical to cdc_latest_state, emitted every round); replay idempotence stays pytest-proven (checkpoint-restart tests) and cdc_time_travel_read (rotating) runs the same preprocess -> top-1 machinery with a version bound
     "text_repetition_filter",         # duplicate-run filter: text_gopher_repetition (rotating) measures the same repeated-n-gram surface inside the full Gopher rule set; text_c4_line_cleaning keeps the rewrite lane
     # Grown r10 alongside q_window_funnel_strict +
     # curation_dataset_diff_card (each pick has 9 green driver rounds
@@ -239,8 +225,6 @@ ROTATION_EXEMPT = frozenset({
     "curation_dataset_card",          # single-version card: curation_dataset_diff_card (rotating) reports the same per-source doc/token/char census for BOTH corpus versions plus retention — strict superset; mm_media_dataset_card keeps the card shape for media
     # Grown r10 alongside cdc_resync_catchup_plan:
     "cdc_late_arrival_report",        # per-user lateness census: cdc_watermark_sizing (rotating) keeps the global lateness/decision lane with the in-plan bound; the streaming late-arrival monitor re-proves the census machinery in pytest every run
-    # Grown r10 alongside cdc_schema_migration_plan:
-    "cdc_schema_drift_census",        # drift census: cdc_schema_migration_plan (rotating) re-runs the identical key-span census and extends it with type inference + the emitted ALTER text — strict superset
     # Grown r10 alongside curation_split_leakage_audit +
     # mm_cross_container_dedup:
     "curation_train_val_test_split",  # hash split: curation_split_leakage_audit (rotating) re-runs the identical split rule inside the leakage rollup; curation_stratified_sample keeps the deterministic-sampling lane
@@ -256,9 +240,7 @@ ROTATION_EXEMPT = frozenset({
     # driver rounds incl. the r7-r10 full-registry records, and every
     # exempt name keeps per-round oracle evidence via the
     # VERIFY_FULL_r{N} full-registry drive:
-    "dedup_passage_segments",         # stride-segment generator: curation_segment_dedup_rewrite (rotating) builds the same segment relation AND consumes it through the dedup rewrite — strict superset
     "ann_topk_vectorized",            # BLAS-matmul exact top-k: shares ann_cosine_topk_bruteforce's (rotating) oracle lane verbatim; ann_topk_int8_rerank (rotating) keeps the guarded-matmul shortlist shape; stays a pinned bench query so its perf lane is still measured every round
-    "text_token_rarity",              # per-doc mean token rarity: text_unigram_logprob (rotating) scores the same mean -log p shape under the full bounded-vocab LM — strict superset
     "text_bpe_regex_tokens",          # GPT-2-style regex pretokenizer census: text_bpe_train_steps (rotating) runs the same pretokenization inside every training step
     "text_lang_char_ngram",           # char-ngram lang-ID scores: text_lang_confusion_matrix (rotating) evaluates the SAME classifier against truth labels end-to-end — strict superset
     # Grown r11 alongside q_clickhouse_quantile_weighted_parity +
@@ -280,7 +262,6 @@ ROTATION_EXEMPT = frozenset({
     # cdc_tombstone_gc_plan (each pick has green driver rounds plus every
     # full-registry VERIFY_FULL record; still driven every round):
     "q_window_range_30d_spend",       # RANGE frame window: q_time_weighted_average (rotating) keeps range-based temporal weighting; q_rolling_tukey_outliers keeps rolling frames; 4 green driver rounds r1-r10
-    "cdc_churn_report",               # per-key change-volume census: cdc_hot_key_skew_report (rotating) aggregates the same per-key change counts into the skew/salt decision — strict superset of the census lane; cdc_compaction_savings keeps versions-per-key
     "embed_knn_label_consistency",    # kNN label agreement: embed_label_purity (rotating) keeps the label-vote lane and embed_mutual_knn_pairs (rotating) re-proves the kNN neighbor construction with the stricter mutuality check
     # Grown r11 alongside mm_qoi_decode_features, mm_adpcm_transcode_report,
     # mm_image_tile_dedup (each pick has green driver rounds plus every

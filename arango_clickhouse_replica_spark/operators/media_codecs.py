@@ -1,9 +1,7 @@
 """Real, pure-stdlib media codecs: WAV (RIFF/PCM16) and PNG (zlib).
 
-These replace the 'fake' decode stand-ins of ``operators/multimodal.py``
-for the two formats the standard library can genuinely handle — no
-pillow/ffmpeg needed, so they run in this container AND on stock Spark
-executors. Decode happens inside Arrow-batched ``mapInPandas`` stages
+No pillow/ffmpeg is needed (the later formats in this module add only
+numpy), so they run on stock Spark executors. Decode happens inside Arrow-batched ``mapInPandas`` stages
 (see ``queries/multimodal_queries.py``); one payload decodes in
 microseconds, so the narrow decode stage stays I/O-bound at 100 TB.
 

@@ -1,11 +1,11 @@
 """Multimodal column operators: image/audio/video as opaque binary columns
 with typed metadata, processed via Arrow-batched Pandas UDFs.
 
-The container has no image/audio codecs, so the DECODE step is stubbed
-(deterministic fake features, or ``NotImplementedError`` when a real codec
-is requested) — but the Spark-side plumbing is real and tested: binary
-column schema, metadata struct, ``mapInPandas`` batch shape, and the
-partitioning contract.
+Every decode is real: the codecs in operators/media_codecs.py (WAV, PNG,
+baseline and 4:2:0 JPEG, MJPEG, BMP, GIF, ...) need only the standard
+library and numpy, so they run on stock executors. Payloads are
+synthesized deterministically from the documents fixture
+(``synth_*_media``) so a closed-form oracle knows every decoded value.
 
 Scale notes (100 TB of media): binary payloads ride in parquet as
 BinaryType column chunks; decode/feature-extract is a NARROW mapInPandas
@@ -21,7 +21,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # Schema of the multimodal record: opaque payload + typed metadata.
@@ -43,15 +42,6 @@ MEDIA_SCHEMA = T.StructType(
     ]
 )
 
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("n_bytes", T.LongType(), True),
-        T.StructField("byte_histogram", T.ArrayType(T.LongType()), True),
-        T.StructField("checksum", T.StringType(), True),
-    ]
-)
 
 def _spread_ids(docs: DataFrame) -> DataFrame:
     """The id column the synth encoders feed on, hash-spread across the
@@ -71,75 +61,9 @@ def _spread_ids(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id").repartition(n, "doc_id")
 
 
-_HAVE_PIL = False
-try:  # real codec path, absent in this container
-    import PIL.Image  # noqa: F401
-
-    _HAVE_PIL = True
-except ImportError:
-    pass
-
-
-def documents_as_media(docs: DataFrame) -> DataFrame:
-    """Adapt the documents fixture into multimodal records: the text bytes
-    become the opaque payload (a deterministic stand-in for image bytes)."""
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "utf-8").alias("payload"),
-        F.struct(
-            F.lit("application/octet-stream").alias("mime"),
-            F.length(F.encode("text", "utf-8")).cast("long").alias("n_bytes"),
-            F.col("source").alias("source"),
-        ).alias("meta"),
-    )
-
-
-def extract_features(media: DataFrame, *, decode: str = "fake") -> DataFrame:
-    """Decode + feature-extract over binary payloads via ``mapInPandas``.
-
-    ``decode='fake'``: deterministic features (4-bucket byte histogram +
-    hex checksum) — exercises the full Arrow batch path end to end.
-    ``decode='image'``: requires a real codec (PIL), unavailable here ->
-    NotImplementedError, marking exactly where production decode plugs in.
-    """
-    if decode == "image" and not _HAVE_PIL:
-        raise NotImplementedError(
-            "image decode requires PIL/pillow, not present in this "
-            "environment; the 'fake' path exercises the identical "
-            "mapInPandas plumbing"
-        )
-    if decode not in ("fake", "image"):
-        raise ValueError(f"unknown decode mode {decode!r}")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = pdf["payload"]
-            hists, checks = [], []
-            for raw in payloads:
-                b = bytes(raw) if raw is not None else b""
-                hist = [0, 0, 0, 0]
-                for byte in b:
-                    hist[byte >> 6] += 1
-                hists.append(hist)
-                checks.append(format(sum(b) % (1 << 32), "08x"))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "mime": [m["mime"] for m in pdf["meta"]],
-                    "n_bytes": [m["n_bytes"] for m in pdf["meta"]],
-                    "byte_histogram": hists,
-                    "checksum": checks,
-                }
-            )
-
-    return media.mapInPandas(batches, schema=FEATURE_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # REAL decode paths (pure stdlib — see operators/media_codecs.py): WAV and
-# PNG payloads are genuinely parsed byte-for-byte; the 'fake' path above
-# remains for formats whose codecs the container lacks (JPEG/MP4 -> the
-# NotImplementedError plug points).
+# PNG payloads are genuinely parsed byte-for-byte.
 # ---------------------------------------------------------------------------
 
 def synth_wav_media(docs: DataFrame) -> DataFrame:
@@ -287,27 +211,13 @@ RESIZED_SCHEMA = T.StructType(
 )
 
 
-def resize_media(media: DataFrame, *, scale_denom: int = 4,
-                 decode: str = "fake") -> DataFrame:
-    """Resize/downsample plumbing (1:1 mapInPandas, payload -> payload).
-
-    ``decode='png'``: REAL resample for 8-bit grayscale PNGs — full
-    decode (signature/CRC/inflate/unfilter), exact-integer box filter
-    (floor-mean per ``scale_denom``-square block, edge-clipped), and
-    re-encode to a genuine PNG (operators/media_codecs). Pure stdlib,
-    runs on stock executors.
-
-    ``decode='fake'``: deterministic byte-decimation (every
-    ``scale_denom``-th byte) stands in for pixel resampling on formats
-    with no stdlib codec; the batch shape, schema, and narrow-stage
-    contract are exactly what a real ``PIL.Image.resize`` drops into.
+def resize_media(media: DataFrame, *, scale_denom: int = 4) -> DataFrame:
+    """REAL resample for 8-bit grayscale PNGs (1:1 mapInPandas, payload
+    -> payload): full decode (signature/CRC/inflate/unfilter),
+    exact-integer box filter (floor-mean per ``scale_denom``-square
+    block, edge-clipped), and re-encode to a genuine PNG
+    (operators/media_codecs). Pure stdlib, runs on stock executors.
     """
-    if decode == "image" and not _HAVE_PIL:
-        raise NotImplementedError(
-            "image resize requires PIL/pillow, not present in this environment"
-        )
-    if decode not in ("fake", "image", "png"):
-        raise ValueError(f"unknown decode mode {decode!r}")
     if scale_denom < 1:
         raise ValueError("scale_denom must be >= 1")
 
@@ -321,17 +231,13 @@ def resize_media(media: DataFrame, *, scale_denom: int = 4,
         for pdf in it:
             out_payload, out_n = [], []
             for raw in pdf["payload"]:
-                b = bytes(raw) if raw is not None else b""
-                if decode == "png":
-                    img = decode_png(b)
-                    if img["channels"] != 1:
-                        raise ValueError("png resize supports gray8 only")
-                    small_px, ow, oh = box_downsample_gray8(
-                        img["pixels"], img["width"], img["height"], scale_denom
-                    )
-                    small = encode_png_gray8(small_px, ow, oh)
-                else:
-                    small = b[::scale_denom]
+                img = decode_png(bytes(raw) if raw is not None else b"")
+                if img["channels"] != 1:
+                    raise ValueError("png resize supports gray8 only")
+                small_px, ow, oh = box_downsample_gray8(
+                    img["pixels"], img["width"], img["height"], scale_denom
+                )
+                small = encode_png_gray8(small_px, ow, oh)
                 out_payload.append(small)
                 out_n.append(len(small))
             yield pd.DataFrame(
@@ -344,53 +250,6 @@ def resize_media(media: DataFrame, *, scale_denom: int = 4,
             )
 
     return media.mapInPandas(batches, schema=RESIZED_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_no", T.IntegerType(), False),
-        T.StructField("frame", T.BinaryType(), True),
-        T.StructField("frame_bytes", T.LongType(), True),
-    ]
-)
-
-
-def sample_frames(media: DataFrame, *, frame_size: int = 256,
-                  every_n: int = 2) -> DataFrame:
-    """Frame-sampling plumbing (1:N mapInPandas, one row per kept frame).
-
-    The payload is treated as fixed-size frames; every ``every_n``-th
-    frame is emitted as its own row — the exact one-to-many batch shape
-    of real video keyframe extraction (where a demuxer replaces the
-    fixed-size split). Output rows >> input rows is the point: the
-    downstream per-frame feature pipeline parallelizes over frames.
-    """
-    if frame_size < 1 or every_n < 1:
-        raise ValueError("frame_size and every_n must be >= 1")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, nos, frames, sizes = [], [], [], []
-            for mid, raw in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(raw) if raw is not None else b""
-                n_frames = (len(b) + frame_size - 1) // frame_size
-                for fno in range(0, n_frames, every_n):
-                    chunk = b[fno * frame_size: (fno + 1) * frame_size]
-                    ids.append(mid)
-                    nos.append(fno)
-                    frames.append(chunk)
-                    sizes.append(len(chunk))
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "frame_no": nos,
-                    "frame": frames,
-                    "frame_bytes": sizes,
-                }
-            )
-
-    return media.mapInPandas(batches, schema=FRAME_SCHEMA)
 
 
 def synth_jpeg_media(docs: DataFrame) -> DataFrame:
@@ -727,8 +586,7 @@ def extract_audio_frames(media: DataFrame, *, frame_len: int = 16) -> DataFrame:
 
 # --- color image paths (RGB PNG + 4:2:0 color JPEG) ------------------------
 # Close the last "real codec" gap (VERDICT r6 item 3): color formats are
-# now genuinely decoded — no NotImplementedError left on the PNG/JPEG
-# paths ('image' mode below still gates on PIL for formats beyond them).
+# now genuinely decoded.
 
 COLOR_FEATURE_SCHEMA = T.StructType(
     [
@@ -1182,9 +1040,6 @@ DCT8_1024 = [
     [392, -946, 946, -392, -392, 946, -946, 392],
     [200, -569, 851, -1004, 1004, -851, 569, -200],
 ]
-
-_PHASH_M32 = 1 << 32
-
 
 def phash_cell_value(g: int, u: int, v: int, m: int) -> int:
     """Closed-form cell luma for the pHash fixture — a 32-bit-safe

@@ -43,13 +43,8 @@ _LATEST_ALIVE_SQL = f"""
 """
 
 
-def _apply_pipeline(spark: SparkSession, sf_dir: str, replay: int = 1) -> DataFrame:
+def _apply_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     env = synthetic_event_envelopes(spark, sf_dir)
-    if replay > 1:
-        replayed = env
-        for _ in range(replay - 1):
-            replayed = replayed.unionByName(env)
-        env = replayed
     rows = preprocess_envelopes(env, tracked_cuids=["c_events"], initial_tick=0)
     return latest_alive(rows, keys=["event_id"]).select(
         "event_id", "user_id", "event_type", F.col("value").cast("double").alias("value")
@@ -66,18 +61,6 @@ def _apply_pipeline(spark: SparkSession, sf_dir: str, replay: int = 1) -> DataFr
 )
 def cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _apply_pipeline(spark, sf_dir)
-
-
-@query(
-    "cdc_replay_idempotent",
-    oracle=_LATEST_ALIVE_SQL,
-    tags=("cdc", "idempotence"),
-    doc="At-least-once semantics (T2/T3/M4): replaying the entire change "
-        "stream twice yields the identical latest state — version dedup "
-        "absorbs duplicates, so the oracle is unchanged.",
-)
-def cdc_replay_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _apply_pipeline(spark, sf_dir, replay=2)
 
 
 @query(
@@ -270,69 +253,6 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(lid, sid).alias("event_id"),
         status.alias("status"),
         changed_cols.alias("changed_cols"),
-    )
-
-
-@query(
-    "cdc_churn_report",
-    oracle=f"""
-    WITH changes AS ({CHANGES_SQL}),
-    per_user AS (
-      SELECT user_id,
-             CAST(COUNT(*) AS BIGINT) AS n_changes,
-             CAST(SUM(CASE WHEN _ver % 2 = 0 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_inserts,
-             CAST(SUM(CASE WHEN _ver % 2 = 1 AND _deleted = 0
-                      THEN 1 ELSE 0 END) AS BIGINT) AS n_updates,
-             CAST(SUM(_deleted) AS BIGINT) AS n_deletes
-      FROM changes GROUP BY user_id
-    ),
-    tot AS (SELECT CAST(SUM(n_changes) AS BIGINT) AS t FROM per_user)
-    SELECT user_id, n_changes, n_inserts, n_updates, n_deletes,
-           round(CAST(n_changes AS DOUBLE) / t, 6) AS change_share
-    FROM per_user, tot
-    ORDER BY n_changes DESC, user_id
-    LIMIT 20
-    """,
-    tags=("cdc", "skew", "report", "decision"),
-    doc="CDC churn census — the hot-partition report an operator "
-        "consults before bucketing the merge target or salting the "
-        "apply (the reference's replicator has no visibility into "
-        "which keys churn; this makes the skew a queryable relation): "
-        "per-user change volume over the envelope stream with op "
-        "breakdown (inserts = even _ver, updates = odd _ver alive, "
-        "deletes), top-20 by volume with id tiebreak, plus each "
-        "user's share of total churn. A user_id holding a large "
-        "change_share is exactly the key that makes the per-key "
-        "merge window skew. Exact integers + one share division. "
-        "Scale: one hash aggregate on user_id (map-side combinable), "
-        "1-row total attach, TakeOrdered top-20.",
-)
-def cdc_churn_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    env = synthetic_event_envelopes(spark, sf_dir)
-    rows = preprocess_envelopes(env, tracked_cuids=["c_events"],
-                                initial_tick=0)
-    per_user = (
-        rows.groupBy("user_id")
-        .agg(
-            F.count("*").cast("long").alias("n_changes"),
-            F.sum(F.when(F.col("_ver") % 2 == 0, 1).otherwise(0))
-            .cast("long").alias("n_inserts"),
-            F.sum(F.when((F.col("_ver") % 2 == 1) & (F.col("_deleted") == 0),
-                         1).otherwise(0)).cast("long").alias("n_updates"),
-            F.sum("_deleted").cast("long").alias("n_deletes"),
-        )
-    )
-    tot = per_user.agg(F.sum("n_changes").cast("long").alias("t"))
-    return (
-        per_user.crossJoin(F.broadcast(tot))
-        .select(
-            "user_id", "n_changes", "n_inserts", "n_updates", "n_deletes",
-            F.round(F.col("n_changes").cast("double") / F.col("t"), 6)
-            .alias("change_share"),
-        )
-        .orderBy(F.desc("n_changes"), "user_id")
-        .limit(20)
     )
 
 
@@ -667,8 +587,8 @@ def cdc_watermark_sizing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _drifted_payload() -> tuple:
     """(schema_v, payload) Columns of the three-version drifted JSON
-    producer shared by the drift census, the migration plan, and the
-    applied-mapping dead-letter census (v1 adds ``session``, v2 renames
+    producer shared by the migration plan and the applied-mapping
+    dead-letter census (v1 adds ``session``, v2 renames
     ``value`` -> ``val``).
 
     Integer milli-unit render: Spark's to_json writes large/small
@@ -713,85 +633,6 @@ _DRIFT_SRC_SQL = """
              END AS payload
       FROM events
 """
-
-
-@query(
-    "cdc_schema_drift_census",
-    oracle="""
-    WITH src AS (
-      SELECT event_id % 3 AS schema_v,
-             CASE event_id % 3
-               WHEN 0 THEN to_json(struct_pack(
-                 event_id := event_id,
-                 value := CAST(FLOOR(COALESCE(value, 0.0) * 1000)
-                               AS BIGINT)))
-               WHEN 1 THEN to_json(struct_pack(
-                 event_id := event_id,
-                 value := CAST(FLOOR(COALESCE(value, 0.0) * 1000)
-                               AS BIGINT),
-                 session := COALESCE(user_id, 0)))
-               ELSE to_json(struct_pack(
-                 event_id := event_id,
-                 val := CAST(FLOOR(COALESCE(value, 0.0) * 1000)
-                             AS BIGINT),
-                 session := COALESCE(user_id, 0)))
-             END AS payload
-      FROM events
-    ),
-    ks AS (
-      SELECT schema_v, unnest(json_keys(payload)) AS json_key FROM src
-    )
-    SELECT json_key,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(COUNT(DISTINCT schema_v) AS BIGINT) AS n_versions,
-           CAST(MIN(schema_v) AS BIGINT) AS first_version,
-           CAST(MAX(schema_v) AS BIGINT) AS last_version,
-           CASE WHEN MIN(schema_v) > 0 THEN 'added'
-                WHEN MAX(schema_v) < 2 THEN 'retired'
-                ELSE 'stable' END AS status
-    FROM ks GROUP BY json_key ORDER BY json_key
-    """,
-    tags=("cdc", "schema", "drift", "json"),
-    doc="Schemaless-payload drift census over the WAL document stream: "
-        "the producing app ships three schema versions (v1 adds a "
-        "'session' field, v2 renames 'value' to 'val'), and the census "
-        "parses every document's ACTUAL JSON key set (json_object_keys — "
-        "no schema assumed, exactly the situation the reference's field "
-        "mapping DSL + dead-letter path face when the upstream Arango "
-        "collection drifts) into per-key presence spans and an "
-        "added/retired/stable verdict — the report that tells the "
-        "operator which DSL mappings to extend BEFORE the strict-cast "
-        "dead-letter queue fills. Payload fields are coalesced so a "
-        "null never drops a key on one engine only. Scale: one narrow "
-        "projection explodes to <= 4 key rows per doc and folds into a "
-        "|keys|-bounded map-side-combinable aggregate — the exchange "
-        "carries partitions x |schema keys| rows at any WAL size.",
-)
-def cdc_schema_drift_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # JSON synth + key parse is per-row-expensive; spread the single-split
-    # events scan across the session cores (guide §2.6).
-    ev = spread_small_scan(load_table(spark, "events", sf_dir), "event_id")
-    v, payload = _drifted_payload()
-    ks = ev.select(
-        v.alias("schema_v"),
-        F.explode(F.json_object_keys(payload)).alias("json_key"),
-    )
-    return (
-        ks.groupBy("json_key")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.count_distinct("schema_v").cast("long").alias("n_versions"),
-            F.min("schema_v").cast("long").alias("first_version"),
-            F.max("schema_v").cast("long").alias("last_version"),
-        )
-        .withColumn(
-            "status",
-            F.when(F.col("first_version") > 0, F.lit("added"))
-            .when(F.col("last_version") < 2, F.lit("retired"))
-            .otherwise(F.lit("stable")),
-        )
-        .orderBy("json_key")
-    )
 
 
 @query(
@@ -1198,8 +1039,11 @@ def cdc_resync_catchup_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM typed ORDER BY json_key
     """,
     tags=("cdc", "schema", "ddl", "ops"),
-    doc="Schema-migration plan — the action the drift census "
-        "(cdc_schema_drift_census) exists to trigger, mirroring the "
+    doc="Schema-migration plan over the three-version drifted JSON "
+        "producer (v1 adds 'session', v2 renames 'value' to 'val'): "
+        "parses every document's ACTUAL key set (json_object_keys, no "
+        "schema assumed) into per-key presence spans and an "
+        "added/retired/stable verdict, mirroring the "
         "reference's DDL generation duty (its schema helper builds the "
         "ReplacingMergeTree target DDL; when the upstream producer "
         "drifts, the operator must ALTER before the strict-cast "
@@ -1213,8 +1057,9 @@ def cdc_resync_catchup_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc and folds map-side-combinably into a |keys|-row plan.",
 )
 def cdc_schema_migration_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Same spread as the drift census: to_json + get_json_object per row
-    # on a one-split scan otherwise runs single-core (guide §2.6).
+    # JSON synth + key parse is per-row-expensive: to_json +
+    # get_json_object per row on a one-split scan otherwise runs
+    # single-core (guide §2.6).
     ev = spread_small_scan(load_table(spark, "events", sf_dir), "event_id")
     v, payload = _drifted_payload()
     kv = ev.select(

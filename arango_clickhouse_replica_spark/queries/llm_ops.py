@@ -604,52 +604,6 @@ def decontam_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "text_token_rarity",
-    oracle="""
-    WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-                 FROM documents),
-    vocab AS (SELECT t, COUNT(*) AS c FROM tok GROUP BY t),
-    j AS (SELECT doc_id, length(bin(c)) AS r FROM tok JOIN vocab USING (t))
-    SELECT doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_tokens,
-           CAST(SUM(r) AS BIGINT) AS rarity_sum,
-           CAST(SUM(r) AS BIGINT) / CAST(COUNT(*) AS BIGINT) AS mean_rarity
-    FROM j GROUP BY doc_id
-    """,
-    tags=("text", "quality", "lm-scoring", "llm-pipeline"),
-    doc="Unigram-LM rarity scoring (perplexity proxy): each token scores "
-        "its corpus-frequency magnitude as the INTEGER bit-length of its "
-        "count (length(bin(c)) — an exact log2 bin, so the oracle "
-        "hash-matches where float logprobs would drift in the last ulp); "
-        "a doc's mean bin is low when built from rare tokens. Scale "
-        "shape: one map-side-combinable vocab count, then a corpus-sized "
-        "equi-join on token — the classic skew join (stopwords are hot "
-        "keys): AQE skew-split handles moderate skew, and when the vocab "
-        "fits (it is << corpus) a broadcast removes the shuffle "
-        "entirely, which is what Catalyst picks here.",
-)
-def text_token_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, "documents", sf_dir)
-    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("t"))
-    vocab = tok.groupBy("t").agg(F.count("*").alias("c"))
-    rarity = F.length(F.bin("c"))
-    return (
-        tok.join(vocab, "t")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("long").alias("n_tokens"),
-            F.sum(rarity).cast("long").alias("rarity_sum"),
-        )
-        .select(
-            "doc_id",
-            "n_tokens",
-            "rarity_sum",
-            (F.col("rarity_sum") / F.col("n_tokens")).alias("mean_rarity"),
-        )
-    )
-
-
 _EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 _PHONE_RE = r"\+1-555-[0-9]{4}"
 
@@ -2066,40 +2020,6 @@ def curation_token_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "curation_source_mixing",
-    oracle="""
-    SELECT d.doc_id, d.source, g.epoch,
-           CAST(1 + (CAST(SUBSTR(d.source, 4, 10) AS BIGINT) % 3) AS BIGINT)
-             AS n_epochs
-    FROM documents d,
-         LATERAL (SELECT UNNEST(GENERATE_SERIES(
-             1, 1 + (CAST(SUBSTR(d.source, 4, 10) AS BIGINT) % 3))) AS epoch) g
-    """,
-    tags=("curation", "mixing", "generator"),
-    doc="Dataset mixing with oversampling: each document is replicated "
-        "epoch-many times (per-source integer weight, here derived from "
-        "the source id) via sequence + explode — the standard way to "
-        "express 'source A sees 3 epochs, source B sees 1' in a training "
-        "mix. A narrow generator (no shuffle, no join); downstream "
-        "shuffles see the already-mixed multiplicity.",
-)
-def curation_source_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, "documents", sf_dir)
-    n_epochs = (
-        F.lit(1) + F.substring("source", 4, 10).cast("long") % 3
-    ).cast("long")
-    return (
-        docs.select("doc_id", "source", n_epochs.alias("n_epochs"))
-        .select(
-            "doc_id", "source",
-            F.explode(F.sequence(F.lit(1).cast("long"), F.col("n_epochs")))
-            .alias("epoch"),
-            "n_epochs",
-        )
-    )
-
-
-@query(
     "curation_shard_export",
     oracle="""
     WITH t AS (
@@ -2202,86 +2122,6 @@ def embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "vmin", "vmax",
         qsum.alias("qsum"),
         F.size("e").alias("dim"),
-    )
-
-
-@query(
-    "dedup_passage_segments",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id, string_split_regex(text, '\\s+') AS words
-      FROM documents
-    ),
-    segs AS (
-      SELECT doc_id,
-             array_to_string(words[CAST(8*i + 1 AS INT):CAST(8*i + 8 AS INT)],
-                             ' ') AS seg
-      FROM w, unnest(range(0, CAST(ceil(len(words) / 8.0) AS INT))) AS u(i)
-    ),
-    df AS (
-      SELECT seg, COUNT(DISTINCT doc_id) AS ndocs FROM segs GROUP BY seg
-    )
-    SELECT s.doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_segments,
-           CAST(SUM(CASE WHEN d.ndocs >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_dup_segments,
-           CAST(SUM(CASE WHEN d.ndocs >= 2 THEN 1 ELSE 0 END) AS DOUBLE)
-               / CAST(COUNT(*) AS DOUBLE) AS dup_fraction
-    FROM segs s JOIN df d ON s.seg = d.seg
-    GROUP BY s.doc_id
-    """,
-    tags=("dedup", "passage"),
-    doc="Passage-level deduplication (the C4/Gopher shape: drop or "
-        "down-weight documents whose passages also appear elsewhere): "
-        "text splits into fixed 8-word segments, segments hash-group "
-        "across the corpus, and each document gets its duplicated-"
-        "passage fraction. Two hash shuffles (segment df, then the "
-        "segment->doc rollup), both map-side combinable; no pair join "
-        "anywhere, so cost is linear in total segments at 100 TB. The "
-        "engine-side segment key is md5(seg) so shuffle rows stay "
-        "narrow; the oracle groups the raw string — identical grouping.",
-)
-def dedup_passage_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, "documents", sf_dir)
-    segs = (
-        docs.select("doc_id", F.split("text", r"\s+").alias("words"))
-        .select(
-            "doc_id",
-            F.expr(
-                """transform(
-                      sequence(0, cast(ceil(size(words) / 8.0) as int) - 1),
-                      i -> array_join(slice(words, 8*i + 1, 8), ' '))"""
-            ).alias("segs"),
-        )
-        .select("doc_id", F.explode("segs").alias("seg_raw"))
-        .select("doc_id", F.md5("seg_raw").alias("seg"))
-    )
-    # Only DUPLICATED segments (df >= 2 — a small minority of a real
-    # corpus) need to flow back to documents: filtering before the join
-    # keeps the probe side small (broadcast-eligible far beyond the
-    # point where the full segment-count table outgrows it; the 20x
-    # probe showed that crossover as a 4.7x step), and a left join +
-    # null test preserves the exact per-doc counts.
-    dup_segs = (
-        segs.groupBy("seg")
-        .agg(F.count_distinct("doc_id").alias("ndocs"))
-        .filter(F.col("ndocs") >= 2)
-        .select("seg")
-        .withColumn("__dup", F.lit(1))
-    )
-    return (
-        segs.join(dup_segs, "seg", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_segments"),
-            F.sum(F.when(F.col("__dup").isNotNull(), 1).otherwise(0))
-            .alias("n_dup_segments"),
-        )
-        .select(
-            "doc_id", "n_segments", "n_dup_segments",
-            (F.col("n_dup_segments").cast("double")
-             / F.col("n_segments").cast("double")).alias("dup_fraction"),
-        )
     )
 
 
@@ -3106,7 +2946,7 @@ def _substring_spans_oracle(k: int = _SUBSTR_K) -> str:
         "merge into MAXIMAL duplicated spans per doc with a "
         "gaps-and-islands window (new island when the next duplicated "
         "window starts more than k tokens later). Distinct from "
-        "dedup_passage_segments (non-overlapping 8-word segments, "
+        "curation_segment_dedup_rewrite (non-overlapping 8-word segments, "
         "alignment-sensitive): sliding windows catch duplicated runs at "
         "ANY offset, the property that makes suffix-array dedup the "
         "strong form. At 100 TB: the window stream shuffles once on the "
@@ -4367,7 +4207,7 @@ def curation_dedup_survivorship_bias(spark: SparkSession, sf_dir: str) -> DataFr
         "IEEE-correctly-rounded sqrt instead of libm pow (the r10 "
         "verdict's lint-invisible fragility): the table a curator reads "
         "to pick how hard low-resource languages are boosted before "
-        "writing the epoch plan (curation_source_mixing consumes "
+        "writing the epoch plan (curation_anneal_mixture consumes "
         "weights like these). natural_share is an exact integer "
         "micro-unit ratio; sampled_share rounds each smoothed weight to "
         "a 6-dp DECIMAL before the exact order-independent per-alpha "
@@ -4943,7 +4783,7 @@ def dedup_url_canonical_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         "linear update so every lane is exact: per-token surprisal is "
         "the INTEGER log2 bin floor(log2(N/c)) computed via binary "
         "string length (no transcendental anywhere — the same "
-        "log2-bin proxy as text_token_rarity), per-source mean in "
+        "log2-bin idea as text_unigram_logprob), per-source mean in "
         "milli-units, excess vs the corpus mean, and weights "
         "proportional to max(excess,0)+baseline normalized per-mille. "
         "Documented deviation: DoReMi's exponentiated-gradient update "

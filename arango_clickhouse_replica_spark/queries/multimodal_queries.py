@@ -7,13 +7,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.multimodal import (
-    documents_as_media,
     extract_audio_features,
-    extract_features,
     extract_image_features,
     resample_wav_media,
     resize_media,
-    sample_frames,
     synth_png_media,
     synth_wav_media,
 )
@@ -47,148 +44,6 @@ def frame_sig_occupancy_cap(n_docs: int) -> int:
 
 def _cached_media(spark: SparkSession, sf_dir: str, name: str, build):
     return build().localCheckpoint(eager=True)
-
-
-@query(
-    "mm_payload_stats",
-    oracle="""
-    SELECT doc_id AS media_id,
-           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-           md5(text) AS digest,
-           source
-    FROM documents
-    """,
-    tags=("multimodal", "binary"),
-    doc="Opaque binary payload handling JVM-side: byte length and digest "
-        "of a BinaryType column (md5 over the utf-8 payload bytes matches "
-        "DuckDB's md5 over the varchar's utf-8 encoding).",
-)
-def mm_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    media = documents_as_media(load_table(spark, "documents", sf_dir))
-    return media.select(
-        "media_id",
-        F.length("payload").cast("long").alias("n_bytes"),
-        F.md5("payload").alias("digest"),
-        F.col("meta.source").alias("source"),
-    )
-
-
-@query(
-    "mm_feature_extract",
-    oracle="""
-    WITH h AS (
-      SELECT doc_id AS media_id, hex(encode(text)) AS hx,
-             CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
-      FROM documents
-    ),
-    v AS (
-      SELECT media_id, n_bytes,
-             list_transform(range(1, CAST(n_bytes AS INT) + 1),
-                 i -> strpos('0123456789ABCDEF', substr(hx, CAST(2*i - 1 AS INT), 1)) - 1) AS hi,
-             list_transform(range(1, CAST(n_bytes AS INT) + 1),
-                 i -> strpos('0123456789ABCDEF', substr(hx, CAST(2*i AS INT), 1)) - 1) AS lo
-      FROM h
-    )
-    SELECT media_id, 'application/octet-stream' AS mime, n_bytes,
-           CAST(len(list_filter(hi, x -> x BETWEEN 0 AND 3)) AS BIGINT) || ',' ||
-           CAST(len(list_filter(hi, x -> x BETWEEN 4 AND 7)) AS BIGINT) || ',' ||
-           CAST(len(list_filter(hi, x -> x BETWEEN 8 AND 11)) AS BIGINT) || ',' ||
-           CAST(len(list_filter(hi, x -> x BETWEEN 12 AND 15)) AS BIGINT)
-               AS byte_histogram,
-           printf('%08x', CAST(COALESCE(list_sum(
-               list_transform(list_zip(hi, lo), p -> 16 * p[1] + p[2])), 0)
-               % 4294967296 AS BIGINT)) AS checksum
-    FROM v
-    """,
-    tags=("multimodal", "pandas-udf"),
-    doc="Arrow-batched decode/feature-extract over mapInPandas: byte "
-        "histogram + checksum per payload (deterministic fake decode; the "
-        "real codec raises NotImplementedError where it would plug in). "
-        "Narrow stage — no shuffle; parallelism = input file splits. The "
-        "oracle replays the byte math from hex(encode(text)) in DuckDB — "
-        "so even the Python decode path is hash-checked; the histogram "
-        "serializes to a CSV string for the canonicalizer.",
-)
-def mm_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    media = documents_as_media(load_table(spark, "documents", sf_dir))
-    return extract_features(media, decode="fake").select(
-        "media_id",
-        "mime",
-        "n_bytes",
-        F.array_join("byte_histogram", ",").alias("byte_histogram"),
-        "checksum",
-    )
-
-
-@query(
-    "mm_resize_decimate",
-    oracle="""
-    WITH h AS (
-      SELECT doc_id AS media_id, hex(encode(text)) AS hx,
-             CAST(octet_length(encode(text)) AS BIGINT) AS nb
-      FROM documents
-    )
-    SELECT media_id,
-           COALESCE(array_to_string(list_transform(
-               range(0, CAST((nb + 3) // 4 AS INT)),
-               i -> substr(hx, CAST(8*i + 1 AS INT), 2)), ''), '')
-               AS payload_hex,
-           CAST((nb + 3) // 4 AS BIGINT) AS n_bytes,
-           4 AS scale_denom
-    FROM h
-    """,
-    tags=("multimodal", "pandas-udf"),
-    doc="Resize/downsample plumbing over mapInPandas (payload -> payload, "
-        "1:1): deterministic byte decimation stands in for pixel "
-        "resampling where PIL.Image.resize would plug in. Narrow stage — "
-        "no shuffle. The oracle replays the every-4th-byte decimation "
-        "from hex(encode(text)) in DuckDB; payloads compare as hex "
-        "strings (binary output columns break the canonicalizer).",
-)
-def mm_resize_decimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    media = documents_as_media(load_table(spark, "documents", sf_dir))
-    resized = resize_media(media, scale_denom=4, decode="fake")
-    return resized.select(
-        "media_id",
-        F.hex("payload").alias("payload_hex"),
-        "n_bytes",
-        F.col("scale_denom").cast("int").alias("scale_denom"),
-    )
-
-
-@query(
-    "mm_frame_sample",
-    oracle="""
-    WITH h AS (
-      SELECT doc_id AS media_id, hex(encode(text)) AS hx,
-             CAST(octet_length(encode(text)) AS BIGINT) AS nb
-      FROM documents
-    )
-    SELECT media_id,
-           CAST(fno AS INT) AS frame_no,
-           substr(hx, CAST(fno * 512 + 1 AS INT), 512) AS frame_hex,
-           CAST(length(substr(hx, CAST(fno * 512 + 1 AS INT), 512)) // 2
-                AS BIGINT) AS frame_bytes
-    FROM h, unnest(range(0, CAST((nb + 255) // 256 AS INT), 2)) AS u(fno)
-    """,
-    tags=("multimodal", "pandas-udf"),
-    doc="Frame-sampling plumbing over mapInPandas (payload -> rows, 1:N): "
-        "the payload splits into fixed 256-byte frames and every 2nd "
-        "frame is emitted as its own row — the batch shape of video "
-        "keyframe extraction, where a demuxer replaces the fixed split. "
-        "Narrow generator stage; downstream per-frame pipelines "
-        "parallelize over the exploded rows. Oracle replays the split "
-        "via substr over hex(encode(text)) with a step-2 range.",
-)
-def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    media = documents_as_media(load_table(spark, "documents", sf_dir))
-    frames = sample_frames(media, frame_size=256, every_n=2)
-    return frames.select(
-        "media_id",
-        "frame_no",
-        F.hex("frame").alias("frame_hex"),
-        "frame_bytes",
-    )
 
 
 @query(
@@ -334,7 +189,7 @@ def mm_png_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm_png_resize_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    resized = resize_media(synth_png_media(docs), scale_denom=2, decode="png")
+    resized = resize_media(synth_png_media(docs), scale_denom=2)
     feats = extract_image_features(resized)
     return feats.select(
         "media_id",
@@ -374,8 +229,8 @@ def mm_png_resize_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM blocks GROUP BY doc_id, wb, hb
     """,
     tags=("multimodal", "image", "codec", "pandas-udf"),
-    doc="REAL JPEG decode end to end (closes the last PIL-gated image "
-        "gap): deterministic piecewise-constant gray8 images are encoded "
+    doc="REAL JPEG decode end to end: deterministic piecewise-constant "
+        "gray8 images are encoded "
         "as genuine baseline JPEGs (8x8 DCT, flat quantization table, "
         "Annex-K Huffman entropy coding, byte stuffing, JFIF markers — "
         "operators/media_codecs encode_jpeg_gray8), cross Arrow as "
@@ -494,8 +349,8 @@ def mm_wav_resample_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM vals
     """,
     tags=("multimodal", "video", "codec", "pandas-udf"),
-    doc="REAL video keyframe sampling end to end (upgrades the fake "
-        "byte-split mm_frame_sample): deterministic multi-frame clips "
+    doc="REAL video keyframe sampling end to end: deterministic "
+        "multi-frame clips "
         "mux genuine baseline JPEGs into the MJPG container "
         "(magic + u32 frame index + payloads — operators/media_codecs), "
         "cross Arrow as binary, and a second mapInPandas stage DEMUXES "
@@ -2095,80 +1950,6 @@ def _aspect_case_sql() -> str:
     return f"CASE {whens} END"
 
 
-@query(
-    "mm_aspect_bucket_census",
-    oracle=f"""
-    WITH params AS (
-      SELECT doc_id,
-             CAST(8 + doc_id % 9 AS BIGINT) AS w,
-             CAST(8 + doc_id % 7 AS BIGINT) AS h
-      FROM documents
-    ),
-    am AS (
-      SELECT w, h, (w * 1000000) // h AS am FROM params
-    ),
-    assigned AS (
-      SELECT w, h, am, {_aspect_case_sql()} AS bucket FROM am
-    )
-    SELECT bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_images,
-           CAST(SUM(w * h) AS BIGINT) AS n_pixels,
-           CAST(MIN(am) AS BIGINT) AS min_aspect_micro,
-           CAST(MAX(am) AS BIGINT) AS max_aspect_micro,
-           CAST(SUM(am) AS BIGINT) // CAST(COUNT(*) AS BIGINT)
-             AS mean_aspect_micro
-    FROM assigned GROUP BY bucket ORDER BY bucket
-    """,
-    tags=("multimodal", "image", "aspect", "bucketing"),
-    doc="Aspect-ratio bucketing census — the batch-shape planning table "
-        "for resolution-bucketed image training (NovelAI/SDXL-style "
-        "aspect bucketing groups images into fixed-ratio buckets so a "
-        "batch never mixes shapes): every PNG is assigned to the "
-        "nearest of 1:1 / 4:3 / 3:4 / 16:9 / 9:16 and the census "
-        "reports per-bucket image count, pixel mass, and aspect "
-        "spread. The width/height come from a HEADER-ONLY JVM parse "
-        "(substring+hex+conv over the IHDR bytes — zero pixel decode, "
-        "zero Python in the scan), which is the only honest way to "
-        "census a 100 TB image corpus; the oracle replays the fixture "
-        "closed-form so the byte-level parse itself is hash-verified. "
-        "Assignment is exact integer arithmetic: micro-unit aspect "
-        "with engine-identical truncation, nearest-target argmin as a "
-        "LEAST + first-match CASE. Scale: one narrow binary-column "
-        "projection into a 5-key map-side aggregate.",
-)
-def mm_aspect_bucket_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import synth_png_media
-
-    docs = load_table(spark, "documents", sf_dir)
-    media = synth_png_media(docs)
-    w = F.conv(F.hex(F.expr("substring(payload, 17, 4)")), 16, 10).cast("long")
-    h = F.conv(F.hex(F.expr("substring(payload, 21, 4)")), 16, 10).cast("long")
-    dims = media.select(w.alias("w"), h.alias("h")).withColumn(
-        "am", F.expr("(w * 1000000) div h")
-    )
-    costs = [F.abs(F.col("am") - F.lit(t)) for _, t in _ASPECT_BUCKETS]
-    least = F.least(*costs)
-    expr = None
-    for (nm, t), c in zip(_ASPECT_BUCKETS, costs):
-        expr = (
-            F.when(c == least, F.lit(nm)) if expr is None
-            else expr.when(c == least, F.lit(nm))
-        )
-    assigned = dims.withColumn("bucket", expr)
-    return (
-        assigned.groupBy("bucket")
-        .agg(
-            F.count("*").cast("long").alias("n_images"),
-            F.sum(F.col("w") * F.col("h")).cast("long").alias("n_pixels"),
-            F.min("am").cast("long").alias("min_aspect_micro"),
-            F.max("am").cast("long").alias("max_aspect_micro"),
-            F.expr("sum(am) div count(*)").cast("long")
-            .alias("mean_aspect_micro"),
-        )
-        .orderBy("bucket")
-    )
-
-
 # fixed target box per aspect bucket (w, h) — the shapes a bucketed
 # image-training batch would actually allocate
 _ASPECT_TARGETS = {
@@ -2226,13 +2007,16 @@ def _aspect_target_case_sql(field: int) -> str:
     """,
     tags=("multimodal", "image", "aspect", "resize"),
     doc="Aspect-bucket resize/pad plan — the transform decision table "
-        "mm_aspect_bucket_census's assignment feeds: every image gets "
+        "for resolution-bucketed image training (NovelAI/SDXL-style "
+        "aspect bucketing: each image joins the nearest of 1:1 / 4:3 / "
+        "3:4 / 16:9 / 9:16 so a batch never mixes shapes): every image gets "
         "its bucket's fixed target box, the largest aspect-preserving "
         "integer micro-scale that fits, the resized dims, and the "
-        "padding debt; the census reports per-bucket pad mass vs "
+        "padding debt; the result reports per-bucket pad mass vs "
         "content mass (the wasted-FLOPs number that decides whether a "
-        "bucket's target box is right for the corpus). Same header-only "
-        "JVM parse as the census — planning a 100 TB resize never "
+        "bucket's target box is right for the corpus). Width and height "
+        "come from a HEADER-ONLY JVM parse (substring+hex+conv over the "
+        "IHDR bytes, zero pixel decode) — planning a 100 TB resize never "
         "touches a pixel. All-integer micro-unit arithmetic with "
         "engine-identical truncation. Scale: narrow binary projection "
         "-> 5-key map-side aggregate.",

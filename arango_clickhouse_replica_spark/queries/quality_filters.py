@@ -25,7 +25,7 @@ from .text_lm import (
     text_unigram_logprob,
 )
 
-# --- shared 8-word segmentation (same shape as dedup_passage_segments) --
+# --- shared 8-word segmentation ---------------------------------------------
 
 _SEGMENTS_SQL = """
     WITH w AS (
@@ -77,8 +77,8 @@ def _doc_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY s.doc_id
     """,
     tags=("curation", "dedup", "rewrite"),
-    doc="C4-style duplicated-passage REMOVAL: where dedup_passage_segments "
-        "only scores documents, this rewrites them — every 8-word segment "
+    doc="C4-style duplicated-passage REMOVAL: rather than only scoring "
+        "documents, this rewrites them — every 8-word segment "
         "whose exact text occurs more than once anywhere in the corpus "
         "(including within the same document) is dropped, and the "
         "surviving segments are reassembled in position order. The "

@@ -4,8 +4,9 @@ The reference delegates all relational querying to ClickHouse SQL over its
 replicated latest-state tables (pass-through executor
 ``clickhouse/connect.py:25-26``). Our engine exposes the same surface as
 Spark DataFrame/SQL over the fixture tables: filters, equi joins
-(inner/left/semi/anti), broadcast joins, aggregations, rollup/cube, window
-functions, sort/limit top-k, and set operations.
+(inner/left/semi/anti), broadcast joins, aggregations, window functions,
+sort/limit top-k, and set operations (grouping sets live in
+``relational_ext``).
 
 Scale notes (100 TB):
 
@@ -240,48 +241,6 @@ def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return customer.join(
         orders, customer.c_custkey == orders.o_custkey, "left_anti"
     ).select("c_custkey", "c_name", "c_mktsegment")
-
-
-# --- rollup / cube ----------------------------------------------------------
-
-
-@query(
-    "q_rollup_revenue_by_year_status",
-    oracle="""
-    SELECT CAST(year(o_orderdate) AS INTEGER) AS order_year, o_orderstatus,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-           COUNT(*) AS order_cnt
-    FROM orders
-    GROUP BY ROLLUP (CAST(year(o_orderdate) AS INTEGER), o_orderstatus)
-    """,
-    tags=("agg", "rollup"),
-    doc="ROLLUP over (year, status): subtotal + grand-total rows.",
-)
-def q_rollup_revenue_by_year_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, "orders", sf_dir)
-    return (
-        orders.withColumn("order_year", F.year("o_orderdate"))
-        .rollup("order_year", "o_orderstatus")
-        .agg(money_sum("o_totalprice", "revenue"), F.count("*").alias("order_cnt"))
-    )
-
-
-@query(
-    "q_cube_lineitem_flags",
-    oracle="""
-    SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-    FROM lineitem
-    GROUP BY CUBE (l_returnflag, l_linestatus)
-    """,
-    tags=("agg", "cube"),
-    doc="CUBE over (returnflag, linestatus): all grouping-set combinations.",
-)
-def q_cube_lineitem_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, "lineitem", sf_dir)
-    return li.cube("l_returnflag", "l_linestatus").agg(
-        F.count("*").alias("cnt"), money_sum("l_quantity", "sum_qty")
-    )
 
 
 # --- window functions -------------------------------------------------------

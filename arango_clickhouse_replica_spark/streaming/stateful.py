@@ -535,7 +535,8 @@ def streaming_kmv_distinct_monitor(
 def streaming_schema_drift_monitor(
     df: DataFrame, payload_col: str = "payload"
 ) -> DataFrame:
-    """Live twin of the batch ``cdc_schema_drift_census``: explodes each
+    """Live twin of the batch key-span census in
+    ``cdc_schema_migration_plan``: explodes each
     streamed document's ACTUAL JSON key set (``json_object_keys``,
     JVM-side) and emits a key the FIRST time it is ever observed on the
     stream — the alarm that a producer deploy started shipping a field

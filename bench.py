@@ -69,13 +69,10 @@ HEADLINE = [
     "q_variant_schemaless",
     "dedup_minhash_lsh_candidates",
     "dedup_simhash_fingerprints",
-    "dedup_passage_segments",
     "ann_topk_vectorized",
     "embed_quantize_int8",
     "curation_shard_export",
     "text_vocab_build",
-    "mm_payload_stats",
-    "mm_feature_extract",
     "text_unigram_logprob",
     "text_source_kl_mixture",
     "text_bigram_heavy_hitters",
@@ -160,7 +157,6 @@ HEADLINE = [
     "text_cooccurrence_pmi",
     "embed_quantization_error_report",
     "curation_shard_balance_report",
-    "cdc_churn_report",
     "curation_dedup_survivorship_bias",
     "q_interval_merge_coverage",
     "cdc_late_arrival_report",
@@ -187,10 +183,8 @@ HEADLINE = [
     "mm_audio_snr_estimate",
     "curation_anneal_mixture",
     "q_distinct_minvalue_sketch",
-    "cdc_schema_drift_census",
     "cdc_txn_boundary_report",
     "text_c4_line_cleaning",
-    "mm_aspect_bucket_census",
     "decontam_bloom_prefilter",
     "q_heavy_hitters_countmin",
     "mm_aspect_resize_plan",

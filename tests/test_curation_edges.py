@@ -30,14 +30,9 @@ EDGE_QUERIES = [
     "curation_fim_split",
     "curation_dataset_card",
     "curation_shard_export",
-    "dedup_passage_segments",
     "curation_segment_dedup_rewrite",
     "text_hashed_ngram_classifier",
     "text_vocab_build",
-    "mm_payload_stats",
-    "mm_feature_extract",
-    "mm_resize_decimate",
-    "mm_frame_sample",
 ]
 
 

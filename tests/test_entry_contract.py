@@ -154,6 +154,28 @@ def test_design_doc_counts_match_registry():
     )
 
 
+def test_bench_ledger_names_are_registered():
+    """Every bench.HEADLINE name and every query in BENCH_SELF.json must
+    be registered. A subset bench run keeps the ledger entries it did
+    not run, so a deleted query's entry would otherwise stay forever."""
+    from pathlib import Path
+
+    import bench
+    from arango_clickhouse_replica_spark.queries import QUERIES
+
+    ledger = json.loads(
+        Path(bench.__file__).with_name(bench.SELF_RECORDING).read_text()
+    )
+    assert not set(bench.HEADLINE) - set(QUERIES), (
+        f"bench.HEADLINE names unregistered queries: "
+        f"{sorted(set(bench.HEADLINE) - set(QUERIES))}"
+    )
+    assert not set(ledger["queries"]) - set(QUERIES), (
+        f"{bench.SELF_RECORDING} holds unregistered queries: "
+        f"{sorted(set(ledger['queries']) - set(QUERIES))}"
+    )
+
+
 def test_registered_builder_names_match_registry_keys():
     """The @query decorator binds to the first def BELOW it — inserting
     a helper or a new query between an existing decorator and its def

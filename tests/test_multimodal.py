@@ -1,99 +1,7 @@
-"""Multimodal plumbing tests: the Pandas-UDF feature path must agree with
-an independent JVM-native computation of the same features."""
+"""Multimodal tests: the pure-stdlib codecs round-trip byte-for-byte, and
+the Pandas-UDF decode stages agree with closed-form expectations."""
 
 import pytest
-from pyspark.sql import functions as F
-
-from arango_clickhouse_replica_spark.operators.multimodal import (
-    documents_as_media,
-    extract_features,
-)
-from arango_clickhouse_replica_spark.sources.tables import load_table
-
-
-def test_fake_decode_matches_native_computation(spark, sf_dir):
-    docs = load_table(spark, "documents", sf_dir).limit(50)
-    media = documents_as_media(docs)
-    via_udf = {r.media_id: (list(r.byte_histogram), r.checksum, r.n_bytes)
-               for r in extract_features(media, decode="fake").collect()}
-
-    # independent JVM-side computation of the same features
-    chars = F.split(F.col("text"), "")
-    bucket = lambda lo, hi: F.size(  # noqa: E731
-        F.filter(chars, lambda c: (F.ascii(c) >= lo) & (F.ascii(c) < hi))
-    ).cast("long")
-    native = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.array(bucket(0, 64), bucket(64, 128), bucket(128, 192), bucket(192, 256)).alias("hist"),
-        F.aggregate(chars, F.lit(0).cast("long"), lambda a, c: a + F.ascii(c)).alias("bytesum"),
-        F.length(F.encode("text", "utf-8")).cast("long").alias("n_bytes"),
-    )
-    for r in native.collect():
-        hist, checksum, n_bytes = via_udf[r.media_id]
-        assert hist == list(r.hist), f"histogram mismatch for {r.media_id}"
-        assert checksum == format(r.bytesum % (1 << 32), "08x")
-        assert n_bytes == r.n_bytes
-
-
-def test_image_decode_is_explicitly_stubbed(spark, sf_dir):
-    media = documents_as_media(load_table(spark, "documents", sf_dir))
-    with pytest.raises(NotImplementedError):
-        extract_features(media, decode="image")
-    with pytest.raises(ValueError):
-        extract_features(media, decode="bogus")
-
-
-def test_resize_media_decimates_payload(spark, sf_dir):
-    from arango_clickhouse_replica_spark.operators.multimodal import (
-        documents_as_media,
-        resize_media,
-    )
-    from arango_clickhouse_replica_spark.sources.tables import load_table
-
-    media = documents_as_media(load_table(spark, "documents", sf_dir)).limit(20)
-    out = resize_media(media, scale_denom=4)
-    rows = {r.media_id: r for r in out.collect()}
-    src = {r.media_id: bytes(r.payload) for r in media.collect()}
-    assert set(rows) == set(src)
-    for mid, r in rows.items():
-        assert bytes(r.payload) == src[mid][::4]
-        assert r.n_bytes == len(src[mid][::4])
-
-
-def test_resize_image_mode_is_stubbed(spark, sf_dir):
-    import pytest
-
-    from arango_clickhouse_replica_spark.operators.multimodal import (
-        documents_as_media,
-        resize_media,
-    )
-    from arango_clickhouse_replica_spark.sources.tables import load_table
-
-    media = documents_as_media(load_table(spark, "documents", sf_dir))
-    with pytest.raises(NotImplementedError):
-        resize_media(media, decode="image")
-
-
-def test_sample_frames_one_to_many(spark, sf_dir):
-    from arango_clickhouse_replica_spark.operators.multimodal import (
-        documents_as_media,
-        sample_frames,
-    )
-    from arango_clickhouse_replica_spark.sources.tables import load_table
-
-    media = documents_as_media(load_table(spark, "documents", sf_dir)).limit(10)
-    out = sample_frames(media, frame_size=64, every_n=2)
-    src = {r.media_id: bytes(r.payload) for r in media.collect()}
-    got = {}
-    for r in out.collect():
-        got.setdefault(r.media_id, []).append(r)
-    for mid, payload in src.items():
-        n_frames = (len(payload) + 63) // 64
-        expect_kept = len(range(0, n_frames, 2))
-        assert len(got[mid]) == expect_kept
-        for r in got[mid]:
-            assert r.frame_no % 2 == 0
-            assert bytes(r.frame) == payload[r.frame_no * 64:(r.frame_no + 1) * 64]
 
 
 # ---------------------------------------------------------------------------

@@ -670,10 +670,6 @@ BNLJ_ALLOWED = {
         "1-row distinct-pair total (N_pairs) broadcast-attached onto "
         "the count table (O(K*1) literal attach); the N1+ continuation "
         "tables join as hash equi-joins on the bounded vocab ids",
-    "cdc_churn_report":
-        "the only BNLJ is the 1-row churn total broadcast-attached "
-        "onto the per-user aggregate — an O(U*1) literal attach; the "
-        "census itself is one map-side-combinable hash aggregate",
     "curation_unimax_budget":
         "the only BNLJ is the 1-row budget total broadcast-attached "
         "onto the L-row per-lang table — an O(L*1) literal attach; "

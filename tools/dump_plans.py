@@ -40,19 +40,11 @@ COMMENT = {
         "the corpus); the overlap probe is a broadcast-hash join on every "
         "shingle partition — the 100 TB corpus is never shuffled for the "
         "check.",
-    "text_token_rarity":
-        "Unigram rarity: map-side-combinable vocab count, then the "
-        "token->count join — broadcast when the vocab fits (as here), AQE "
-        "skew-split otherwise; per-doc aggregate has map-side partials.",
     "text_repetition_filter":
         "Repetition filter: one bigram explode feeding two stacked "
         "map-side-combinable aggregates on (doc, bigram) then (doc); the "
         "token-stats join is doc_id-keyed (broadcast at this scale, SMJ "
         "at 100 TB — both fine, high-cardinality key).",
-    "dedup_passage_segments":
-        "Passage dedup: segments key on md5 digests so both shuffles "
-        "(segment df, segment->doc rollup) move narrow rows; no pair "
-        "join — cost linear in total segments.",
     "curation_shard_export":
         "Shard export: ONE exchange on the 64-way shard key (the "
         "writer's partitionBy), per-shard window for the deterministic "
@@ -439,11 +431,6 @@ COMMENT = {
     "curation_shard_balance_report":
         "Shard balance audit (round 8): one narrow md5-shard hash "
         "pass into an 8-key aggregate, 1-row total broadcast attach.",
-    "cdc_churn_report":
-        "CDC churn census (round 8): one map-side-combinable "
-        "user_id hash aggregate over the envelope stream, 1-row "
-        "total attach, TakeOrdered top-20 — the hot-partition report "
-        "before bucketing/salting the merge.",
     "curation_dedup_survivorship_bias":
         "Survivorship-bias audit (round 8): serves from the cached "
         "cluster hub, one left join for the cohort split, 2-key "

@@ -39,8 +39,6 @@ PROBES = [
     "dedup_ngram_jaccard_topk",
     "decontam_ngram_overlap",
     "text_repetition_filter",
-    "text_token_rarity",
-    "dedup_passage_segments",
     "text_vocab_build",
     "curation_shard_export",
     "curation_chunk_windows",
@@ -100,7 +98,6 @@ PROBES = [
     "text_cooccurrence_pmi",
     "embed_quantization_error_report",
     "curation_shard_balance_report",
-    "cdc_churn_report",
     "curation_dedup_survivorship_bias",
     "q_interval_merge_coverage",
     "cdc_late_arrival_report",
@@ -163,10 +160,8 @@ PROBES = [
     "mm_audio_snr_estimate",
     "curation_anneal_mixture",
     "q_distinct_minvalue_sketch",
-    "cdc_schema_drift_census",
     "cdc_txn_boundary_report",
     "text_c4_line_cleaning",
-    "mm_aspect_bucket_census",
     "decontam_bloom_prefilter",
     "q_heavy_hitters_countmin",
     "mm_aspect_resize_plan",
