@@ -980,27 +980,8 @@ def cdc_resync_catchup_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cdc_schema_migration_plan",
-    oracle="""
-    WITH src AS (
-      SELECT event_id % 3 AS schema_v,
-             CASE event_id % 3
-               WHEN 0 THEN to_json(struct_pack(
-                 event_id := event_id,
-                 value := CAST(FLOOR(COALESCE(value, 0.0) * 1000)
-                               AS BIGINT)))
-               WHEN 1 THEN to_json(struct_pack(
-                 event_id := event_id,
-                 value := CAST(FLOOR(COALESCE(value, 0.0) * 1000)
-                               AS BIGINT),
-                 session := COALESCE(user_id, 0)))
-               ELSE to_json(struct_pack(
-                 event_id := event_id,
-                 val := CAST(FLOOR(COALESCE(value, 0.0) * 1000)
-                             AS BIGINT),
-                 session := COALESCE(user_id, 0)))
-             END AS payload
-      FROM events
-    ),
+    oracle=f"""
+    WITH src AS ({_DRIFT_SRC_SQL}),
     kv AS (
       SELECT schema_v, u.json_key,
              json_extract_string(payload, '$.' || u.json_key) AS raw

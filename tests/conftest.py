@@ -1,4 +1,5 @@
 import os
+from contextlib import contextmanager
 
 import pytest
 
@@ -35,3 +36,28 @@ def duck(sf_dir):
         )
     yield con
     con.close()
+
+
+@contextmanager
+def jobs(spark, group):
+    """Collects the ids of the Spark jobs run inside the block."""
+    sc, ids = spark.sparkContext, []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def on_py4j_command(spark, monkeypatch, hook):
+    """Call ``hook()`` before each py4j command the driver sends from
+    here on, from any thread, until ``monkeypatch`` undoes it."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+
+    def counting(*a, **kw):
+        hook()
+        return send(*a, **kw)
+
+    monkeypatch.setattr(client, "send_command", counting)

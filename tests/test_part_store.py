@@ -8,7 +8,6 @@ import datetime as dt
 import json
 import os
 import shutil
-from contextlib import contextmanager
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -21,6 +20,7 @@ from arango_clickhouse_replica_spark.operators.cdc import latest_state
 from arango_clickhouse_replica_spark.operators.part_store import MANIFEST, PartStore
 from arango_clickhouse_replica_spark.streaming import CdcPipeline
 from arango_clickhouse_replica_spark.streaming.dedup import IncrementalLshDedup
+from tests.conftest import jobs as _jobs
 
 
 class Crash(Exception):
@@ -329,18 +329,6 @@ def test_read_of_empty_store(spark, tmp_path):
     assert GraphIndexStore(spark, str(tmp_path / "graph"))._prior_node_state(0).count() == 0
     with pytest.raises(ValueError, match="no state parts"):
         AggregateStateStore(spark, str(tmp_path / "agg"), ["k"], "v", "u").merged()
-
-
-@contextmanager
-def _jobs(spark, group):
-    """Collects the ids of the Spark jobs run inside the block."""
-    sc, ids = spark.sparkContext, []
-    sc.setJobGroup(group, group)
-    try:
-        yield ids
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_part_store_read_runs_no_job(spark, tmp_path):

@@ -26,6 +26,7 @@ from arango_clickhouse_replica_spark.sources.cdc_envelopes import (
 )
 from arango_clickhouse_replica_spark.streaming import CdcPipeline
 from arango_clickhouse_replica_spark.streaming.monitor import TickGapMonitor
+from tests.conftest import on_py4j_command
 
 _DATA = T.StructType(
     [
@@ -262,14 +263,12 @@ def _apply_batch_py4j_calls(spark, pipe, monkeypatch):
     """Count, per micro-batch, the py4j commands sent from the
     ``foreachBatch`` thread while ``pipe._apply_batch`` runs. Patch
     before ``start``: the stream binds ``_apply_batch`` then."""
-    client = spark.sparkContext._gateway._gateway_client
-    send, apply = client.send_command, pipe._apply_batch
+    apply = pipe._apply_batch
     per_batch, active = [], set()
 
-    def counting(*a, **kw):
+    def count():
         if threading.get_ident() in active:
             per_batch[-1] += 1
-        return send(*a, **kw)
 
     def counted_apply(batch, batch_id):
         per_batch.append(0)
@@ -279,7 +278,7 @@ def _apply_batch_py4j_calls(spark, pipe, monkeypatch):
         finally:
             active.discard(threading.get_ident())
 
-    monkeypatch.setattr(client, "send_command", counting)
+    on_py4j_command(spark, monkeypatch, count)
     monkeypatch.setattr(pipe, "_apply_batch", counted_apply)
     return per_batch
 
@@ -421,15 +420,8 @@ def test_gate_txn_spans_three_batches(spark, dirs):
 
 def _py4j_calls(spark, monkeypatch):
     """Count the py4j commands sent from here on."""
-    client = spark.sparkContext._gateway._gateway_client
     calls = []
-    send = client.send_command
-
-    def counting(*a, **kw):
-        calls.append(1)
-        return send(*a, **kw)
-
-    monkeypatch.setattr(client, "send_command", counting)
+    on_py4j_command(spark, monkeypatch, lambda: calls.append(1))
     return calls
 
 
