@@ -29,12 +29,21 @@ one place that knows them: it wipes all three and can load a snapshot
 as the target's base, the whole of a resync (C3) once the stream stops.
 
 Scale notes: the apply is narrow (no shuffle, no broadcast): with
-``txn_atomic`` a micro-batch runs four jobs (terminator collect, pending
-write, dead-letter write, target part) over the pinned batch, and the
-monitor's metrics ride on them via ``DataFrame.observe``; appends are
-partition-parallel; per-key ordering is irrelevant by design (M5) because
-the merge is version-based, so arbitrary source parallelism is safe — the
-reference needed 1 Kafka partition per topic for ordering; we do not.
+``txn_atomic`` a micro-batch runs four jobs over the pinned batch, and
+the monitor's metrics ride on them via ``DataFrame.observe``. The
+terminator collect runs first; then the pending generation, the dead
+letters and the target part are written at once, and the batch waits
+for all three. Their order cannot change the result: each is a pure
+function of the pinned batch and the pending generation before it, and
+each overwrites only its own ``batch_id=N`` path, so a replay rewrites
+whichever of them a crash left (the epoch-keyed idempotent sinks of
+Structured Streaming). The pending generation is one file: it holds only
+the transactions in flight at the batch cut, and as one file it adds
+one task, not one per file, to every write that reads it. Appends are
+partition-parallel; per-key ordering is irrelevant by design (M5)
+because the merge is version-based, so arbitrary source parallelism is
+safe — the reference needed 1 Kafka partition per topic for ordering; we
+do not.
 
 The Spark driver builds each batch's plan from PySpark calls, and every
 Column built costs py4j round trips. So what depends only on the
@@ -50,13 +59,16 @@ from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor, wait
+from functools import partial
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.util import inheritable_thread_target
 
 from ..operators.cdc import (
     DELETED_COL,
@@ -67,7 +79,7 @@ from ..operators.cdc import (
     preprocess_columns,
     txn_split_by,
 )
-from ..operators.part_store import PartStore
+from ..operators.part_store import PartStore, _footer_schema
 from ..schema.dsl import CompiledMapping, TableMapping, compile_mapping
 from .merge_sink import BucketedMergeSink
 from .monitor import TickGapMonitor
@@ -95,6 +107,11 @@ class _Watch:
     def count(self, name: str) -> int:
         """A watched frame's row count; 0 if the batch wrote no such frame."""
         return self.get(name)["n"] if name in self.obs else 0
+
+
+# The most writes a micro-batch runs: pending generation, dead letters,
+# target part.
+_MAX_WRITES = 3
 
 
 class _BatchProgram(NamedTuple):
@@ -146,11 +163,18 @@ class CdcPipeline:
         # Keyed by the raw batch schema. Per instance, never per module:
         # the Columns are handles in this session's JVM.
         self._programs: dict[T.StructType, _BatchProgram] = {}
+        # Runs a batch's writes at once; built on first use and kept, as
+        # in pinned-thread mode each new Python thread opens its own JVM
+        # connection.
+        self._pool: ThreadPoolExecutor | None = None
 
     # -- txn-atomic pending buffer -------------------------------------------
 
     def _pending_root(self) -> str:
         return os.path.join(self.checkpoint_dir, "txn_pending")
+
+    def _pending_path(self, batch_id: int) -> str:
+        return os.path.join(self._pending_root(), f"batch_id={batch_id}")
 
     def _pending_ids(self) -> list[int]:
         import pathlib
@@ -169,23 +193,28 @@ class CdcPipeline:
         ids = self._pending_ids()
         if not ids:
             return None
-        return self.spark.read.parquet(
-            os.path.join(self._pending_root(), f"batch_id={ids[-1]}")
-        )
+        path = self._pending_path(ids[-1])
+        # Spark wrote the generation, so its footer holds the schema:
+        # reading with it runs no schema-inference job.
+        return self.spark.read.schema(_footer_schema(path)).parquet(path)
 
-    def _txn_gate(self, batch: DataFrame, schema: T.StructType,
-                  batch_id: int, watch: _Watch) -> DataFrame:
-        """Union the pending buffer in, split on txn outcome, persist the
-        new deferred set (idempotent per-batch overwrite — a retried
-        batch rewrites the SAME generation), return the applyable rows.
+    def _txn_gate(
+        self, batch: DataFrame, schema: T.StructType, batch_id: int,
+        watch: _Watch,
+    ) -> tuple[DataFrame, DataFrame, list[int]]:
+        """Union the pending buffer in and split on txn outcome. Returns
+        the applyable rows, the new deferred set (to overwrite generation
+        ``batch_id``) and the ids of the generations before it.
 
         The batch's terminators are collected first (one narrow job: the
         pending buffer holds document rows only), so the split is two
         membership filters and every write over it is one narrow job.
-        The pending write is bounded by transactions in flight at the
-        batch cut. Generations older than batch_id-2 are pruned: a
-        foreachBatch retry only ever re-runs the latest batch, which
-        reads generation batch_id-1."""
+        The caller writes the deferred set alongside the batch's other
+        writes, in any order: it depends only on the batch and
+        generation ``prior[-1]``, which no write of this batch touches,
+        and a retried batch rewrites the SAME generation. It is one
+        partition, so one file: it holds only the transactions in flight
+        at the batch cut, and the next batch reads it in one task."""
         terminators = collect_terminators(batch)
         prior = [i for i in self._pending_ids() if i < batch_id]
         if prior:
@@ -193,23 +222,24 @@ class CdcPipeline:
             # reading with it spares a footer-inference job per batch.
             batch = batch.unionByName(
                 self.spark.read.schema(schema).parquet(
-                    os.path.join(
-                        self._pending_root(), f"batch_id={prior[-1]}"
-                    )
+                    self._pending_path(prior[-1])
                 ),
                 allowMissingColumns=True,
             )
         split = txn_split_by(batch, terminators)
-        watch(split.deferred, "n_deferred").write.mode("overwrite").parquet(
-            os.path.join(self._pending_root(), f"batch_id={batch_id}")
+        return (
+            split.applyable,
+            watch(split.deferred.coalesce(1), "n_deferred"),
+            prior,
         )
+
+    def _prune_pending(self, prior: list[int], batch_id: int) -> None:
+        """Drop generations older than batch_id-2, once generation
+        ``batch_id`` is written: a foreachBatch retry only ever re-runs
+        the latest batch, which reads generation ``prior[-1]``."""
         for i in prior[:-1]:
             if i < batch_id - 2:
-                shutil.rmtree(
-                    os.path.join(self._pending_root(), f"batch_id={i}"),
-                    ignore_errors=True,
-                )
-        return split.applyable
+                shutil.rmtree(self._pending_path(i), ignore_errors=True)
 
     # -- write path ---------------------------------------------------------
 
@@ -236,6 +266,31 @@ class CdcPipeline:
             self._programs[schema] = program
         return program
 
+    def _run_writes(self, writes: list[Callable[[], None]]) -> None:
+        """Run a batch's writes at once and wait for all of them, then
+        raise the first one's error, if any: nothing may unpersist the
+        batch under a live write, nor a write run on into a replay. The
+        pool threads take the stream thread's local properties, so every
+        write job is in the stream's job group (its ``runId``, which
+        ``stop()`` cancels)."""
+        if len(writes) == 1:
+            writes[0]()
+            return
+        if self._pool is None:
+            self._pool = ThreadPoolExecutor(
+                _MAX_WRITES, thread_name_prefix="cdc-write"
+            )
+        inherit = inheritable_thread_target(self.spark)
+        # With pinned-thread mode off PySpark returns the session itself:
+        # no Python thread then owns JVM local properties to pass on.
+        futures = [
+            self._pool.submit(w if inherit is self.spark else inherit(w))
+            for w in writes
+        ]
+        wait(futures)
+        for f in futures:
+            f.result()
+
     def _apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         # The batch feeds up to four actions (terminator collect, pending
         # write, dead-letter write, target write; or the merge sink's
@@ -261,8 +316,16 @@ class CdcPipeline:
                 # — txn markers occupy ticks too), publisher.py:140-141
                 # analog, observed on the batch's first action.
                 batch = watch(batch, "batch", monitor.metrics())
+            writes: list[Callable[[], None]] = []
+            prior = None
             if self.txn_atomic and "tid" in schema.names:
-                batch = self._txn_gate(batch, schema, batch_id, watch)
+                batch, deferred, prior = self._txn_gate(
+                    batch, schema, batch_id, watch
+                )
+                writes.append(partial(
+                    deferred.write.mode("overwrite").parquet,
+                    self._pending_path(batch_id),
+                ))
             rows = batch.filter(program.keep).select(*program.projection)
             if program.mapping is not None:
                 result = program.mapping.apply(rows, passthrough=program.passthrough)
@@ -271,17 +334,21 @@ class CdcPipeline:
                     # Idempotent per-batch path: a retried/replayed batch
                     # OVERWRITES its own dead letters instead of appending
                     # duplicates (rejected rows carry no _ver to dedup on).
-                    watch(result.rejected, "n_rejected").write.mode(
-                        "overwrite"
-                    ).parquet(
-                        os.path.join(self.dead_letter_dir, f"batch_id={batch_id}")
-                    )
+                    writes.append(partial(
+                        watch(result.rejected, "n_rejected").write.mode(
+                            "overwrite"
+                        ).parquet,
+                        os.path.join(self.dead_letter_dir, f"batch_id={batch_id}"),
+                    ))
             if self.merge_sink is not None:
                 # merge-on-WRITE: versions resolved now, reads are plain scans
-                self.merge_sink.apply_batch(rows, batch_id)
+                writes.append(partial(self.merge_sink.apply_batch, rows, batch_id))
             else:
                 # A replayed batch rewrites its own part: no duplicates.
-                self.store.write_batch(rows, batch_id)
+                writes.append(partial(self.store.write_batch, rows, batch_id))
+            self._run_writes(writes)
+            if prior is not None:
+                self._prune_pending(prior, batch_id)
             if monitor is not None:
                 # After the writes: a batch that raised records nothing.
                 m = watch.get("batch")

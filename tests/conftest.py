@@ -51,13 +51,13 @@ def jobs(spark, group):
 
 
 def on_py4j_command(spark, monkeypatch, hook):
-    """Call ``hook()`` before each py4j command the driver sends from
-    here on, from any thread, until ``monkeypatch`` undoes it."""
+    """Call ``hook(command)`` before each py4j command the driver sends
+    from here on, from any thread, until ``monkeypatch`` undoes it."""
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
 
-    def counting(*a, **kw):
-        hook()
-        return send(*a, **kw)
+    def counting(command, *a, **kw):
+        hook(command)
+        return send(command, *a, **kw)
 
     monkeypatch.setattr(client, "send_command", counting)

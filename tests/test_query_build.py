@@ -82,7 +82,7 @@ def test_query_build_py4j_budget(spark, sf_dir, monkeypatch):
     build(spark, sf_dir)
     me, calls = threading.get_ident(), []
 
-    def count():
+    def count(_command):
         if threading.get_ident() == me:
             calls.append(1)
 

@@ -5,9 +5,12 @@ pending buffer across batch cuts."""
 
 import os
 import threading
+import time
 from collections import Counter
 
 import pytest
+from py4j.protocol import MEMORY_COMMAND_NAME
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -26,7 +29,7 @@ from arango_clickhouse_replica_spark.sources.cdc_envelopes import (
 )
 from arango_clickhouse_replica_spark.streaming import CdcPipeline
 from arango_clickhouse_replica_spark.streaming.monitor import TickGapMonitor
-from tests.conftest import on_py4j_command
+from tests.conftest import jobs, on_py4j_command
 
 _DATA = T.StructType(
     [
@@ -89,7 +92,9 @@ def test_no_partial_txn_visible_across_batches(spark, dirs):
 
     alive1 = {r.event_id for r in pipe.latest_alive().collect()}
     assert alive1 == {1, 2}, "half of T2 leaked into latest_state"
-    pending = pipe.pending()
+    with jobs(spark, "pending") as ids:
+        pending = pipe.pending()
+    assert ids == [], "pending() ran a schema-inference job"
     assert pending is not None
     assert [(r.tid, r.data.event_id) for r in pending.collect()] == [
         ("T2", 3)
@@ -215,12 +220,19 @@ def _alive_ids(pipe):
     return {r.event_id for r in pipe.latest_alive().collect()}
 
 
+def _data_files(path):
+    return [n for n in os.listdir(path) if not n.startswith(("_", "."))]
+
+
 def test_micro_batch_job_budget(spark, dirs, tmp_path):
     """A txn-atomic micro-batch with a monitor, a mapping and dead letters
-    runs 4 Spark jobs: terminator collect, pending write, dead-letter
-    write, target write. The monitor's tick metrics and the rejected and
+    runs exactly 4 Spark jobs, all in the stream's job group: terminator
+    collect, then the pending, dead-letter and target writes, which run
+    on other threads. The monitor's tick metrics and the rejected and
     deferred counts are observed on those jobs, not run as jobs of their
-    own, and equal the rows each batch wrote."""
+    own, and equal the rows each batch wrote. Each pending generation is
+    one file, so no job runs more than 2 tasks (the batch's file and the
+    pending file)."""
     dead = str(tmp_path / "dead")
     mon = TickGapMonitor()
     pipe = _pipe(spark, dirs, keys=["eid"], mapping=_MAPPING,
@@ -234,7 +246,7 @@ def test_micro_batch_job_budget(spark, dirs, tmp_path):
         (14, 2300, "T2", 4, None),      # rejected once T2 commits
         (15, 2300, "T3", 5, 5.0),       # deferred
         (16, 2201, "T2", None, None),
-        (17, 2300, None, 6, 6.0),
+        (17, 2300, "T5", 6, 6.0),       # deferred, open to the end
     ], [
         (18, 2300, "T4", 7, 7.0),       # deferred
         (19, 2300, "T4", 9, 9.0),       # deferred
@@ -246,37 +258,49 @@ def test_micro_batch_job_budget(spark, dirs, tmp_path):
 
     batches = [p for p in q.recentProgress if p.numInputRows > 0]
     assert len(batches) == 3
-    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
-    assert len(jobs) / len(batches) <= 4
+    tracker = spark.sparkContext.statusTracker()
+    group = tracker.getJobIdsForGroup(str(q.runId))
+    assert len(group) == 4 * len(batches)
+    tasks = {j: sum(tracker.getStageInfo(s).numTasks
+                    for s in tracker.getJobInfo(j).stageIds) for j in group}
+    assert max(tasks.values()) <= 2, tasks
     assert [(p.batch_id, p.tick_from, p.tick_to, p.n_envelopes)
             for p in mon.progress] == [(0, 10, 13, 4), (1, 14, 17, 4), (2, 18, 21, 4)]
-    assert [(p.n_rejected, p.n_deferred) for p in mon.progress] == [(1, 1), (1, 1), (1, 2)]
+    # The last generation holds T5's row from the one before and T4's
+    # rows from the batch: one file all the same.
+    assert [(p.n_rejected, p.n_deferred) for p in mon.progress] == [(1, 1), (1, 2), (1, 3)]
     for p in mon.progress:
         assert p.n_rejected == spark.read.parquet(
             os.path.join(dead, f"batch_id={p.batch_id}")).count()
-        assert p.n_deferred == spark.read.parquet(
-            os.path.join(dirs["ckpt"], "txn_pending", f"batch_id={p.batch_id}")).count()
-    assert {r.eid for r in pipe.latest_alive().collect()} == {1, 3, 6}
+        generation = os.path.join(
+            dirs["ckpt"], "txn_pending", f"batch_id={p.batch_id}")
+        assert p.n_deferred == spark.read.parquet(generation).count()
+        assert len(_data_files(generation)) == 1
+    assert {r.eid for r in pipe.latest_alive().collect()} == {1, 3}
 
 
 def _apply_batch_py4j_calls(spark, pipe, monkeypatch):
-    """Count, per micro-batch, the py4j commands sent from the
-    ``foreachBatch`` thread while ``pipe._apply_batch`` runs. Patch
-    before ``start``: the stream binds ``_apply_batch`` then."""
+    """Count, per micro-batch, the py4j commands sent from any thread
+    while ``pipe._apply_batch`` runs: the ``foreachBatch`` thread and
+    the threads that run the batch's writes. Not counted: py4j's own
+    thread releasing Java references that Python garbage-collected
+    (``m`` commands), whenever the collector runs. Patch before
+    ``start``: the stream binds ``_apply_batch`` then."""
     apply = pipe._apply_batch
-    per_batch, active = [], set()
+    per_batch, active, lock = [], threading.Event(), threading.Lock()
 
-    def count():
-        if threading.get_ident() in active:
-            per_batch[-1] += 1
+    def count(command):
+        if active.is_set() and not command.startswith(MEMORY_COMMAND_NAME):
+            with lock:
+                per_batch[-1] += 1
 
     def counted_apply(batch, batch_id):
         per_batch.append(0)
-        active.add(threading.get_ident())
+        active.set()
         try:
             apply(batch, batch_id)
         finally:
-            active.discard(threading.get_ident())
+            active.clear()
 
     on_py4j_command(spark, monkeypatch, count)
     monkeypatch.setattr(pipe, "_apply_batch", counted_apply)
@@ -305,6 +329,81 @@ def test_micro_batch_py4j_budget(spark, dirs, tmp_path, monkeypatch):
     assert len(per_batch) == 5
     assert max(per_batch[1:]) <= 1304 // 2, per_batch
     assert len({r.eid for r in pipe.latest_alive().collect()}) == 10
+
+
+def _persisted_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_failed_write_waits_then_replays(spark, tmp_path, monkeypatch):
+    """A batch whose dead-letter write raises fails the stream only after
+    its pending and target writes have ended (the target write is made
+    slow to tell), and leaves no RDD persisted. Restarted once the obstacle is gone, the batch replays
+    from the pending generation before it, and the replica, the dead
+    letters and the pending buffer equal a run that never failed."""
+    first = [
+        (10, 2300, "T1", 1, 1.0),
+        (11, 2300, "T1", 2, None),      # rejected
+        (12, 2201, "T1", None, None),
+        (13, 2300, "T2", 3, 3.0),       # deferred into batch 1
+    ]
+    second = [
+        (14, 2300, "T2", 4, None),      # rejected once T2 commits
+        (15, 2201, "T2", None, None),
+        (16, 2300, "T3", 5, 5.0),       # deferred
+        (17, 2300, None, 6, 6.0),
+    ]
+
+    def table(name):
+        root = tmp_path / name
+        d = {k: str(root / k) for k in ("env", "target", "ckpt", "dead")}
+        pipe = _pipe(spark, d, keys=["eid"], mapping=_MAPPING,
+                     dead_letter_dir=d["dead"], tick_monitor=TickGapMonitor())
+        return d, pipe
+
+    ref_dirs, ref = table("ref")
+    _land(spark, ref_dirs["env"], first, second)
+    ref.start(ref_dirs["env"], _ENV, max_files_per_trigger=1).awaitTermination()
+
+    d, pipe = table("failing")
+    _land(spark, d["env"], first)
+    pipe.run_until_drained(d["env"], _ENV)
+    _land(spark, d["env"], second)
+    # A regular file where the dead letters' directory should be: batch
+    # 1's dead-letter write cannot create batch_id=1 under it.
+    os.rename(d["dead"], d["dead"] + ".aside")
+    open(d["dead"], "w").close()
+    written, write_batch = [], pipe.store.write_batch
+
+    def slow_write_batch(df, batch_id):
+        time.sleep(2)
+        write_batch(df, batch_id)
+        written.append(batch_id)
+
+    monkeypatch.setattr(pipe.store, "write_batch", slow_write_batch)
+    persisted = _persisted_rdds(spark)
+    q = pipe.start(d["env"], _ENV)
+    with pytest.raises(StreamingQueryException, match="ParentNotDirectory"):
+        q.awaitTermination()
+    assert written == [1]
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    for sibling in (os.path.join(d["ckpt"], "txn_pending", "batch_id=1"),
+                    os.path.join(d["target"], "batch_id=1")):
+        assert os.path.exists(os.path.join(sibling, "_SUCCESS")), sibling
+    assert _persisted_rdds(spark) == persisted
+    assert [p.batch_id for p in pipe.tick_monitor.progress] == [0]
+
+    os.remove(d["dead"])
+    os.rename(d["dead"] + ".aside", d["dead"])
+    pipe.run_until_drained(d["env"], _ENV)
+    assert [p.batch_id for p in pipe.tick_monitor.progress] == [0, 1]
+    assert Counter(pipe.latest_alive().collect()) == Counter(
+        ref.latest_alive().collect())
+    # Rejected rows carry their _errors array: compare them as text.
+    assert Counter(map(str, spark.read.parquet(d["dead"]).collect())) == Counter(
+        map(str, spark.read.parquet(ref_dirs["dead"]).collect()))
+    assert Counter(pipe.pending().collect()) == Counter(ref.pending().collect())
+    assert {r.eid for r in pipe.latest_alive().collect()} == {1, 3, 6}
 
 
 def test_mapping_compiled_once_per_schema(spark, dirs, tmp_path, monkeypatch):
@@ -421,7 +520,7 @@ def test_gate_txn_spans_three_batches(spark, dirs):
 def _py4j_calls(spark, monkeypatch):
     """Count the py4j commands sent from here on."""
     calls = []
-    on_py4j_command(spark, monkeypatch, lambda: calls.append(1))
+    on_py4j_command(spark, monkeypatch, lambda _command: calls.append(1))
     return calls
 
 
